@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs the headline queries on SPARK_GRAFT_SF_DIR and
   * prints one JSON line {"metric":...} for the driver (BENCH_r{N}.json).
   *
@@ -177,8 +175,7 @@ object Bench {
     * Stamped into the metric line at run START and END so a
     * contention-inflated artifact self-identifies (the r14/r15 driver
     * rows all adjudicated "contention" after expensive fresh-JVM
-    * re-runs) — bench_recheck consumes these fields to skip isolation
-    * when load explains a driver-vs-local gap. */
+    * re-runs). */
   private def runContext: (Double, Int) = {
     val load = try {
       java.lang.management.ManagementFactory
@@ -203,16 +200,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val (load0, njava0) = runContext
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
 
     // optional args restrict the run (isolation probes: one query,
     // first-in-JVM, no cross-query state-store pollution)
@@ -235,12 +224,8 @@ object Bench {
         // Catalyst legally eliminate work that feeds only
         // cardinality-preserving joins (q166/q170 measured a doc_id
         // scan — the r9 PLANS lesson); a write sink can't be pruned.
-        // SPARK_GRAFT_BENCH_COUNT=1 restores the old method for
-        // parity runs.
         val ok = try {
-          if (sys.env.contains("SPARK_GRAFT_BENCH_COUNT"))
-            d.fn(spark, sfDir).count()
-          else d.fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+          d.fn(spark, sfDir).write.format("noop").mode("overwrite").save()
           true
         }
         catch { case e: Throwable =>

@@ -89,10 +89,7 @@ object AnnIndex {
     // to feed both consumers — model/postings consistency by
     // construction, as the pre-r17 read-back gave.
     def pinned(df: DataFrame): DataFrame =
-      df.queryExecution.analyzed match {
-        case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => df
-        case _ => df.localCheckpoint()
-      }
+      if (Similarity.isLocalModel(df)) df else df.localCheckpoint()
     val cent = pinned(Similarity.kmeansCentroids(fitOn, k, updates))
     val cb1 = pinned(
       Similarity.pqModelP(Similarity.edOf(fitOn), m, ks, subDim)._2)

@@ -305,7 +305,7 @@ object CorpusStats extends QueryModule {
     // (sizes × sizes, tiny) broadcasts; pairs sharing nothing emit
     // inter = 0. AUTO-ROUTED at scale (r14): the r13 1000× probe
     // measured this exact path 8–14×/decade superlinear (the gram
-    // self-join's spill), so past `overlapRouteChars` total corpus
+    // self-join's spill), so past `routeMaxChars` total corpus
     // chars sourceOverlap WARN-logs and serves the q206 MinHash
     // estimate in this same schema — see sourceOverlapRouted. Every
     // sweep SF stays on the exact oracle-checked path. -----
@@ -517,18 +517,6 @@ object CorpusStats extends QueryModule {
 
   // ---- q205 auto-route machinery (r13 verdict item 3) ----------------
 
-  /** q205's scale dial (the bm25MaxDf env pattern — a probe override
-    * is a loud named knob, never a silent hash change): corpora whose
-    * total char volume exceeds this route the exact pairwise overlap
-    * to the MinHash sketch estimator. The default keeps every sweep
-    * SF and the 100× probe tier exact (sf0.1 is ~1.5e6 chars, 100×
-    * ~1.5e7) and routes at the 1000× tier (~1.5e8), where the exact
-    * path's gram self-join was the registry's last documented
-    * superlinear family (8–14×/decade, 169.5 s at 1000× — r13). */
-  private val overlapRouteChars: Long =
-    sys.env.get("GRAFT_OVERLAP_ROUTE_CHARS").map(_.toLong)
-      .getOrElse(50000000L)
-
   /** The distinct per-source 3-gram-hash table plus the size and
     * pair-matrix frames both overlap paths share: ONE corpus pass +
     * one vocab-shuffle distinct (linear); everything pair-shaped
@@ -622,10 +610,14 @@ object CorpusStats extends QueryModule {
     * SF); above it the engine WARN-logs and serves the MinHash
     * estimate in the same schema — a user calling exact overlap at
     * 100 TB gets the linear sketch instead of the quadratic join.
+    * The default keeps every sweep SF and the 100× tier exact (sf0.1
+    * is ~1.5e6 chars, 100× ~1.5e7) and routes at the 1000× tier
+    * (~1.5e8), where the exact path's gram self-join was 8–14×/decade
+    * superlinear (169.5 s at 1000× — r13).
     * The volume probe is one map-side-combined sum over the n_chars
     * column — never a gram materialization. */
   private[pipeline] def sourceOverlap(docs: DataFrame,
-      routeMaxChars: Long = overlapRouteChars): DataFrame = {
+      routeMaxChars: Long = 50000000L): DataFrame = {
     val (g, pr) = overlapFrames(docs)
     val totChars = docs.agg(coalesce(sum(col("n_chars")), lit(0L)))
       .collect()(0).getLong(0)

@@ -454,10 +454,10 @@ object LangModel extends QueryModule {
             * (coalesce(col("np"), lit(0L)).cast("double") / col("ntot")))
       .when(col("np").isNotNull, col("np").cast("double") / col("ntot"))
       .otherwise(lit(1.0) / col("ntot"))
-    hb.join(maybeBroadcast(cb.select(col("w1"), col("w2"), col("c"))),
+    hb.join(cb.select(col("w1"), col("w2"), col("c")),
         Seq("w1", "w2"), "left")
-      .join(maybeBroadcast(cx), Seq("w1"), "left")
-      .join(maybeBroadcast(ctu), Seq("w2"), "left")
+      .join(cx, Seq("w1"), "left")
+      .join(ctu, Seq("w2"), "left")
       .crossJoin(broadcast(nt))
       .select(col("doc_id"),
         (lit(1000000.0) * log(greatest(p, lit(1e-9)))).as("xk"),
@@ -500,52 +500,21 @@ object LangModel extends QueryModule {
     if (withDoc) base else base.drop("doc_id")
   }
 
-  /** The KN-family vocab-cap dial (r13 verdict item 6; the bm25MaxDf
-    * loud-knob pattern — the driver never sets it): bigrams with
-    * count < GRAFT_KN_MINCOUNT are dropped from the model table
-    * BEFORE every marginal and every scoring join. Standard LM
-    * practice (KenLM prunes singletons by default at scale), and the
-    * bound that matters in the vocab~N adversarial regime: replica
-    * suffixing makes almost every bigram a singleton, so the count
-    * table grows CORPUS-sized (q222's replica-1000× 336 s wall — the
-    * shared q214/q215/q220/q222 bound), while minCount=2 collapses it
-    * to the shared-structure core and the scoring joins' build side
-    * becomes vocab-bounded again. Semantics delta (documented,
-    * spec-pinned): pruned bigrams score through the backoff path
-    * (continuation / floor), exactly as unseen bigrams always did;
-    * marginals are those OF THE PRUNED MODEL. Default 1 = identity —
-    * the oracle-checked registry path is bit-for-bit the unpruned
-    * model (LangModelSpec pins it). */
-  private val knMinCount: Long =
-    sys.env.get("GRAFT_KN_MINCOUNT").map(_.toLong).getOrElse(1L)
-
-  /** The ABSOLUTE model-size cap (GRAFT_KN_MAXTYPES): keep only the
-    * top-K bigram types by (count, w1, w2) — a deterministic total
-    * order. minCount alone cannot restore vocab-boundedness in the
-    * replica regime (suffixing manufactures vocab-proportional TYPES
-    * at every count level: pruned-x1000 measured 249 s vs 336 s off —
-    * a real cut, not a different complexity class), whereas a hard K
-    * bounds the model and every scoring-join build side at ANY corpus
-    * size — so with the cap set, the scorer broadcast-hints the model
-    * and its marginals (K rows each) and the probe side never
-    * shuffles. Default MaxValue = identity, oracle-checked. */
-  private val knMaxTypes: Long =
-    sys.env.get("GRAFT_KN_MAXTYPES").map(_.toLong).getOrElse(Long.MaxValue)
-
-  /** True when a dial bounds the model table enough to broadcast the
-    * scoring builds. */
-  private def knModelBounded: Boolean = knMaxTypes != Long.MaxValue
-
-  private def maybeBroadcast(df: DataFrame): DataFrame =
-    if (knModelBounded) broadcast(df) else df
-
   /** The bigram-count table — THE one corpus pass. localCheckpointed
     * because every smoothing marginal below derives from it: without
     * the truncation each marginal re-runs the corpus explode (the r5
-    * Pregel-lineage lesson; caught by PlanSpec showing 4 scans). */
+    * Pregel-lineage lesson; caught by PlanSpec showing 4 scans).
+    *
+    * The vocab caps are off by default (the oracle-checked model):
+    * `minCount` drops bigrams with fewer occurrences (KenLM-style
+    * singleton pruning; pruned bigrams score through the backoff path,
+    * exactly as unseen ones do, and marginals are those of the pruned
+    * model); `maxTypes` keeps only the top types by (count, w1, w2),
+    * a deterministic total order that bounds the table at any corpus
+    * size. */
   private[pipeline] def bigramCounts(b: DataFrame,
-      minCount: Long = knMinCount,
-      maxTypes: Long = knMaxTypes): DataFrame = {
+      minCount: Long = 1L,
+      maxTypes: Long = Long.MaxValue): DataFrame = {
     val c = b.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c"))
     val pruned = if (minCount <= 1L) c else c.filter(col("c") >= minCount)
     val capped =
@@ -710,10 +679,10 @@ object LangModel extends QueryModule {
             * (coalesce(col("np"), lit(0L)).cast("double") / col("ntot")))
       .when(col("np").isNotNull, col("np").cast("double") / col("ntot"))
       .otherwise(lit(1.0) / col("ntot"))
-    hb.join(maybeBroadcast(cb.select(col("w1"), col("w2"), col("c"))),
+    hb.join(cb.select(col("w1"), col("w2"), col("c")),
         Seq("w1", "w2"), "left")
-      .join(maybeBroadcast(cx), Seq("w1"), "left")
-      .join(maybeBroadcast(ct), Seq("w2"), "left")
+      .join(cx, Seq("w1"), "left")
+      .join(ct, Seq("w2"), "left")
       .crossJoin(broadcast(nt))
       .select(col("doc_id"),
         (lit(1000000.0) * log(greatest(p, lit(1e-9)))).as("x"))

@@ -729,8 +729,8 @@ object Multimodal extends QueryModule {
     //     clone groups per side first — EXACTLY output-preserving
     //     (clones share landmark sets; the per-side min-id rep wins
     //     every vote tie) — and a corpus whose predicted vote rows
-    //     Σ df_q·df_c exceed the budget (default 5e7, env
-    //     GRAFT_ALIGN_VOTE_BUDGET) drops the hottest keys from BOTH
+    //     Σ df_q·df_c exceed the budget (mediaAlign's voteBudget,
+    //     default 5e7) drops the hottest keys from BOTH
     //     sides with a WARN (rare-landmark voting — the q231 maxDf /
     //     q177 maxDfFrac posture). Neither guard fires at the oracle
     //     gate SFs (organic corpora: dup ratio 1.0, votes ≪ budget);
@@ -924,10 +924,15 @@ object Multimodal extends QueryModule {
     * pairs distinct signatures and expands ([[phashNearDup]]), the
     * text side collapses exact payload clones and expands
     * ([[textPairsClone]]). Neither fires on organic gate/decade
-    * corpora; both are pinned route ≡ unrouted in MultimodalSpec. */
+    * corpora; both are pinned route ≡ unrouted in MultimodalSpec.
+    *
+    * Output-asymmetry rails: `asymMediaPairs` is the predicted media
+    * pair count past which the pair-keyed full outer must not shuffle
+    * the media list, `asymTextRows` the text-list row cap for the
+    * broadcast assembly. */
   private[pipeline] def crossModalPairs(docs: DataFrame,
-      asymMediaPairs: Long = xmodalAsymMediaPairs,
-      asymTextRows: Long = xmodalAsymTextRows): DataFrame = {
+      asymMediaPairs: Long = 100000000L,
+      asymTextRows: Long = 5000000L): DataFrame = {
     val text = textPairsClone(docs)
       .select(col("doc_a"), col("doc_b"), col("jacc"))
     val media = phashNearDup(docs)
@@ -1022,17 +1027,6 @@ object Multimodal extends QueryModule {
       }
     }
   }
-
-  /** q239's output-asymmetry rails (see [[crossModalPairs]]): the
-    * predicted media pair count past which the pair-keyed full outer
-    * must not shuffle the media list, and the text-list row cap for
-    * the broadcast assembly. */
-  private val xmodalAsymMediaPairs: Long =
-    sys.env.get("GRAFT_XMODAL_ASYM_MEDIA").map(_.toLong)
-      .getOrElse(100000000L)
-  private val xmodalAsymTextRows: Long =
-    sys.env.get("GRAFT_XMODAL_ASYM_TEXT").map(_.toLong)
-      .getOrElse(5000000L)
 
   /** The text-side pair list with the EXACT payload-clone collapse
     * route (q239/q245's dedup-first posture in engine, r16 verdict
@@ -1305,18 +1299,6 @@ object Multimodal extends QueryModule {
           "ELSE 100 * sum(n_silent) div sum(n_frames) END").as("silent_pct"))
   }
 
-  /** q235's vote-budget dial: predicted vote-join rows (Σ over keys
-    * of df_query·df_corpus) above this trigger rare-landmark voting —
-    * the hottest keys drop from BOTH join sides with a WARN. The
-    * default keeps every oracle gate SF and the organic decade tiers
-    * exact (sf0.1 and z100 predicted votes sit well under it after
-    * the injective-key fix); corpora that SATURATE the key space (the
-    * r15 div-512 regime: 78 keys → 5.1e9 votes) hit the budget
-    * instead of the 21 GB spill. */
-  private val alignVoteBudget: Long =
-    sys.env.get("GRAFT_ALIGN_VOTE_BUDGET").map(_.toLong)
-      .getOrElse(50000000L)
-
   /** (doc_id, en) → distinct (doc_id, key, af) landmark rows, built
     * ARRAY-LOCALLY: peaks filter out of the energy array in place
     * (index-lambda transform — no explode, no per-doc window, no
@@ -1427,14 +1409,14 @@ object Multimodal extends QueryModule {
               println(s"[align-budget] WARN budget $voteBudget is below " +
                 "the coolest landmark key's own vote volume — flooring " +
                 "to that single key so the alignment table stays " +
-                "non-degenerate; raise GRAFT_ALIGN_VOTE_BUDGET")
+                "non-degenerate; raise voteBudget")
               keyDf.agg(min(struct(col("v"), col("key"))).as("m"))
                 .select(col("m.key").as("key"))
             } else keep0
           println(s"[align-budget] WARN predicted vote rows $pred > " +
             s"budget $voteBudget — dropping the hottest landmark keys " +
             "from BOTH join sides (rare-landmark voting); raise " +
-            "GRAFT_ALIGN_VOTE_BUDGET to force the exact join")
+            "voteBudget to force the exact join")
           lms.join(keep, "key")
         }
     }
@@ -1470,12 +1452,17 @@ object Multimodal extends QueryModule {
     *      and the (votes DESC, match_id ASC) tie-break always selects
     *      the representative (q234's cluster-reduction precedent,
     *      MultimodalSpec-pinned);
-    *   2. saturated key spaces refuse votes past [[alignVoteBudget]]
-    *      (see [[alignVotes]] — loud, deterministic, both sides).
+    *   2. saturated key spaces refuse votes past `voteBudget`
+    *      predicted vote-join rows (Σ over keys of df_query·df_corpus;
+    *      see [[alignVotes]] — loud, deterministic, both sides). The
+    *      default keeps every oracle gate SF and the organic decade
+    *      tiers exact; corpora that SATURATE the key space (the r15
+    *      div-512 regime: 78 keys → 5.1e9 votes) hit the budget
+    *      instead of the 21 GB spill.
     * Neither fires on organic gate/decade corpora. */
   private[pipeline] def mediaAlign(docs: DataFrame,
       maxKeyDf: Option[Long] = None,
-      voteBudget: Long = alignVoteBudget): DataFrame = {
+      voteBudget: Long = 50000000L): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val en = docs.select(col("doc_id"),
       graft.functions.MediaSig.frame_energies(

@@ -415,8 +415,7 @@ object Quality extends QueryModule {
       // Train AND serve share ONE checkpointed feature frame: the r13
       // refactor briefly served off a fresh logregFeats scan and the
       // mechanized bench recheck caught the doubled featurization
-      // (3.27 → 7.53 s isolated, same data — bench_recheck.py's first
-      // real catch)
+      // (3.27 → 7.53 s isolated, same data)
       val feats = logregFeats(graft.Tables.spread(Tables.t(s, dir, "documents"), "doc_id"))
         .localCheckpoint()
       val (b, w, m, sd) = gateModelFromFeats(feats)

@@ -123,7 +123,7 @@ object Similarity extends QueryModule {
     * discarded it, and re-executed the same lineage inside the
     * aggregate fallback. A non-local frame now routes straight to the
     * aggregate form (values identical — the AnnIngestSpec pin). */
-  private def isLocalModel(cent: DataFrame): Boolean =
+  private[pipeline] def isLocalModel(cent: DataFrame): Boolean =
     cent.queryExecution.analyzed.isInstanceOf[
       org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
 
@@ -152,13 +152,20 @@ object Similarity extends QueryModule {
     * crossJoin + groupBy(vec_id) form — one full-corpus exchange per
     * call — remains as the large-k/empty fallback and is
     * output-identical by the AnnIngestSpec argument. */
-  private def assignFlat(ed: DataFrame, cent: DataFrame): DataFrame = {
-    if (!isLocalModel(cent)) return assignFlatAgg(ed, cent)
-    val arr = collectCent(cent)
-    if (arr.nonEmpty && arr.length <= maxLitCentroids)
-      ed.select(col("vec_id"), argminLit(arr, col("ev")).as("cluster"))
-    else assignFlatAgg(ed, cent)
-  }
+  private def assignFlat(ed: DataFrame, cent: DataFrame): DataFrame =
+    litArgmin(cent, col("ev")).fold(assignFlatAgg(ed, cent))(c =>
+      ed.select(col("vec_id"), c.as("cluster")))
+
+  /** The literal-vs-aggregate route of every flat assignment: the
+    * per-row literal argmin over the vector column `v` when `cent` is
+    * a driver-local model of 1 to [[maxLitCentroids]] centroids, else
+    * None — non-local, empty and over-ceiling models take the
+    * aggregate form ([[assignFlatAgg]]). */
+  private def litArgmin(cent: DataFrame, v: Column): Option[Column] =
+    if (!isLocalModel(cent)) None
+    else Some(collectCent(cent))
+      .filter(arr => arr.nonEmpty && arr.length <= maxLitCentroids)
+      .map(argminLit(_, v))
 
   private def assignFlatAgg(ed: DataFrame, cent: DataFrame): DataFrame =
     ed.crossJoin(broadcast(cent))
@@ -254,22 +261,23 @@ object Similarity extends QueryModule {
   private[pipeline] def assignWith(e: DataFrame, cent: DataFrame): DataFrame =
     assignFlat(edOf(e), cent)
 
-  /** `e` (vec_id, embedding, …) with its nearest-centroid `cluster`
-    * attached AS A PROJECTION (r17 OPT, guide §2.4): callers that
-    * need the assignment next to the payload previously joined the
-    * (vec_id, cluster) frame back on vec_id — an N-row exchange the
-    * literal argmin makes unnecessary. Output-identical to
-    * assignFlat + join (the AnnIngestSpec argument); the aggregate
-    * form + join remains as the over-ceiling fallback. */
-  private def withClusterLit(e: DataFrame, cent: DataFrame): DataFrame = {
-    if (!isLocalModel(cent))
-      return e.join(assignFlatAgg(edOf(e), cent), "vec_id")
-    val arr = collectCent(cent)
-    if (arr.nonEmpty && arr.length <= maxLitCentroids)
-      e.withColumn("cluster",
-        argminLit(arr, expr("transform(embedding, x -> CAST(x AS DOUBLE))")))
-    else e.join(assignFlatAgg(edOf(e), cent), "vec_id")
-  }
+  /** `df` (vec_id, …) with the nearest-centroid `cluster` of its
+    * vector column `v` (double array) attached AS A PROJECTION (r17
+    * OPT, guide §2.4): callers that need the assignment next to the
+    * payload previously joined the (vec_id, cluster) frame back on
+    * vec_id — an N-row exchange the literal argmin makes unnecessary.
+    * Output-identical to assignFlat + join (the AnnIngestSpec
+    * argument); the aggregate form + join remains as the fallback
+    * ([[litArgmin]]). */
+  private def withClusterFlat(df: DataFrame, cent: DataFrame,
+      v: Column): DataFrame =
+    litArgmin(cent, v).fold(df.join(
+        assignFlatAgg(df.select(col("vec_id"), v.as("ev")), cent), "vec_id"))(
+      df.withColumn("cluster", _))
+
+  /** [[withClusterFlat]] over an (vec_id, embedding, …) frame. */
+  private def withClusterLit(e: DataFrame, cent: DataFrame): DataFrame =
+    withClusterFlat(e, cent, expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
 
   /** Two-level nearest-centroid assignment — the escape hatch for the
     * flat pass's Θ(N·k) FLOP cost when k itself scales with the
@@ -293,8 +301,16 @@ object Similarity extends QueryModule {
     * TwoLevelAssignSpec pins nProbe=1 exactness on separated data,
     * monotonicity + the nProbe=superK equality on the real table.
     * Same 6-dp/lowest-id determinism contract as the flat pass, so
-    * results are reproducible under any partitioning. */
-  private[graft] def assignTwoLevel(s: SparkSession, vecs: DataFrame,
+    * results are reproducible under any partitioning.
+    *
+    * Row contract: the assignment is per ROW, not per vec_id — one
+    * (vec_id, cluster) row per input row (minus rows whose probed
+    * supers are all memberless, see [[withClusterTwoLevel]]). Rows
+    * sharing a vec_id are neither merged nor deduplicated, so callers
+    * must pass unique vec_ids: every consumer keys the result by
+    * vec_id (pair joins, keep-lists), where a duplicate would fan out.
+    * TwoLevelAssignSpec pins the duplicate case. */
+  private[pipeline] def assignTwoLevel(s: SparkSession, vecs: DataFrame,
       cent: DataFrame, superK: Int, iters: Int = 2, nProbe: Int = 1): DataFrame =
     assignTwoLevelAll(s, vecs, cent, superK, iters, nProbe)
       .select(col("vec_id"), col("cluster"))
@@ -366,7 +382,10 @@ object Similarity extends QueryModule {
 
   /** [[assignTwoLevel]] keeping the input columns: `cluster` attaches
     * to the vector row as a projection, so large-k callers skip the
-    * assignment join-back on vec_id entirely (r18, verdict item 8). */
+    * assignment join-back on vec_id entirely (r18, verdict item 8).
+    * Same row contract: one output row per input row, except that a
+    * row whose probed supers are all memberless is dropped; vec_ids
+    * must be unique, since duplicates pass through as separate rows. */
   private[pipeline] def withClusterTwoLevel(s: SparkSession,
       vecs: DataFrame, cent: DataFrame, superK: Int, iters: Int = 2,
       nProbe: Int = 1): DataFrame =
@@ -471,7 +490,7 @@ object Similarity extends QueryModule {
     // r17 OPT: cluster attaches to ed as a projection; the residual
     // subtraction then needs only the broadcast centroid join — the
     // former assignment join back on vec_id (N-row exchange) is gone
-    val edc = withClusterLitEd(ed, cent)
+    val edc = withClusterFlat(ed, cent, col("ev"))
     // r18 OPT (guide §2.4): the cluster rides the residual projection
     // and the code projection (pqModelP passThrough) — the pre-r18
     // codes ⋈ assigned join on vec_id, an (N·m)-row exchange, is gone
@@ -580,7 +599,7 @@ object Similarity extends QueryModule {
     // and only approximately (boundary vectors may route to a
     // non-probed super — the documented IVF recall trade, monotone
     // in nProbe). superK = 0 forces the exact flat pass (the oracle
-    // pin — q167 passes it explicitly unless probe knobs are set);
+    // pin — q167 passes it explicitly);
     // the DEFAULT (-1) auto-routes on the measured threshold, so a
     // caller at k = 2000 gets the 8× assignment win without reading
     // the probe tables. Isotropic-embedding corpora should force
@@ -725,10 +744,8 @@ object Similarity extends QueryModule {
   /** DuckDB replay of the deterministic Lloyd's fit in
     * [[kmeansClusters]]: init = the first k vectors, `updates`
     * update iterations, 6-dp rounding each step, ties to lowest
-    * cluster id. Generates the assign/update CTE chain for ANY
-    * (k, updates) — r9 advice: q167's Spark side reads its knobs
-    * from the environment, so the oracle must interpolate the SAME
-    * values or an env override silently breaks the hash check. Ends
+    * cluster id. Generates the assign/update CTE chain for the
+    * same (k, updates) the Spark side fits with. Ends
     * in `a{updates+1}(vec_id, cluster)` ([[lloydFin]]) — the exact
     * assignment the Spark side computes. Shared by q135 (IVF
     * routing), q167 (SemDeDup), q173 (keep-atypical). */
@@ -809,28 +826,6 @@ object Similarity extends QueryModule {
   private val duckPqRawSrc: String =
     """(SELECT vec_id, unnest(embedding)::DOUBLE AS x,
       |                unnest(range(len(embedding))) AS i FROM e)""".stripMargin
-
-  /** q167's deployment knobs, read ONCE and shared by the Spark body
-    * AND the oracle string, so an env override during a correctness
-    * sweep changes both sides identically instead of silently
-    * diverging (r9 advice item). k ≈ N/targetClusterSize keeps the
-    * pair space linear; updates=0 is the fit-on-sample-then-assign
-    * 100 TB shape. The driver never sets these. */
-  private val semK: Int =
-    sys.env.get("GRAFT_SEMDEDUP_K").map(_.toInt).getOrElse(8)
-  private val semUpdates: Int =
-    sys.env.get("GRAFT_SEMDEDUP_UPDATES").map(_.toInt).getOrElse(2)
-
-  /** superK >= 2 switches q167 to the approximate two-level
-    * assignment ([[assignTwoLevel]]) — probe-only: there is no SQL
-    * replay of approximate routing, so when this is set the oracle
-    * string below becomes an INTENTIONALLY FAILING statement naming
-    * the knob, making a correctness sweep with the override loud
-    * instead of a bare hash mismatch. */
-  private val semSuperK: Int =
-    sys.env.get("GRAFT_SEMDEDUP_SUPERK").map(_.toInt).getOrElse(0)
-  private val semNProbe: Int =
-    sys.env.get("GRAFT_SEMDEDUP_NPROBE").map(_.toInt).getOrElse(1)
 
   /** Product-quantization ANN (Jégou/Douze/Schmid 2011, "Product
     * quantization for nearest neighbor search" — public): compress
@@ -1034,7 +1029,7 @@ object Similarity extends QueryModule {
     // identical; the over-ceiling fallback keeps the join.
     val cent = kmeansCentroids(e, 8, 2)
     val ed = edOf(e)
-    val edc = withClusterLitEd(ed, cent)
+    val edc = withClusterFlat(ed, cent, col("ev"))
     val (svs, cb1, codes) = pqModelP(edc, pqM, pqKs, pqSubDim,
       passThrough = Seq("cluster"))
     val lt = pqLookup(svs, cb1)
@@ -1044,19 +1039,6 @@ object Similarity extends QueryModule {
     adcTop3(codes.join(broadcast(lt), Seq("j", "code"))
       .filter(col("cluster") === col("q_cluster")
         && col("vec_id") =!= col("query_id")))
-  }
-
-  /** [[withClusterLit]] for an already-`ev`-projected frame: attaches
-    * the nearest-centroid `cluster` as a literal-argmin projection,
-    * falling back to the aggregate assignment join for non-local or
-    * over-ceiling models (same gating as [[assignFlat]]). */
-  private def withClusterLitEd(ed: DataFrame, cent: DataFrame): DataFrame = {
-    if (!isLocalModel(cent))
-      return ed.join(assignFlatAgg(ed, cent), "vec_id")
-    val arr = collectCent(cent)
-    if (arr.nonEmpty && arr.length <= maxLitCentroids)
-      ed.withColumn("cluster", argminLit(arr, col("ev")))
-    else ed.join(assignFlatAgg(ed, cent), "vec_id")
   }
 
   override def queries: Seq[QueryDef] = Seq(
@@ -1232,19 +1214,11 @@ object Similarity extends QueryModule {
     // fit, so cluster assignment, pair scores, and the keep-list all
     // hash-match. -----
     q("q167_semdedup",
-      // loud oracle whenever the BODY will route approximate: explicit
-      // superK >= 2, or auto-routing (-1) with k at/over the measured
-      // threshold (r12 — the -1 escape previously left the exact
-      // oracle standing against an approximate result)
-      if (semSuperK >= 2 || (semSuperK < 0 && semK >= twoLevelThreshold))
-        "SELECT error('GRAFT_SEMDEDUP_SUPERK is set: two-level assignment " +
-          "is approximate and has no SQL oracle — unset it for correctness sweeps')"
-      else
-      s"""WITH ${duckLloydCtes(semK, semUpdates)},
+      s"""WITH ${duckLloydCtes()},
         |pairs AS (
         |  SELECT a.vec_id AS a_id, b.vec_id AS b_id,
         |    round(sum(fa.x * fb.x) / (na.nrm * nb.nrm), 6) AS score
-        |  FROM ${lloydFin(semUpdates)} a JOIN ${lloydFin(semUpdates)} b
+        |  FROM ${lloydFin()} a JOIN ${lloydFin()} b
         |    ON b.cluster = a.cluster AND a.vec_id < b.vec_id
         |  JOIN flat fa ON fa.vec_id = a.vec_id
         |  JOIN flat fb ON fb.vec_id = b.vec_id AND fb.i = fa.i
@@ -1255,14 +1229,10 @@ object Similarity extends QueryModule {
         |         WHERE score >= 0.25 GROUP BY b_id)
         |SELECT a.vec_id, CAST(a.cluster AS INTEGER) AS cluster, d.dup_of,
         |  CAST(CASE WHEN d.dup_of IS NULL THEN 1 ELSE 0 END AS INTEGER) AS kept
-        |FROM ${lloydFin(semUpdates)} a LEFT JOIN dups d ON d.b_id = a.vec_id
+        |FROM ${lloydFin()} a LEFT JOIN dups d ON d.b_id = a.vec_id
         |ORDER BY a.vec_id""") { (s, dir) =>
-      // semK/semUpdates feed the oracle string above AND this body,
-      // so scale-probe env overrides keep the two sides in lockstep;
-      // semSuperK switches to the probe-only two-level assignment
-      // (oracle replaced by a loud failure when it is set)
-      semDedup(s, dir, k = semK, updates = semUpdates,
-        superK = semSuperK, nProbe = semNProbe)
+      // superK = 0: the exact flat assignment the oracle replays
+      semDedup(s, dir, superK = 0)
     },
 
     // ----- the PAPER's keep strategy: duplicate groups keep their
@@ -1411,13 +1381,11 @@ object Similarity extends QueryModule {
         |           GROUP BY c.a_id, c.b_id, na.nrm, nb.nrm)
         |SELECT b_id AS vec_id, min(a_id) AS dup_of FROM scored
         |WHERE score >= 0.25 GROUP BY b_id ORDER BY vec_id""") { (s, dir) =>
-      // geometry is the operator's deployment knob (nlist-style:
+      // geometry is the operator's deployment parameter (nlist-style:
       // buckets = signTables × 2^signBits must grow ~log2(corpus) —
-      // PLANS.md). The oracle pins 4×2; scaling probes override via
-      // env, which the driver never sets.
+      // PLANS.md); the oracle pins 4×2
       StreamingDedup.embeddingNearDup(s, dir, horizonSeconds = Some(200L),
-        signTables = sys.env.get("GRAFT_SIGN_TABLES").map(_.toInt).getOrElse(4),
-        signBits = sys.env.get("GRAFT_SIGN_BITS").map(_.toInt).getOrElse(2))
+        signTables = 4, signBits = 2)
     },
 
     // ----- IVF-shaped two-stage search: stage 1 routes each probe to

@@ -626,13 +626,6 @@ object TextAnalysis extends QueryModule {
     cmsEstimates(w, s.table("graft_stream_cms"))
   }
 
-  /** q177's probe knob, read ONCE and consulted by both the Spark
-    * body and the oracle string so an override during a sweep is a
-    * loud named failure, never a silent hash mismatch. The driver
-    * never sets this. */
-  private val bm25MaxDf: Double =
-    sys.env.get("GRAFT_BM25_MAXDF").map(_.toDouble).getOrElse(1.0)
-
   /** BM25 ranked retrieval (q177's operator as a facade). Exact by
     * default; `maxDfFrac` < 1 is the approximate-pruning dial the
     * round-10 verdict asked for (the nProbe pattern): terms whose
@@ -683,10 +676,9 @@ object TextAnalysis extends QueryModule {
   }
 
   /** The per-(query, doc, term) contribution frame bm25TopK
-    * aggregates — exposed so Bm25Probe can COUNT it: contribution
-    * rows are the postings volume entering the score join, the
-    * deterministic work metric behind the maxDfFrac dial (wall
-    * clocks at probe scale swing ±30%; this does not). */
+    * aggregates: contribution rows are the postings volume entering
+    * the score join, the deterministic work metric behind the
+    * maxDfFrac dial. */
   private[graft] def bm25Contrib(s: SparkSession, dir: String,
       maxDfFrac: Double): DataFrame = {
     // r18 OPT (guide §2.5): spread the single-split scan before the
@@ -1586,14 +1578,6 @@ object TextAnalysis extends QueryModule {
     // postings join hash-partitions on the term — the classic
     // sharded-index layout — and df/avgdl are tiny broadcast aggs. -----
     q("q177_bm25_topk",
-      // probe knob ⇒ approximate pruning with no SQL replay: make a
-      // correctness sweep run with the override FAIL LOUDLY naming
-      // the knob (the q167 semSuperK convention) instead of as a
-      // bare hash mismatch
-      if (bm25MaxDf < 1.0)
-        "SELECT error('GRAFT_BM25_MAXDF is set: hot-term pruning is " +
-          "approximate and has no SQL oracle — unset it for correctness sweeps')"
-      else
       s"""WITH w AS (SELECT doc_id, unnest(string_split(lower(text),' ')) AS word
          |           FROM documents),
          |h AS (SELECT doc_id, ${duckHash("word")} AS hw FROM w),
@@ -1623,7 +1607,7 @@ object TextAnalysis extends QueryModule {
          |SELECT query_id, doc_id, score, CAST(rn AS INTEGER) AS rn
          |FROM ranked WHERE rn <= 3
          |ORDER BY query_id, rn""") { (s, dir) =>
-      bm25TopK(s, dir, maxDfFrac = bm25MaxDf)
+      bm25TopK(s, dir)
     },
 
     // ----- model-free text clustering for mix balancing: each doc
@@ -2235,7 +2219,7 @@ object TextAnalysis extends QueryModule {
   private[graft] def quantMargins(
       s: SparkSession, dir: String): Seq[(String, Double)] = {
     val docs = Tables.t(s, dir, "documents")
-    val contrib = bm25Contrib(s, dir, bm25MaxDf)
+    val contrib = bm25Contrib(s, dir, maxDfFrac = 1.0)
     Seq(
       // the teacher sigmoid — every quality() consumer (q58 quality
       // column, q138/q208/q211/q218/q221 scoring, the q212/q213/q219

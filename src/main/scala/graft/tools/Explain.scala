@@ -1,33 +1,21 @@
 package graft.tools
 
-import graft.Registry
-import org.apache.spark.sql.SparkSession
+import graft.{Registry, Session}
 
 /** Dev tool: dump formatted plans for selected queries to inspect
   * pushdown (PushedFilters/ReadSchema), join strategies, and
-  * WholeStageCodegen spans. */
+  * WholeStageCodegen spans. The plans are the static ones; for the
+  * final adaptive plan with per-node metrics, run [[MetricsDump]].
+  *
+  * Usage: Explain <query...> (tables from SPARK_GRAFT_SF_DIR, by
+  * default the sf0.001 test tables) */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // SPARK_GRAFT_RUN=true: execute first and dump the FINAL adaptive
-    // plan (shows AQE join demotions and ReusedExchange stage dedup,
-    // which the static plan hides)
-    val run = sys.env.get("SPARK_GRAFT_RUN").contains("true")
+    val spark = Session.local()
     for (n <- args; d <- Registry.all.find(_.name == n)) {
       println(s"========== $n ==========")
-      val df = d.fn(spark, sfDir)
-      if (run) {
-        df.collect() // drive THIS queryExecution so AQE finalizes it
-        println(df.queryExecution.executedPlan.toString)
-      } else df.explain("formatted")
+      d.fn(spark, sfDir).explain("formatted")
     }
     spark.stop()
   }

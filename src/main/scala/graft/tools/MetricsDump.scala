@@ -1,7 +1,6 @@
 package graft.tools
 
-import graft.Registry
-import org.apache.spark.sql.SparkSession
+import graft.{Registry, Session}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 
@@ -15,15 +14,7 @@ import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStag
 object MetricsDump {
   def main(args: Array[String]): Unit = {
     val Array(dir, name) = args.take(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
     val d = Registry.all.find(_.name == name).getOrElse(
       sys.error(s"unknown query $name"))
     // wall-clock attribution: one line per JOB (start offset, duration,

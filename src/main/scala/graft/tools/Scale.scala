@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev tool: derive an N×-scaled copy of an sf directory under
@@ -36,13 +36,7 @@ object Scale {
     // duplicates and true pair lists are Θ(dups²) by definition
     val clone: Boolean =
       sys.env.get("GRAFT_SCALE_CLONE").contains("1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
 
     def replicate(df0: DataFrame, shifts: Map[String, Long]): DataFrame = {
       // spread the source rows first: the replica transform (per-word

@@ -32,25 +32,4 @@ object Bridge {
     spark.streams.active.foreach(_.stop())
     org.apache.spark.sql.execution.streaming.state.StateStore.stop()
   }
-
-  /** Post-execution file-scan metrics from the FINAL adaptive plan:
-    * (root path, partitions read, files read) per parquet scan —
-    * the observable evidence that dynamic partition pruning actually
-    * restricted a partitioned read (probe tooling; -1 where a metric
-    * is absent, e.g. unpartitioned scans lack numPartitions). */
-  def scanMetrics(df: org.apache.spark.sql.DataFrame): Seq[(String, Long, Long)] = {
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
-      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
-      case q: QueryStageExec        => scans(q.plan)
-      case f: FileSourceScanExec    => Seq(f)
-      case other                    => other.children.flatMap(scans)
-    }
-    scans(df.queryExecution.executedPlan).map { f =>
-      (f.relation.location.rootPaths.headOption.map(_.toString).getOrElse("?"),
-        f.metrics.get("numPartitions").map(_.value).getOrElse(-1L),
-        f.metrics.get("numFiles").map(_.value).getOrElse(-1L))
-    }
-  }
 }

@@ -1,0 +1,46 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+import scala.util.Using
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Each registered query and each entry point has one configuration:
+  * no environment variable reaches a query body, and no oracle is a
+  * deliberate failure standing in for an unset override.
+  */
+class ConfigSurfaceSpec extends AnyFunSuite {
+
+  /** An environment read, with its key when the key is a literal. */
+  private val envRead =
+    """(?:sys\.env|System\.getenv)(?:\.(?:getOrElse|get|contains))?(?:\(\s*"([^"]*)")?""".r
+
+  test("src/main reads no environment variable beyond the deployment settings") {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repository root ($root missing)")
+    val sources = Using.resource(Files.walk(root))(
+      _.iterator().asScala.filter(_.toString.endsWith(".scala")).toList)
+    val reads = sources.flatMap { f: Path =>
+      val file = root.relativize(f).toString
+      envRead.findAllMatchIn(Files.readString(f))
+        .map(m => file -> Option(m.group(1)).getOrElse("<non-literal key>"))
+    }
+    val unexpected = reads.filterNot {
+      case (_, "SPARK_GRAFT_CPUS" | "SPARK_GRAFT_SF_DIR") => true
+      // the scaled-data generator's inputs
+      case ("graft/tools/Scale.scala", "GRAFT_SCALE_JITTER" | "GRAFT_SCALE_CLONE") => true
+      case _ => false
+    }
+    assert(unexpected.isEmpty,
+      s"environment reads outside the allowed set: ${unexpected.mkString(", ")}")
+  }
+
+  test("no registered oracle is a deliberate SELECT error(...)") {
+    val failing = Registry.all.collect {
+      case QueryDef(n, Some(sql), _) if sql.trim.toUpperCase.startsWith("SELECT ERROR(") => n
+    }
+    assert(failing.isEmpty, s"error oracles: ${failing.mkString(", ")}")
+  }
+}

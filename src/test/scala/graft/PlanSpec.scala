@@ -759,4 +759,47 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("TakeOrderedAndProject"),
       "the k boundary must be a bounded TopK, not a global sort+limit")
   }
+
+  test("q243 gram generator runs once, above the stream repartition, in no Filter below it") {
+    // InferFiltersFromGenerate leaves an inline expensive generator
+    // alone; a projected gram array would get an inferred size() > 0
+    // filter carrying the whole gram expression, pushed below the
+    // repartition into the 1-2-task pre-shuffle stage
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.execution.SparkPlanInfo
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    import scala.jdk.CollectionConverters._
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlanInfo]()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => plans.add(s.sparkPlanInfo)
+        case _ =>
+      }
+    }
+    def nodes(p: SparkPlanInfo): Seq[SparkPlanInfo] = p +: p.children.flatMap(nodes)
+    def isRepartition(n: SparkPlanInfo): Boolean =
+      n.nodeName == "Exchange" && n.simpleString.contains("REPARTITION_BY_NUM")
+    spark.sparkContext.addSparkListener(listener)
+    val microBatches = try {
+      Registry.all.find(_.name == "q243_stream_contam_attribution").get
+        .fn(spark, sf)
+      eventually(timeout(30.seconds)) {
+        val m = plans.asScala.toSeq.filter(nodes(_).exists(isRepartition))
+        assert(m.nonEmpty, "no micro-batch plan with the stream repartition")
+        m
+      }
+    } finally spark.sparkContext.removeSparkListener(listener)
+    microBatches.foreach { p =>
+      val gram = nodes(p).filter(_.simpleString.contains("array_distinct(transform("))
+      assert(gram.map(_.nodeName) == Seq("Generate"),
+        s"gram expression must be evaluated once, by the Generate: ${gram.map(_.nodeName)}")
+      val exchanges = nodes(gram.head).filter(isRepartition)
+      assert(exchanges.size == 1, "the Generate must sit above the stream repartition")
+      val pushed = nodes(exchanges.head).filter(_.simpleString.contains("transform("))
+      assert(pushed.isEmpty,
+        s"gram expression re-evaluated below the repartition: ${pushed.map(_.simpleString)}")
+    }
+  }
 }

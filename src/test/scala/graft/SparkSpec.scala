@@ -6,13 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared session: one JVM-wide SparkSession for all suites. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // a fixed 4 cores, not the host's count: plan-shape and partition
+    // assertions must not depend on the machine running the suite
+    val s = Session.local(4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }

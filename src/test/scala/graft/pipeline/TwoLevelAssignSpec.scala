@@ -33,6 +33,16 @@ class TwoLevelAssignSpec extends SparkSpec {
     }
   }
 
+  test("vec_id contract: one row per input row, duplicate vec_ids are not merged") {
+    val cent = (0 until 8).map(c => (c.toLong, centroid(c))).toDF("cluster", "cv")
+    // vec_id 7 twice, with vectors nearest to different centroids
+    val vecs = Seq((7L, centroid(1)), (7L, centroid(2)), (8L, centroid(3)))
+      .toDF("vec_id", "ev")
+    val out = Similarity.assignTwoLevel(spark, vecs, cent, superK = 4)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    assert(out == Seq((7L, 1L), (7L, 2L), (8L, 3L)))
+  }
+
   test("real embeddings: coverage, nProbe-monotone agreement, nProbe=superK exact") {
     val e = Tables.t(spark, sf, "embeddings")
     val flat = Similarity.kmeansClusters(e, 8, 0)

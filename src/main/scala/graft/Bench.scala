@@ -200,13 +200,16 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // optional args restrict the run (isolation probes: one query,
+    // first-in-JVM, no cross-query state-store pollution); a name the
+    // registry lacks fails the run instead of shrinking the total
+    val names = if (args.nonEmpty) args.toSeq else headline
+    val unknown = names.filterNot(Registry.all.map(_.name).toSet)
+    require(unknown.isEmpty,
+      s"unknown query name(s), not in Registry.all: ${unknown.mkString(", ")}")
+    val defs = Registry.all.filter(d => names.contains(d.name))
     val (load0, njava0) = runContext
     val spark = Session.local()
-
-    // optional args restrict the run (isolation probes: one query,
-    // first-in-JVM, no cross-query state-store pollution)
-    val names = if (args.nonEmpty) args.toSeq else headline
-    val defs = Registry.all.filter(d => names.contains(d.name))
 
     // 4 in-JVM runs at the target sf: run 1 discarded (warm-up),
     // median of the last 3 reported. After EVERY run the streaming

@@ -2,10 +2,12 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
+import org.apache.spark.sql.catalyst.expressions.codegen.{Block, CodegenContext, EmptyBlock, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType, LongType}
 
 /** Fused vector arithmetic for the embedding family (ANN search,
   * near-dup scoring, k-means assignment). The composite
@@ -65,26 +67,47 @@ object VecMath {
     acc
   }
 
-  def nearestIndex(a: ArrayData, cents: Array[Array[Double]], aF: Boolean): Int = {
+  /** Spark's `round(d, 6)` on a double, bit for bit (RoundBase,
+    * HALF_UP; NaN and infinities pass through). */
+  def round6(d: Double): Double =
+    if (d.isNaN || d.isInfinite) d
+    else java.math.BigDecimal.valueOf(d)
+      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+
+  /** The engine's one exact argmin: the position in `cents` of the
+    * vector with the smallest (round(Σ (aᵢ−cᵢ)², 6), id) — ties to the
+    * lowest id, doubles ordered as Spark orders them — over every
+    * position, or over the positions listed in `cands` (null entries
+    * skipped). -1 when there is no candidate. */
+  def nearestIndex(a: ArrayData, cents: Array[Array[Double]], ids: Array[Long],
+      cands: ArrayData, aF: Boolean): Int = {
     val n = a.numElements()
-    var best = 0
-    var bd = Double.MaxValue
-    var c = 0
-    while (c < cents.length) {
-      val cv = cents(c)
-      if (cv.length != n)
-        throw new IllegalArgumentException(
-          s"vec_nearest_index: length mismatch $n vs ${cv.length}")
-      var acc = 0.0
-      var i = 0
-      while (i < n && acc < bd) { // early exit once past the best
-        val x = if (aF) a.getFloat(i).toDouble else a.getDouble(i)
-        val d = x - cv(i)
-        acc += d * d
-        i += 1
+    val m = if (cands == null) cents.length else cands.numElements()
+    var best = -1
+    var bd = 0.0
+    var k = 0
+    while (k < m) {
+      if (cands == null || !cands.isNullAt(k)) {
+        val c = if (cands == null) k else cands.getInt(k)
+        val cv = cents(c)
+        if (cv.length != n)
+          throw new IllegalArgumentException(
+            s"vec_nearest_index: length mismatch $n vs ${cv.length}")
+        var acc = 0.0
+        var i = 0
+        while (i < n) {
+          if (a.isNullAt(i))
+            throw new IllegalArgumentException(s"vec_nearest_index: null element at $i")
+          val x = if (aF) a.getFloat(i).toDouble else a.getDouble(i)
+          val d = x - cv(i)
+          acc += d * d
+          i += 1
+        }
+        val r = round6(acc)
+        val cmp = if (best < 0) -1 else SQLOrderingUtil.compareDoubles(r, bd)
+        if (cmp < 0 || (cmp == 0 && ids(c) < ids(best))) { bd = r; best = c }
       }
-      if (acc < bd) { bd = acc; best = c } // strict < → ties to lowest index
-      c += 1
+      k += 1
     }
     best
   }
@@ -133,13 +156,19 @@ object VecMath {
   def vec_dot(a: Column, b: Column): Column =
     Bridge.column(VecDot(Bridge.expression(a), Bridge.expression(b)))
 
-  /** argmin over a DRIVER-SIDE centroid table: index of the nearest
-    * centroid by squared L2, ties to the lowest index — a pure map
-    * (zero shuffle) that routes each row against a literal centroid
-    * array shipped with the plan. The nearest-centroid primitive of
-    * two-level assignment and IVF routing. */
-  def vec_nearest_index(a: Column, centroids: Seq[Seq[Double]]): Column =
-    Bridge.column(VecNearestIndex(Bridge.expression(a), centroids))
+  /** The exact nearest-centroid id of every k-means / PQ assignment:
+    * the `id` of the `model` row nearest to `a` by
+    * (round(vec_sq_dist, 6), id) — ties to the lowest id, the contract
+    * every DuckDB oracle replays. `model` is a driver-collected
+    * (id, vector) table carried by reference into generated code, so
+    * plan size does not grow with k; `candidates` (array<int> of
+    * positions in `model`) restricts the scan per row. NULL when the
+    * candidate set is empty. A pure map, legal in a streaming
+    * projection. */
+  def vec_nearest_index(a: Column, model: Seq[(Long, Seq[Double])],
+      candidates: Option[Column] = None): Column =
+    Bridge.column(VecNearestIndex(Bridge.expression(a), model,
+      candidates.map(Bridge.expression)))
 
   /** Top-p variant (multi-probe IVF routing): array of the p nearest
     * centroid indices, ascending by (dist, index). */
@@ -202,35 +231,70 @@ case class VecDot(left: Expression, right: Expression)
   override def prettyName: String = "vec_dot"
 }
 
-case class VecNearestIndex(child: Expression, centroids: Seq[Seq[Double]])
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+case class VecNearestIndex(child: Expression, model: Seq[(Long, Seq[Double])],
+    candidates: Option[Expression])
+    extends Expression {
 
-  @transient private lazy val arr: Array[Array[Double]] =
-    centroids.map(_.toArray).toArray
+  @transient private lazy val cents: Array[Array[Double]] =
+    model.map(_._2.toArray).toArray
+  @transient private lazy val ids: Array[Long] = model.map(_._1).toArray
   private def aFloat: Boolean =
     child.dataType.asInstanceOf[ArrayType].elementType == FloatType
 
+  override def children: Seq[Expression] = child +: candidates.toSeq
+  override def nullable: Boolean = true
+  override def dataType: DataType = LongType
+
   override def checkInputDataTypes(): TypeCheckResult =
-    VecMath.checkVecInputs(prettyName, Seq(child))
+    VecMath.checkVecInputs(prettyName, Seq(child)) match {
+      case TypeCheckResult.TypeCheckSuccess => candidates.map(_.dataType) match {
+        case Some(t) if !t.isInstanceOf[ArrayType] ||
+            t.asInstanceOf[ArrayType].elementType != IntegerType =>
+          TypeCheckResult.TypeCheckFailure(
+            s"$prettyName candidates must be array<int>, got ${t.catalogString}")
+        case _ => TypeCheckResult.TypeCheckSuccess
+      }
+      case failure => failure
+    }
 
-  override def dataType: DataType = org.apache.spark.sql.types.IntegerType
-
-  override protected def nullSafeEval(a: Any): Any =
-    VecMath.nearestIndex(a.asInstanceOf[ArrayData], arr, aFloat)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("centroids", arr, "double[][]")
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.functions.VecMath.nearestIndex($a, $ref, $aFloat);")
+  override def eval(input: InternalRow): Any = {
+    val a = child.eval(input)
+    val c = candidates.map(_.eval(input))
+    if (a == null || c.contains(null)) return null
+    val i = VecMath.nearestIndex(a.asInstanceOf[ArrayData], cents, ids,
+      c.orNull.asInstanceOf[ArrayData], aFloat)
+    if (i < 0) null else ids(i)
   }
 
-  override protected def withNewChildInternal(newChild: Expression): VecNearestIndex =
-    copy(child = newChild)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val a = child.genCode(ctx)
+    val c = candidates.map(_.genCode(ctx))
+    val centsRef = ctx.addReferenceObj("cents", cents, "double[][]")
+    val idsRef = ctx.addReferenceObj("ids", ids, "long[]")
+    val i = ctx.freshName("nearest")
+    ev.copy(code = code"""
+      ${a.code}
+      ${c.fold(EmptyBlock: Block)(_.code)}
+      boolean ${ev.isNull} = true;
+      long ${ev.value} = -1L;
+      if (!${a.isNull} && !${c.fold("false")(_.isNull.toString)}) {
+        int $i = graft.functions.VecMath.nearestIndex(${a.value}, $centsRef,
+          $idsRef, ${c.fold("null")(_.value.toString)}, $aFloat);
+        if ($i >= 0) {
+          ${ev.isNull} = false;
+          ${ev.value} = $idsRef[$i];
+        }
+      }""")
+  }
+
+  override protected def withNewChildrenInternal(
+      newChildren: IndexedSeq[Expression]): VecNearestIndex =
+    copy(child = newChildren.head, candidates = newChildren.lift(1))
 
   override def prettyName: String = "vec_nearest_index"
-  // keep centroid payload out of plan renders
+  // keep the model payload out of plan renders
   override def toString: String =
-    s"vec_nearest_index($child, k=${centroids.length})"
+    s"vec_nearest_index($child, k=${model.length}${candidates.fold("")(c => s", $c")})"
 }
 
 case class VecNearestIndices(child: Expression, centroids: Seq[Seq[Double]],

@@ -49,10 +49,10 @@ import org.apache.spark.sql.functions._
   * (q135's deterministic Lloyd's conventions: 6-dp rounding, ties to
   * the lowest id — AnnIngestSpec pins stream ≡ batch on the same
   * slice; q238's DuckDB oracle replays fit AND delta assignment):
-  * the per-row expression computes the same round(vec_sq_dist, 6)
-  * argmin the relational assignFlat aggregate does, just against
-  * literal arrays instead of a broadcast join — which is what makes
-  * it legal inside a streaming projection.
+  * cluster and codes come from the same exact per-row kernel
+  * ([[graft.functions.VecMath.vec_nearest_index]]) the batch fit
+  * assigns with — a pure map, which is what makes it legal inside a
+  * streaming projection.
   *
   * Reference behavior: linweijiang/Flink-1.8-SourceCode has no vector
   * index; this extends the LLM-pipeline family (SURVEY §2 LLM-ops)
@@ -77,22 +77,8 @@ object AnnIndex {
       k: Int = 8, updates: Int = 2, m: Int = 4, ks: Int = 4,
       subDim: Int = 16, fitLimit: Option[Long] = None): Unit = {
     val fitOn = fitLimit.fold(corpus)(l => corpus.filter(col("vec_id") < l))
-    // r18 fix (r17 ADVICE, medium): under the default geometry the
-    // fits return driver-local LITERAL frames, but on the
-    // over-ceiling / degenerate-fallback paths they are lazy
-    // aggregate plans — the write below would execute the fit once
-    // and collectModel would RE-execute it, and round(avg, 6) over
-    // shuffled doubles is not guaranteed bit-stable across
-    // executions, so postings could be assigned with a model
-    // differing at rounding boundaries from the persisted one (it
-    // also ran the fit twice). One localCheckpoint pins ONE execution
-    // to feed both consumers — model/postings consistency by
-    // construction, as the pre-r17 read-back gave.
-    def pinned(df: DataFrame): DataFrame =
-      if (Similarity.isLocalModel(df)) df else df.localCheckpoint()
-    val cent = pinned(Similarity.kmeansCentroids(fitOn, k, updates))
-    val cb1 = pinned(
-      Similarity.pqModelP(Similarity.edOf(fitOn), m, ks, subDim)._2)
+    val cent = Similarity.kmeansCentroids(fitOn, k, updates)
+    val cb1 = Similarity.pqModelP(Similarity.edOf(fitOn), m, ks, subDim)._2
     cent.write.mode("overwrite").parquet(s"$path/model/centroids")
     cb1.write.mode("overwrite").parquet(s"$path/model/codebooks")
     // r17 OPT: the postings assigner compiles from the just-fitted
@@ -100,7 +86,7 @@ object AnnIndex {
     // moment ago — legal because doubles round-trip parquet
     // bit-exactly (the scaladoc contract AnnIngestSpec pins), so the
     // read-back model assigns identically to the in-memory one.
-    val fn = assignerFrom(collectModel(cent, cb1))
+    val fn = assignerFrom(modelOf(cent, cb1))
     fn(corpus)
       .withColumn("epoch", lit(baseEpoch))
       .repartition(col("cluster"))
@@ -111,23 +97,10 @@ object AnnIndex {
   /** The collected (broadcast-class) model: sorted (cluster, centroid)
     * rows plus the per-subspace (code, codeword) tables. */
   private[pipeline] type Model =
-    (Array[(Long, Seq[Double])], Map[Int, Array[(Long, Seq[Double])]])
+    (Similarity.CentArr, Map[Int, Similarity.CentArr])
 
-  private def collectModel(cent: DataFrame, cb: DataFrame): Model = {
-    val centArr = cent
-      .select(col("cluster").cast("long"), col("cv")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1)))
-      .sortBy(_._1)
-    val cbArr = cb
-      .select(col("j").cast("int"), col("code").cast("long"), col("cv"))
-      .collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Double](2)))
-      .groupBy(_._1)
-      .map { case (j, rows) =>
-        j -> rows.map(t => (t._2, t._3)).sortBy(_._1)
-      }
-    (centArr, cbArr)
-  }
+  private def modelOf(cent: DataFrame, cb: DataFrame): Model =
+    (Similarity.collectCent(cent), Similarity.collectCodebook(cb))
 
   /** Read the persisted model back ONCE into driver arrays (two tiny
     * parquet reads) — shared by [[assigner]] and the probe side, so a
@@ -135,15 +108,15 @@ object AnnIndex {
     * (r17 OPT; pre-r17 the assigner and the probe's LUT/family reads
     * each re-read centroids and codebooks). */
   private[pipeline] def readModel(s: SparkSession, path: String): Model =
-    collectModel(
+    modelOf(
       s.read.parquet(s"$path/model/centroids"),
       s.read.parquet(s"$path/model/codebooks"))
 
   /** Build the PER-ROW assignment function from the PERSISTED model:
     * reads the (broadcast-class) centroid/codebook tables back and
-    * compiles them into literal-array expressions — cluster = argmin
-    * over the k centroid distances, c_j = argmin over the ks codeword
-    * distances per subspace. The GEOMETRY comes from the model files
+    * runs the exact kernel against them — cluster = argmin over the k
+    * centroid distances, c_j = argmin over the ks codeword distances
+    * per subspace. The GEOMETRY comes from the model files
     * themselves (k = centroid rows, m = distinct j, subDim = codeword
     * width), never from constants. Stateless, aggregation-free,
     * usable in a batch projection or a streaming one (doubles
@@ -160,23 +133,20 @@ object AnnIndex {
     require(cbArr.keySet == (0 until m).toSet,
       s"codebook subspaces not contiguous: ${cbArr.keySet}")
     val subDims = (0 until m).map(j => cbArr(j).head._2.length)
-    def argmin(cands: Seq[(Long, Seq[Double])], v: Column, out: String): Column =
-      array_min(array(cands.map { case (id, cv) =>
-        struct(round(VecMath.vec_sq_dist(v, typedLit(cv)), 6).as("dist"),
-          lit(id).as("id"))
-      }: _*)).getField("id").cast("int").as(out)
+    def argmin(model: Similarity.CentArr, v: Column, out: String): Column =
+      VecMath.vec_nearest_index(v, model.toSeq).cast("int").as(out)
     df => {
       val withEv = df.withColumn("__ev",
         expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
       var off = 0
       val codeCols = (0 until m).map { j =>
-        val c = argmin(cbArr(j).toSeq,
+        val c = argmin(cbArr(j),
           slice(col("__ev"), off + 1, subDims(j)), s"c$j")
         off += subDims(j)
         c
       }
       val cols = col("vec_id") +:
-        argmin(centArr.toSeq, col("__ev"), "cluster") +: codeCols
+        argmin(centArr, col("__ev"), "cluster") +: codeCols
       withEv.select(cols: _*)
     }
   }
@@ -305,18 +275,6 @@ object AnnIndex {
     else idMap
   }
 
-  private def centDf(s: SparkSession,
-      rows: Seq[(Long, Seq[Double])]): DataFrame = {
-    import org.apache.spark.sql.types._
-    s.createDataFrame(
-      java.util.Arrays.asList(rows.map(r =>
-        org.apache.spark.sql.Row(r._1, r._2)): _*),
-      StructType(Seq(
-        StructField("cluster", LongType, nullable = false),
-        StructField("cv", ArrayType(DoubleType, containsNull = false),
-          nullable = true))))
-  }
-
   private def famDf(s: SparkSession, rows: Seq[(Int, Int)]): DataFrame = {
     import org.apache.spark.sql.types._
     s.createDataFrame(
@@ -370,35 +328,30 @@ object AnnIndex {
       .limit(2).collect().map(_.getLong(0))
     require(initIds.length == 2,
       s"cell $cell has ${initIds.length} member(s) — nothing to split")
-    // r17 OPT (guide §2.4, the Similarity.argminLit device): the
-    // within-cell 2-means assigns per row against the two collected
-    // child centroids — a projection — instead of the former
-    // crossJoin + groupBy(vec_id) exchange per iteration plus the
+    // r17 OPT (guide §2.4): the within-cell 2-means assigns per row
+    // with the exact kernel against the two collected child centroids
+    // — a projection — instead of the former crossJoin +
+    // groupBy(vec_id) exchange per iteration plus the
     // assignment-back-to-members join inside centify. Same
-    // round(vec_sq_dist, 6) + lexicographic (dist, child) min, so the
-    // assignment (and every downstream row) is output-identical.
-    def argmin2(cc: Array[(Int, Seq[Double])]): Column =
-      array_min(array(cc.map { case (child, ccv) =>
-        struct(round(VecMath.vec_sq_dist(col("ev"), typedLit(ccv)), 6)
-          .as("dist"), lit(child).as("id"))
-      }.toIndexedSeq: _*)).getField("id")
-    def centify(assigned: DataFrame): Array[(Int, Seq[Double])] =
-      assigned
+    // (round(vec_sq_dist, 6), child) min, ties to child 0.
+    def nearestChild(cc: Similarity.CentArr): Column =
+      VecMath.vec_nearest_index(col("ev"), cc.toSeq).as("child")
+    def centify(assigned: DataFrame): Similarity.CentArr =
+      Similarity.collectCent(assigned
         .select(col("child"), posexplode(col("ev")))
         .groupBy(col("child"), col("pos"))
         .agg(round(avg(col("col")), 6).as("c"))
         .groupBy(col("child"))
         .agg(expr("transform(array_sort(collect_list(struct(pos, c))), " +
-          "s -> s.c)").as("ccv"))
-        .collect().map(r => (r.getInt(0), r.getSeq[Double](1))).sortBy(_._1)
-    var cc = members.filter(col("vec_id").isin(initIds(0), initIds(1)))
-      .select(when(col("vec_id") === initIds(0), lit(0))
-        .otherwise(lit(1)).as("child"), col("ev").as("ccv"))
-      .collect().map(r => (r.getInt(0), r.getSeq[Double](1))).sortBy(_._1)
+          "s -> s.c)").as("cv")), "child")
+    var cc = Similarity.collectCent(
+      members.filter(col("vec_id").isin(initIds(0), initIds(1)))
+        .select(when(col("vec_id") === initIds(0), lit(0))
+          .otherwise(lit(1)).as("child"), col("ev").as("cv")), "child")
     for (_ <- 1 to updates)
-      cc = centify(members.select(argmin2(cc).as("child"), col("ev")))
+      cc = centify(members.select(nearestChild(cc), col("ev")))
     val reassigned = members
-      .select(col("vec_id"), argmin2(cc).as("child"))
+      .select(col("vec_id"), nearestChild(cc))
       .select(col("vec_id"),
         when(col("child") === 0, lit(cell)).otherwise(lit(child1))
           .cast("int").as("cluster"))
@@ -415,8 +368,8 @@ object AnnIndex {
     // swap the model row FIRST (a reader racing the swap sees the old
     // centroids with the old layout or new with new — both coherent
     // under family expansion), then rewrite the one partition
-    val newCent = centDf(s,
-      centArr.filter(_._1 != cell).toSeq ++ cc.map { case (child, ccv) =>
+    val newCent = Similarity.centFrame(s,
+      centArr.filter(_._1 != cell) ++ cc.map { case (child, ccv) =>
         ((if (child == 0) cell.toLong else child1.toLong), ccv)
       })
     // the parent's family root survives nested splits: the new child
@@ -533,9 +486,7 @@ object AnnIndex {
     // r17 OPT: one centroid read feeds the family check, both centroid
     // lookups and the swap (pre-r17: centroids read three times —
     // families(), the checkpointed cent, and the families rewrite)
-    val centArr = s.read.parquet(s"$path/model/centroids")
-      .select(col("cluster").cast("long"), col("cv")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1))).sortBy(_._1)
+    val centArr = Similarity.collectCent(s.read.parquet(s"$path/model/centroids"))
     val fams = familyMap(s, path, centArr)
     require(fams(lo) == fams(hi),
       s"cells $lo (family ${fams(lo)}) and $hi (family ${fams(hi)}) " +
@@ -561,7 +512,7 @@ object AnnIndex {
           .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
       }
     // model swap first (the splitCell ordering argument), then layout
-    centDf(s, centArr.filter(c => c._1 != lo && c._1 != hi).toSeq :+
+    Similarity.centFrame(s, centArr.filter(c => c._1 != lo && c._1 != hi) :+
         ((lo.toLong, merged)))
       .write.mode("overwrite").parquet(s"$path/model/centroids")
     famDf(s, fams.toSeq.filter(_._1 != hi).sortBy(_._1))

@@ -2,8 +2,10 @@ package graft.pipeline
 
 import graft.{QueryDef, QueryModule, Tables}
 import graft.functions.TopK
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType,
+  LongType, StructField, StructType}
 import org.apache.spark.sql.expressions.Window
 
 /** Approximate-nearest-neighbor search over the embeddings table.
@@ -106,153 +108,84 @@ object Similarity extends QueryModule {
     e.select(col("vec_id"),
       expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("ev"))
 
-  /** Collected (cluster id, centroid) rows — the broadcast-class model
-    * table a literal per-row argmin compiles against (r17 OPT). */
-  private type CentArr = Array[(Long, Seq[Double])]
+  /** Collected (id, centroid) rows sorted by id — the driver-side
+    * model [[VecMath.vec_nearest_index]] carries. */
+  private[pipeline] type CentArr = Array[(Long, Seq[Double])]
 
-  private def collectCent(cent: DataFrame): CentArr =
-    cent.select(col("cluster").cast("long"), col("cv")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1))).sortBy(_._1)
+  /** The one collect of a model frame: its (`id`, cv) rows per `group`
+    * value (one group per PQ subspace j; a single group 0 otherwise),
+    * each sorted by id. */
+  private[pipeline] def collectModel(df: DataFrame, id: String,
+      group: Column = lit(0)): Map[Int, CentArr] =
+    df.select(group.cast("int"), col(id).cast("long"), col("cv")).collect()
+      .groupBy(_.getInt(0))
+      .map { case (g, rows) =>
+        g -> rows.map(r => (r.getLong(1), r.getSeq[Double](2))).sortBy(_._1)
+      }
 
-  /** True when the centroid frame is a driver-local literal table
-    * (what [[kmeansCentroids]] returns under the ceiling). r18 fix
-    * (r17 ADVICE): [[assignFlat]]/[[withClusterLit]] previously
-    * collected ANY centroid frame to decide the literal-vs-aggregate
-    * route — when `cent` was the lazy over-ceiling aggregate plan
-    * that executed the whole Lloyd's fit just to learn the row count,
-    * discarded it, and re-executed the same lineage inside the
-    * aggregate fallback. A non-local frame now routes straight to the
-    * aggregate form (values identical — the AnnIngestSpec pin). */
-  private[pipeline] def isLocalModel(cent: DataFrame): Boolean =
-    cent.queryExecution.analyzed.isInstanceOf[
-      org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+  private[pipeline] def collectCent(cent: DataFrame, id: String = "cluster"): CentArr =
+    collectModel(cent, id).getOrElse(0, Array.empty)
 
-  /** r17 OPT (guide §2.4, remove shuffles outright): compile collected
-    * centroids into a PER-ROW literal argmin — the AnnIndex.assigner
-    * device, which AnnIngestSpec pins bit-identical to the aggregate
-    * argmin (same round(vec_sq_dist, 6), same lexicographic (dist, id)
-    * min, ties to the lowest id). A nearest-centroid pass becomes a
-    * projection: no crossJoin row explosion, no N-row groupBy(vec_id)
-    * exchange. */
-  private def argminLit(cents: CentArr, v: Column): Column =
-    array_min(array(cents.map { case (id, cv) =>
-      struct(round(VecMath.vec_sq_dist(v, typedLit(cv)), 6).as("dist"),
-        lit(id).as("id"))
-    }.toIndexedSeq: _*)).getField("id")
+  /** A (j, code, cv) PQ codebook, collected per subspace j. */
+  private[pipeline] def collectCodebook(cb: DataFrame): Map[Int, CentArr] =
+    collectModel(cb, "code", col("j"))
 
-  /** Ceiling on the centroid count compiled into one literal-argmin
-    * projection; larger models (the k ∝ N regime) keep the aggregate
-    * form — they route through [[assignTwoLevel]] anyway. */
-  private val maxLitCentroids = 256
+  /** A collected model as a driver-literal local frame: the non-null
+    * `keys` columns, then `cv ARRAY<DOUBLE>`. Consumers (writes,
+    * broadcast joins, the next collect) replay no fit lineage, and
+    * doubles survive the driver round-trip bit-exactly. */
+  private[pipeline] def modelFrame(s: SparkSession, rows: Seq[Row],
+      keys: (String, DataType)*): DataFrame =
+    s.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(
+      keys.map { case (n, t) => StructField(n, t, nullable = false) } :+
+        StructField("cv", ArrayType(DoubleType, containsNull = false))))
 
-  /** The flat nearest-centroid pass — exact, Θ(N·k) FLOPs. r17 OPT:
-    * the centroid table (broadcast-class by construction) collects
-    * driver-side and the argmin runs as a per-row projection
-    * ([[argminLit]]); the pre-r17 corpus × broadcast(centroids)
-    * crossJoin + groupBy(vec_id) form — one full-corpus exchange per
-    * call — remains as the large-k/empty fallback and is
-    * output-identical by the AnnIngestSpec argument. */
-  private def assignFlat(ed: DataFrame, cent: DataFrame): DataFrame =
-    litArgmin(cent, col("ev")).fold(assignFlatAgg(ed, cent))(c =>
-      ed.select(col("vec_id"), c.as("cluster")))
-
-  /** The literal-vs-aggregate route of every flat assignment: the
-    * per-row literal argmin over the vector column `v` when `cent` is
-    * a driver-local model of 1 to [[maxLitCentroids]] centroids, else
-    * None — non-local, empty and over-ceiling models take the
-    * aggregate form ([[assignFlatAgg]]). */
-  private def litArgmin(cent: DataFrame, v: Column): Option[Column] =
-    if (!isLocalModel(cent)) None
-    else Some(collectCent(cent))
-      .filter(arr => arr.nonEmpty && arr.length <= maxLitCentroids)
-      .map(argminLit(_, v))
-
-  private def assignFlatAgg(ed: DataFrame, cent: DataFrame): DataFrame =
-    ed.crossJoin(broadcast(cent))
-      .withColumn("dist", round(VecMath.vec_sq_dist(col("ev"), col("cv")), 6))
-      .groupBy(col("vec_id"))
-      .agg(min(struct(col("dist"), col("cluster"))).as("m"))
-      .select(col("vec_id"), col("m.cluster").as("cluster"))
+  /** A centroid model as its (cluster BIGINT, cv) literal frame. */
+  private[pipeline] def centFrame(s: SparkSession, arr: CentArr): DataFrame =
+    modelFrame(s, arr.toSeq.map(c => Row(c._1, c._2)), "cluster" -> LongType)
 
   /** The Lloyd's FIT alone: (cluster, cv) after `updates` iterations.
     * Exposed separately (r10) so callers can pair the fit with either
     * assignment pass — [[assignFlat]] (exact, the oracle pin) or
     * [[assignTwoLevel]] (Θ(N·2√k), the large-k scale path).
     *
-    * r17 OPT (guide §2.4): each iteration collects the current
-    * centroids (k rows — broadcast-class) and assigns per-row via
-    * [[argminLit]], feeding the posexplode directly, so one iteration
-    * is ONE bounded-key (cluster × dim, map-side-combined) aggregation
-    * pass over the corpus — the former crossJoin explosion, the N-row
-    * groupBy(vec_id) exchange AND the assignment-back-to-embeddings
-    * join (a second N-row exchange) are gone. The returned frame is a
-    * LITERAL local table (k rows), so downstream consumers (writes,
-    * broadcast joins, [[assignFlat]]'s collect) replay no fit lineage.
-    * Values are identical to the pre-r17 aggregate form: same
-    * per-member multiset into the same round(avg, 6) per (cluster,
-    * dim), same argmin contract (the AnnIngestSpec pin). */
+    * Each iteration collects the current centroids (k rows) and
+    * assigns per row with [[VecMath.vec_nearest_index]], feeding the
+    * posexplode directly, so one iteration is ONE bounded-key
+    * (cluster × dim, map-side-combined) aggregation pass over the
+    * corpus: no crossJoin, no N-row groupBy(vec_id) exchange, no
+    * assignment join back to the embeddings. The returned frame is a
+    * literal local table ([[modelFrame]], k rows), so downstream
+    * consumers replay no fit lineage. An empty input fits an empty
+    * model. */
   private[pipeline] def kmeansCentroids(e: DataFrame, k: Int, updates: Int): DataFrame = {
-    val ed = edOf(e)
-    if (k > maxLitCentroids) return kmeansCentroidsAgg(e, k, updates)
     // posexplode the cast INLINE: a pre-projected `ev` here trips
     // InferFiltersFromGenerate, which re-evaluates the transform in
     // an interpreted filter pushed below (PLANS.md r8)
+    val ev = expr("transform(embedding, x -> CAST(x AS DOUBLE))")
     def update(assigned: DataFrame): DataFrame =
       assigned
-        .select(col("cluster"),
-          posexplode(expr("transform(embedding, x -> CAST(x AS DOUBLE))")))
+        .select(col("cluster"), posexplode(ev))
         .groupBy(col("cluster"), col("pos"))
         .agg(round(avg(col("col")), 6).as("c"))
         .groupBy(col("cluster"))
         .agg(expr("transform(array_sort(collect_list(struct(pos, c))), s -> s.c)")
           .as("cv"))
-    var arr = collectCent(ed.filter(col("vec_id") < k)
+    var arr = collectCent(edOf(e).filter(col("vec_id") < k)
       .select(col("vec_id").as("cluster"), col("ev").as("cv")))
     for (_ <- 1 to updates if arr.nonEmpty)
       arr = collectCent(update(e.select(
-        argminLit(arr, expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
-          .as("cluster"),
-        col("embedding"))))
-    litCentroids(e.sparkSession, arr)
-  }
-
-  /** The collected centroid rows as a literal local DataFrame
-    * (cluster BIGINT, cv ARRAY<DOUBLE>) — the schema the aggregate
-    * form produced; doubles survive the driver round-trip bit-exactly. */
-  private def litCentroids(s: SparkSession, arr: CentArr): DataFrame = {
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("cluster",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("cv",
-        org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.DoubleType, containsNull = false),
-        nullable = true)))
-    s.createDataFrame(
-      java.util.Arrays.asList(arr.map(c =>
-        org.apache.spark.sql.Row(c._1, c._2)): _*), schema)
-  }
-
-  /** Pre-r17 lazy aggregate fit — kept verbatim for k beyond the
-    * literal-projection ceiling. */
-  private def kmeansCentroidsAgg(e: DataFrame, k: Int, updates: Int): DataFrame = {
-    val ed = edOf(e)
-    def update(assigned: DataFrame): DataFrame =
-      assigned.join(e.select(col("vec_id"), col("embedding")), "vec_id")
-        .select(col("cluster"),
-          posexplode(expr("transform(embedding, x -> CAST(x AS DOUBLE))")))
-        .groupBy(col("cluster"), col("pos"))
-        .agg(round(avg(col("col")), 6).as("c"))
-        .groupBy(col("cluster"))
-        .agg(expr("transform(array_sort(collect_list(struct(pos, c))), s -> s.c)")
-          .as("cv"))
-    var cent = ed.filter(col("vec_id") < k)
-      .select(col("vec_id").as("cluster"), col("ev").as("cv"))
-    for (_ <- 1 to updates) cent = update(assignFlatAgg(ed, cent))
-    cent
+        VecMath.vec_nearest_index(ev, arr.toSeq).as("cluster"), col("embedding"))))
+    centFrame(e.sparkSession, arr)
   }
 
   private[pipeline] def kmeansClusters(e: DataFrame, k: Int, updates: Int): DataFrame =
     assignFlat(edOf(e), kmeansCentroids(e, k, updates))
+
+  /** The flat nearest-centroid pass — exact, Θ(N·k) FLOPs:
+    * (vec_id, cluster) for every row of `ed`. */
+  private def assignFlat(ed: DataFrame, cent: DataFrame): DataFrame =
+    withClusterFlat(ed, cent, col("ev")).select(col("vec_id"), col("cluster"))
 
   /** Assign every vector of `e` against a PRE-FIT centroid frame —
     * the standing-model assignment pass: fit on the reference corpus,
@@ -261,19 +194,17 @@ object Similarity extends QueryModule {
   private[pipeline] def assignWith(e: DataFrame, cent: DataFrame): DataFrame =
     assignFlat(edOf(e), cent)
 
-  /** `df` (vec_id, …) with the nearest-centroid `cluster` of its
-    * vector column `v` (double array) attached AS A PROJECTION (r17
-    * OPT, guide §2.4): callers that need the assignment next to the
-    * payload previously joined the (vec_id, cluster) frame back on
-    * vec_id — an N-row exchange the literal argmin makes unnecessary.
-    * Output-identical to assignFlat + join (the AnnIngestSpec
-    * argument); the aggregate form + join remains as the fallback
-    * ([[litArgmin]]). */
+  /** `df` with the nearest-centroid `cluster` (BIGINT) of its vector
+    * column `v` (double array) attached AS A PROJECTION: the centroid
+    * frame collects driver-side and [[VecMath.vec_nearest_index]]
+    * runs per row, so callers keep the assignment next to the payload
+    * without a join back on vec_id. An empty model assigns no rows. */
   private def withClusterFlat(df: DataFrame, cent: DataFrame,
-      v: Column): DataFrame =
-    litArgmin(cent, v).fold(df.join(
-        assignFlatAgg(df.select(col("vec_id"), v.as("ev")), cent), "vec_id"))(
-      df.withColumn("cluster", _))
+      v: Column): DataFrame = {
+    val arr = collectCent(cent)
+    (if (arr.isEmpty) df.limit(0) else df)
+      .withColumn("cluster", VecMath.vec_nearest_index(v, arr.toSeq))
+  }
 
   /** [[withClusterFlat]] over an (vec_id, embedding, …) frame. */
   private def withClusterLit(e: DataFrame, cent: DataFrame): DataFrame =
@@ -289,8 +220,8 @@ object Similarity extends QueryModule {
     * ships to every task); each vector routes to its nearest super
     * (N·superK) and then scans only that super's member centroids
     * (N·k/superK on average) — Θ(N·2√k) at superK = √k. Both stages
-    * stay corpus-map-over-broadcast: the corpus never shuffles, the
-    * argmins are map-side-combinable aggregates.
+    * are per-row projections against the driver-collected model: the
+    * corpus never shuffles.
     *
     * APPROXIMATE at the boundary: a vector whose true nearest
     * centroid sits in a non-probed super-cluster mis-routes.
@@ -317,10 +248,7 @@ object Similarity extends QueryModule {
 
   private def assignTwoLevelAll(s: SparkSession, vecs: DataFrame,
       cent: DataFrame, superK: Int, iters: Int, nProbe: Int): DataFrame = {
-    val centArr = cent.select(col("cluster").cast("long"), col("cv"))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-      .sortBy(_._1)
+    val centArr = collectCent(cent).map(c => (c._1, c._2.toArray))
     require(centArr.nonEmpty && superK >= 1, "need centroids and superK >= 1")
     val dim = centArr.head._2.length
     def sq(a: Array[Double], b: Array[Double]): Double = {
@@ -348,34 +276,24 @@ object Similarity extends QueryModule {
       }
     }
     // r18 OPT (verdict item 8 — the large-k join-back): stage 2 is a
-    // PER-ROW PROJECTION, like stage 1. The super → member-(cluster,
-    // centroid)-list map rides as a literal (it is the same
-    // driver-collected model stage 1 already ships), each row flattens
-    // its nProbe probed supers' member lists and takes the same
-    // lexicographic (round(dist, 6), cluster) min the former
-    // member-join + per-vector aggregate computed — so the pre-r18
-    // N-row argmin exchange is gone, callers can keep the cluster on
-    // the vector row without an assignment join-back on vec_id, and
-    // results are identical (supers partition the centroids, so the
-    // candidate set per row is unchanged; TwoLevelAssignSpec pins
-    // exactness/monotonicity/degeneracy on the same fixtures). A
-    // vector whose probed supers are ALL memberless gets a NULL min
-    // and is dropped — exactly the rows the former inner join
-    // dropped.
-    val members: Map[Int, Seq[(Long, Seq[Double])]] =
-      (0 until sup.length).map { sId =>
-        sId -> centArr.toSeq.collect {
-          case (c, v) if nearest(v, sup) == sId => (c, v.toSeq)
-        }
-      }.toMap
-    val memberLit = typedlit(members)
+    // PER-ROW PROJECTION, like stage 1. Each row's candidates are the
+    // members of its nProbe probed supers (a literal super → member
+    // positions map), and the exact kernel takes the same
+    // (round(dist, 6), cluster) min over them that the flat pass takes
+    // over all centroids — no N-row argmin exchange and no assignment
+    // join-back on vec_id (supers partition the centroids, so the
+    // candidate set per row is exactly the probed members;
+    // TwoLevelAssignSpec pins exactness/monotonicity/degeneracy). A
+    // vector whose probed supers are ALL memberless gets a NULL
+    // cluster and is dropped.
+    val owner = centArr.map(c => nearest(c._2, sup))
+    val memberIdx: Map[Int, Seq[Int]] = (0 until sup.length)
+      .map(sId => sId -> centArr.indices.filter(owner(_) == sId)).toMap
     val cands = flatten(transform(
-      graft.functions.VecMath.vec_nearest_indices(col("ev"),
-        sup.map(_.toSeq), nProbe),
-      sId => element_at(memberLit, sId)))
-    val clusterCol = array_min(transform(cands, m =>
-      struct(round(VecMath.vec_sq_dist(col("ev"), m.getField("_2")), 6)
-        .as("dist"), m.getField("_1").as("id")))).getField("id")
+      VecMath.vec_nearest_indices(col("ev"), sup.map(_.toSeq), nProbe),
+      sId => element_at(typedlit(memberIdx), sId)))
+    val clusterCol = VecMath.vec_nearest_index(col("ev"),
+      centArr.map(c => (c._1, c._2.toSeq)).toSeq, Some(cands))
     vecs.withColumn("cluster", clusterCol)
       .filter(col("cluster").isNotNull)
   }
@@ -864,10 +782,11 @@ object Similarity extends QueryModule {
     *   optimized" item 1): extra `ed` columns carried through the
     *   code PROJECTION into the returned code table — q190/q194
     *   previously joined the coarse assignment back onto the codes on
-    *   vec_id, an (N·m)-row exchange the literal-argmin projection
-    *   makes unnecessary. Values are untouched (the fit never reads
-    *   them); the aggregate fallback attaches them with the pre-r18
-    *   vec_id join instead (no registered geometry routes there). */
+    *   vec_id, an (N·m)-row exchange the per-row kernel makes
+    *   unnecessary. Values are untouched (the fit never reads them).
+    *
+    * With no `vec_id < ks` rows there is no codebook: the codebook and
+    * code frames come back empty. */
   private[pipeline] def pqModelP(ed: DataFrame, m: Int, ks: Int,
       subDim: Int, passThrough: Seq[String] = Nil)
       : (DataFrame, DataFrame, DataFrame) = {
@@ -876,26 +795,14 @@ object Similarity extends QueryModule {
         (0 until m).map(j => struct(lit(j).as("j"),
           slice(col("ev"), j * subDim + 1, subDim).as("sv"))): _*)).as("p"))
       .select(col("vec_id"), col("p.j").as("j"), col("p.sv").as("sv"))
-    // r17 OPT (guide §2.4, the [[argminLit]] device): both codeword
-    // assignment passes compile the (m·ks)-row codebook into per-row
-    // literal argmins. The pre-r17 form paid, per pass, an
-    // svs × broadcast(cb) explosion plus an (N·m)-row
-    // groupBy(vec_id, j) exchange, and the codebook update joined the
-    // codes BACK to svs on (vec_id, j) — a further (N·m)-row exchange;
-    // all three are projections now, and the only remaining exchange
-    // of the fit is the bounded-key (j, code, si — map-side-combined)
-    // codeword-mean aggregation. Output-identical: same
-    // round(vec_sq_dist, 6) per candidate, same lexicographic
-    // (dist, code) min (the AnnIngestSpec pin), same member multiset
-    // into the same round(avg, 6).
-    def collectCb(cb: DataFrame): Map[Int, CentArr] =
-      cb.select(col("j").cast("int"), col("code").cast("long"), col("cv"))
-        .collect()
-        .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Double](2)))
-        .groupBy(_._1)
-        .map { case (j, rows) =>
-          j -> rows.map(t => (t._2, t._3)).sortBy(_._1)
-        }
+    // r17 OPT (guide §2.4): both codeword assignment passes run the
+    // per-row kernel against the collected (m·ks)-row codebook. The
+    // pre-r17 form paid, per pass, an svs × broadcast(cb) explosion
+    // plus an (N·m)-row groupBy(vec_id, j) exchange, and the codebook
+    // update joined the codes BACK to svs on (vec_id, j) — a further
+    // (N·m)-row exchange; all three are projections now, and the only
+    // remaining exchange of the fit is the bounded-key (j, code, si —
+    // map-side-combined) codeword-mean aggregation.
     val ptCols = passThrough.map(col(_))
     // per-row (vec_id, [passThrough...,] j, code, sv) against a
     // collected codebook
@@ -903,71 +810,31 @@ object Similarity extends QueryModule {
       ed.select((col("vec_id") +: ptCols :+
         explode(array((0 until m).map(j =>
           struct(lit(j).as("j"),
-            argminLit(cb(j), slice(col("ev"), j * subDim + 1, subDim))
+            VecMath.vec_nearest_index(slice(col("ev"), j * subDim + 1, subDim),
+              cb.getOrElse(j, Array.empty[(Long, Seq[Double])]).toSeq)
               .as("code"),
             slice(col("ev"), j * subDim + 1, subDim).as("sv"))): _*)).as("p")): _*)
         .select((col("vec_id") +: ptCols :+ col("p.j").as("j") :+
           col("p.code").as("code") :+ col("p.sv").as("sv")): _*)
-    val cb0 = collectCb(svs.filter(col("vec_id") < ks)
+    val cb0 = collectCodebook(svs.filter(col("vec_id") < ks)
       .select(col("j"), col("vec_id").as("code"), col("sv").as("cv")))
-    if (cb0.size < m || ks > maxLitCentroids) {
-      // degenerate/oversized: the aggregate fallback, pass-through
-      // attached by the pre-r18 vec_id join
-      val (s0, c0, codes0) = pqModelAgg(ed, m, ks, subDim, svs)
-      return (s0, c0,
-        if (passThrough.isEmpty) codes0
-        else codes0.join(
-          ed.select((col("vec_id") +: ptCols): _*), "vec_id"))
-    }
-    val cb1 = coded(cb0)
+    val cb1 = if (cb0.isEmpty) cb0 else collectCodebook(coded(cb0)
       .select(col("j"), col("code"), posexplode(col("sv")).as(Seq("si", "x")))
       .groupBy(col("j"), col("code"), col("si"))
       .agg(round(avg(col("x")), 6).as("c"))
       .groupBy(col("j"), col("code"))
       .agg(expr("transform(array_sort(collect_list(struct(si, c))), s -> s.c)")
-        .as("cv"))
-    val cb1Arr = collectCb(cb1)
+        .as("cv")))
+    val codes = coded(cb1)
+      .select((col("vec_id") +: ptCols :+ col("j") :+ col("code")): _*)
     // cb1 as a LITERAL local table: its two consumers (pqLookup's
     // broadcast join, AnnIndex.save's model write) replay no fit
-    // lineage; schema matches the aggregate form's (j INT, code
-    // BIGINT, cv ARRAY<DOUBLE>)
-    import org.apache.spark.sql.types._
-    val cb1Schema = StructType(Seq(
-      StructField("j", IntegerType, nullable = false),
-      StructField("code", LongType, nullable = false),
-      StructField("cv", ArrayType(DoubleType, containsNull = false),
-        nullable = true)))
-    val cb1Lit = ed.sparkSession.createDataFrame(
-      java.util.Arrays.asList(cb1Arr.toSeq.sortBy(_._1).flatMap {
-        case (j, rows) => rows.map(r =>
-          org.apache.spark.sql.Row(j, r._1, r._2))
-      }: _*), cb1Schema)
-    (svs, cb1Lit, coded(cb1Arr)
-      .select((col("vec_id") +: ptCols :+ col("j") :+ col("code")): _*))
-  }
-
-  /** Pre-r17 aggregate PQ fit — the fallback for degenerate inits
-    * (fewer than m populated subspaces) or ks beyond the literal
-    * ceiling. */
-  private def pqModelAgg(ed: DataFrame, m: Int, ks: Int, subDim: Int,
-      svs: DataFrame): (DataFrame, DataFrame, DataFrame) = {
-    val cb0 = svs.filter(col("vec_id") < ks)
-      .select(col("j"), col("vec_id").as("code"), col("sv").as("cv"))
-    def assign(cb: DataFrame): DataFrame =
-      svs.join(broadcast(cb), "j")
-        .withColumn("dist", round(VecMath.vec_sq_dist(col("sv"), col("cv")), 6))
-        .groupBy(col("vec_id"), col("j"))
-        .agg(min(struct(col("dist"), col("code"))).as("mn"))
-        .select(col("vec_id"), col("j"), col("mn.code").as("code"))
-    val cb1 = assign(cb0)
-      .join(svs, Seq("vec_id", "j"))
-      .select(col("j"), col("code"), posexplode(col("sv")).as(Seq("si", "x")))
-      .groupBy(col("j"), col("code"), col("si"))
-      .agg(round(avg(col("x")), 6).as("c"))
-      .groupBy(col("j"), col("code"))
-      .agg(expr("transform(array_sort(collect_list(struct(si, c))), s -> s.c)")
-        .as("cv"))
-    (svs, cb1, assign(cb1))
+    // lineage
+    (svs,
+      modelFrame(ed.sparkSession, cb1.toSeq.sortBy(_._1).flatMap {
+        case (j, rows) => rows.map(r => Row(j, r._1, r._2))
+      }, "j" -> IntegerType, "code" -> LongType),
+      if (cb1.isEmpty) codes.limit(0) else codes)
   }
 
   /** Per-query ADC lookup tables: (query_id, j, code, d) — m × ks
@@ -1021,12 +888,11 @@ object Similarity extends QueryModule {
   private[pipeline] def ivfPqTopK(s: SparkSession, dir: String): DataFrame = {
     val e = Tables.t(s, dir, "embeddings")
     // r18 OPT (guide §2.4 — the r17 "Not yet optimized" item 1): the
-    // coarse cluster attaches to the embedding row as a literal-argmin
-    // PROJECTION and rides the code projection via passThrough; the
-    // pre-r18 plan joined the (vec_id, cluster) assignment back onto
-    // the (N·m)-row code table — a full-index exchange. Same argmin
-    // expression as assignFlat (the AnnIngestSpec pin), so values are
-    // identical; the over-ceiling fallback keeps the join.
+    // coarse cluster attaches to the embedding row as a per-row
+    // kernel PROJECTION and rides the code projection via passThrough;
+    // the pre-r18 plan joined the (vec_id, cluster) assignment back
+    // onto the (N·m)-row code table — a full-index exchange. Same
+    // kernel as assignFlat, so values are identical.
     val cent = kmeansCentroids(e, 8, 2)
     val ed = edOf(e)
     val edc = withClusterFlat(ed, cent, col("ev"))

@@ -20,6 +20,30 @@ class PlanSpec extends SparkSpec {
     df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
   }
 
+  /** The physical plan, and whether the plan of any SQL execution
+    * the query ran while being built — model-fit collects, eager
+    * checkpoints, which the final plan no longer shows — contains
+    * `marker` (listener events arrive asynchronously: wait up to 30 s). */
+  private def planAndBuildContains(name: String, marker: String): (String, Boolean) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    @volatile var seen = false
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          if (s.physicalPlanDescription.contains(marker)) seen = true
+        case _ =>
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val p = plan(name)
+      val deadline = System.nanoTime() + 30000000000L
+      while (!seen && System.nanoTime() < deadline) Thread.sleep(50)
+      (p, seen)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("q01 pushes filter and prunes columns at the parquet scan") {
     val p = plan("q01_pricing_summary")
     assert(p.contains("PushedFilters: [IsNotNull(l_shipdate), LessThanOrEqual(l_shipdate"))
@@ -118,6 +142,8 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("Window"),
       "a window rank crept into the k-means assignment or stage-2 top-k")
     assert(p.contains("ObjectHashAggregate"), "bounded top-k aggregate missing")
+    assert(p.contains("vec_nearest_index"),
+      "the cluster assignment must be the exact per-row kernel")
   }
 
   test("q110 global threshold joins as a broadcast, never a collect") {
@@ -244,7 +270,10 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q167 semdedup: no cartesian pair space — only centroid broadcasts cross") {
-    val p = plan("q167_semdedup")
+    // the clustered corpus is checkpointed, so the kernel shows in the
+    // plans the query runs while it is built, not in the final one
+    val (p, kernelRan) = planAndBuildContains("q167_semdedup", "vec_nearest_index")
+    assert(kernelRan, "the cluster assignment must be the exact per-row kernel")
     // the ONLY nested-loop joins allowed are corpus × broadcast(centroids)
     // (the k-means assignment shape); the cluster self-join and the
     // annotate join must be equi joins
@@ -310,6 +339,9 @@ class PlanSpec extends SparkSpec {
         s"$name: per-query lookup tables must broadcast")
       assert(!p.contains("Window"),
         s"$name: top-k must use the bounded aggregate")
+      if (name == "q190_ivfpq_topk")
+        assert(p.contains("vec_nearest_index"),
+          s"$name: cluster and PQ codes must come from the exact per-row kernel")
     }
   }
 
@@ -739,6 +771,8 @@ class PlanSpec extends SparkSpec {
       "a corpus-side cartesian appeared in the drift plan")
     assert("BroadcastNestedLoopJoin".r.findAllIn(p).nonEmpty,
       "centroids must broadcast into the assignment map")
+    assert(p.contains("vec_nearest_index"),
+      "the drift assignment must be the exact per-row kernel")
   }
 
   test("q227 fertility: ONE corpus scan pruned to (text, lang), map-side combined") {

@@ -1,7 +1,9 @@
 package graft.functions
 
 import graft.SparkSpec
+import org.apache.spark.sql.{Column, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** The fused vector folds must be BIT-IDENTICAL to the zip_with +
   * aggregate composites they replaced (same left-to-right IEEE
@@ -82,7 +84,7 @@ class VecMathSpec extends SparkSpec {
       }
       assert(e2.getMessage.contains("array<float> or array<double>"), e2.getMessage)
       val e3 = intercept[org.apache.spark.sql.AnalysisException] {
-        df.select(VecMath.vec_nearest_index(bad, Seq(Seq(0.0, 0.0, 0.0)))).collect()
+        df.select(VecMath.vec_nearest_index(bad, Seq(0L -> Seq(0.0, 0.0, 0.0)))).collect()
       }
       assert(e3.getMessage.contains("array<float> or array<double>"), e3.getMessage)
       val e4 = intercept[org.apache.spark.sql.AnalysisException] {
@@ -103,8 +105,118 @@ class VecMathSpec extends SparkSpec {
       (3L, Seq(5.0, 0.0))    // equidistant 0/1/2 → 0
     ).toDF("id", "v")
     val out = df.select(col("id"),
-        VecMath.vec_nearest_index(col("v"), cents).as("n"))
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+        VecMath.vec_nearest_index(col("v"),
+          cents.zipWithIndex.map { case (c, i) => (i.toLong, c) }).as("n"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(out == Map(0L -> 0, 1L -> 1, 2L -> 1, 3L -> 0))
+  }
+
+  /** The reference argmin the kernel replaced:
+    * array_min(array(struct(round(vec_sq_dist(v, c), 6), id) …)),
+    * restricted to the positions in `cands` when given. */
+  private def referenceArgmin(v: Column, model: Seq[(Long, Seq[Double])],
+      cands: Option[Column]): Column = {
+    val all = array(model.zipWithIndex.map { case ((id, c), p) =>
+      struct(round(VecMath.vec_sq_dist(v, typedLit(c)), 6).as("dist"),
+        lit(id).as("id"), lit(p).as("pos"))
+    }: _*)
+    array_min(cands.fold(all)(cs =>
+      filter(all, s => array_contains(cs, s.getField("pos"))))).getField("id")
+  }
+
+  /** (kernel, reference) per row of `rows` (id, v, cands), through a
+    * non-local plan so the projection really runs under `mode`. */
+  private def compare(mode: String, model: Seq[(Long, Seq[Double])],
+      rows: Seq[Row], vType: DataType): Unit = {
+    val schema = StructType(Seq(StructField("id", LongType),
+      StructField("v", ArrayType(vType, containsNull = false)),
+      StructField("cands", ArrayType(IntegerType, containsNull = false))))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), schema)
+    val out = df.select(col("id"),
+        VecMath.vec_nearest_index(col("v"), model).as("k_all"),
+        referenceArgmin(col("v"), model, None).as("r_all"),
+        VecMath.vec_nearest_index(col("v"), model, Some(col("cands"))).as("k_sub"),
+        referenceArgmin(col("v"), model, Some(col("cands"))).as("r_sub"),
+        size(col("cands")).as("n_sub"))
+      .collect()
+    assert(out.length == rows.length)
+    out.foreach { r =>
+      assert(!r.isNullAt(1) && r.get(1) == r.get(2),
+        s"$mode row ${r.getLong(0)}: kernel ${r.get(1)} vs reference ${r.get(2)}")
+      assert(r.get(3) == r.get(4),
+        s"$mode row ${r.getLong(0)} (subset): kernel ${r.get(3)} vs reference ${r.get(4)}")
+      if (r.getInt(5) == 0) assert(r.isNullAt(3), "an empty candidate set must give null")
+    }
+  }
+
+  private def underModes(body: String => Unit): Unit =
+    Seq("CODEGEN_ONLY" -> "true", "NO_CODEGEN" -> "false").foreach {
+      case (mode, wholeStage) =>
+        spark.conf.set("spark.sql.codegen.factoryMode", mode)
+        spark.conf.set("spark.sql.codegen.wholeStage", wholeStage)
+        try body(mode)
+        finally {
+          spark.conf.unset("spark.sql.codegen.factoryMode")
+          spark.conf.unset("spark.sql.codegen.wholeStage")
+        }
+    }
+
+  /** Non-contiguous ids, deliberately out of position order, so the
+    * lowest-id tie-break is not the lowest position. */
+  private def ids(n: Int, rnd: scala.util.Random): Seq[Long] =
+    rnd.shuffle((0 until n).map(i => 1000L - 37L * i))
+
+  private def subset(n: Int, rnd: scala.util.Random): Seq[Int] =
+    rnd.nextInt(4) match {
+      case 0 => Seq.empty
+      case 1 => Seq(rnd.nextInt(n))
+      case _ => (0 until n).filter(_ => rnd.nextBoolean())
+    }
+
+  test("vec_nearest_index equals the rounded array_min reference on random float and double vectors") {
+    val rnd = new scala.util.Random(42)
+    val dim = 16
+    val k = 24
+    val model = ids(k, rnd).map(id =>
+      id -> Seq.fill(dim)(rnd.nextGaussian() * math.pow(10, rnd.nextInt(3) - 1)))
+    def rows(toElem: Double => Any) = (0 until 120).map { i =>
+      Row(i.toLong, Seq.fill(dim)(toElem(rnd.nextGaussian())), subset(k, rnd))
+    }
+    underModes { mode =>
+      compare(mode, model, rows(_.toFloat), FloatType)
+      compare(mode, model, rows(identity), DoubleType)
+    }
+  }
+
+  test("vec_nearest_index follows Spark's round(d, 6) at the 6-dp boundary: HALF_UP, exact ties, 1e-7 steps") {
+    val rnd = new scala.util.Random(7)
+    // squared distances t on a 1e-7 grid straddling 6-dp boundaries
+    // (every j % 10 == 5 is a …5 HALF_UP case), kept where
+    // sqrt(t)² == t, so the kernel's sum lands on t exactly
+    val ts = for {
+      base <- Seq(0L, 10000000L, 25000000L, 1230000000L)
+      j <- 0 until 40
+      t = (base + j) / 1e7
+      r = math.sqrt(t)
+      if r * r == t
+    } yield r
+    assert(ts.size > 40, s"too few exact boundary distances: ${ts.size}")
+    assert(VecMath.round6(0.0000015) == 0.000002 && VecMath.round6(2.5000005) == 2.500001)
+    // each distance twice, on both axes: exact ties under distinct ids
+    val vecs = ts.flatMap(r => Seq(Seq(r, 0.0), Seq(0.0, -r)))
+    val model = ids(vecs.size, rnd).zip(vecs)
+    val rows = (0 until 150).map { i =>
+      val v = if (i % 3 == 0) Seq(0.0, 0.0)
+        else Seq(rnd.nextDouble() * 1e-6, rnd.nextDouble() * 1e-6)
+      Row(i.toLong, v, subset(model.size, rnd))
+    }
+    underModes(mode => compare(mode, model, rows, DoubleType))
+    // the tie case by hand: distances 1.7e-6 and 1.6e-6 both round to
+    // 2e-6, so the lower id wins although its raw distance is larger
+    val v = Seq((0L, Seq(0.0))).toDF("id", "v").repartition(1)
+    val hand = Seq(5L -> Seq(math.sqrt(1.7e-6)), 9L -> Seq(math.sqrt(1.6e-6)))
+    assert(v.select(VecMath.vec_nearest_index(col("v"), hand)).head.getLong(0) == 5L)
+    assert(v.select(VecMath.vec_nearest_index(col("v"), Seq.empty[(Long, Seq[Double])]))
+      .head.isNullAt(0), "an empty model must give null")
   }
 }

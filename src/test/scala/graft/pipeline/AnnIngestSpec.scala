@@ -19,6 +19,19 @@ class AnnIngestSpec extends SparkSpec {
   private def tmp(prefix: String) = java.nio.file.Files
     .createTempDirectory(prefix).toString
 
+  /** (vec_id → cluster) by the aggregate argmin — delta ×
+    * broadcast(centroids), (round(dist, 6), cluster) min per vector —
+    * independent of the per-row kernel the assigner runs. */
+  private def aggClusters(delta: org.apache.spark.sql.DataFrame,
+      cent: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+    Similarity.edOf(delta).crossJoin(broadcast(cent))
+      .withColumn("dist", round(
+        graft.functions.VecMath.vec_sq_dist(col("ev"), col("cv")), 6))
+      .groupBy(col("vec_id"))
+      .agg(min(struct(col("dist"), col("cluster"))).as("m"))
+      .select(col("vec_id"), col("m.cluster"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
   test("per-row assigner equals the batch fit+assign on the same slice") {
     val e = graft.Tables.t(spark, sf, "embeddings")
     val corpus = e.filter(col("vec_id") % 10 =!= 9)
@@ -30,12 +43,10 @@ class AnnIngestSpec extends SparkSpec {
       .map(r => r.getLong(0) ->
         (r.getInt(1), r.getInt(2), r.getInt(3), r.getInt(4), r.getInt(5)))
       .toMap
-    // batch truth, built from the SAME relational machinery q190
-    // uses: flat assignFlat against the fitted centroids, subvector
-    // argmin against the fitted codebooks
+    // batch truth: the fitted centroids and codebooks q190 uses, with
+    // the assignments taken by the aggregate argmin
     val cent = Similarity.kmeansCentroids(corpus, 8, 2)
-    val clusters = Similarity.assignWith(delta, cent)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val clusters = aggClusters(delta, cent)
     val (_, cb1, _) = Similarity.pqModel(Similarity.edOf(corpus))
     val dsv = Similarity.edOf(delta)
       .select(col("vec_id"), explode(expr(
@@ -147,8 +158,7 @@ class AnnIngestSpec extends SparkSpec {
       (r.getInt(1).toLong, r.getInt(2).toLong, r.getInt(3).toLong)).toMap
     // batch truth at the same geometry
     val cent = Similarity.kmeansCentroids(corpus, 4, 1)
-    val clusters = Similarity.assignWith(delta, cent)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val clusters = aggClusters(delta, cent)
     val (_, cb1, _) = Similarity.pqModelP(Similarity.edOf(corpus), 2, 4, 32)
     val codes = Similarity.edOf(delta)
       .select(col("vec_id"), explode(expr(

@@ -1,10 +1,14 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, expr}
+import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
-/** Parquet star-schema loaders for the driver testdata (TESTDATA.md).
+/** Parquet star-schema loaders for the sf testdata (TESTDATA.md),
+  * batch ([[t]]) and streaming ([[stream]]) — the one module that knows
+  * how a table is stored: its on-disk layout and column encodings.
   *
-  * All reads go through `spark.read.parquet` so Catalyst gets column
+  * All reads go through the parquet source so Catalyst gets column
   * pruning + filter pushdown into the scan for free — at 100 TB these
   * scans are the dominant cost and must stay prunable.
   */
@@ -13,27 +17,47 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** Batch read of one table. */
   def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    if (name == "events") {
-      // The driver's events.parquet has shipped ts three ways across
-      // testdata generations: TIMESTAMP(NANOS) (refused by Spark's
-      // µs TimestampType — read as raw int64 nanos and divide; the
-      // data is µs-aligned so this is lossless), TIMESTAMP_NTZ(µs)
-      // (naive µs — cast through the UTC session zone, which every
-      // entry point pins, reproducing the same instants), and plain
-      // TIMESTAMP(µs) in tools.Scale rewrites (passthrough). All
-      // downstream code sees one type: TimestampType, µs, UTC.
+    normalized(name, read(spark, dir, name))
+
+  /** The streaming twin of [[t]]: a file-source stream over the same
+    * table, with the schema of one batch read and the same column
+    * types. The sf testdata and benchmark data store a table as a
+    * single FILE, which the file source reads as its parent directory
+    * plus a glob; tools.Scale writes parquet DIRECTORIES, read
+    * directly. */
+  def stream(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val file = new java.io.File(s"$dir/$name.parquet")
+    val r = spark.readStream.schema(read(spark, dir, name).schema)
+    normalized(name,
+      if (file.isDirectory) r.parquet(file.getPath)
+      else r.option("pathGlobFilter", file.getName).parquet(dir))
+  }
+
+  private def read(spark: SparkSession, dir: String, name: String): DataFrame = {
+    // TIMESTAMP(NANOS) events.ts is refused by Spark's µs TimestampType
+    // unless read as raw int64 (see [[normalized]])
+    if (name == "events")
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = spark.read.parquet(s"$dir/events.parquet")
-      raw.schema("ts").dataType match {
-        case org.apache.spark.sql.types.LongType =>
-          raw.withColumn("ts",
-            org.apache.spark.sql.functions.expr("timestamp_micros(ts div 1000)"))
-        case org.apache.spark.sql.types.TimestampNTZType =>
-          raw.withColumn("ts", raw("ts").cast(org.apache.spark.sql.types.TimestampType))
-        case _ => raw
-      }
-    } else spark.read.parquet(s"$dir/$name.parquet")
+    spark.read.parquet(s"$dir/$name.parquet")
+  }
+
+  /** The sf testdata's events.parquet has shipped ts three ways across
+    * testdata generations: TIMESTAMP(NANOS) (read as raw int64 nanos
+    * and divided; the data is µs-aligned so this is lossless),
+    * TIMESTAMP_NTZ(µs) (naive µs — cast through the UTC session zone,
+    * which every entry point pins, reproducing the same instants), and
+    * plain TIMESTAMP(µs) in tools.Scale rewrites (passthrough). All
+    * downstream code, batch and streaming, sees one type:
+    * TimestampType, µs, UTC. */
+  private def normalized(name: String, df: DataFrame): DataFrame =
+    if (name != "events") df
+    else df.schema("ts").dataType match {
+      case LongType => df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
+      case TimestampNTZType => df.withColumn("ts", col("ts").cast(TimestampType))
+      case _ => df
+    }
 
   /** Register every table as a temp view so queries can exercise the
     * SQL surface (the reference's Table/SQL API — SURVEY.md §3.3). */
@@ -63,7 +87,7 @@ object Tables {
       // and AQE's byte-based coalescing folds it straight back to one
       // partition (these frames are small in bytes, huge in per-row
       // cost); the explicit count pins the fan-out.
-      df.repartition(target, org.apache.spark.sql.functions.col(key))
+      df.repartition(target, col(key))
     else df
   }
 }

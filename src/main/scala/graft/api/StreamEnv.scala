@@ -137,14 +137,9 @@ final class StreamOpsRow(val df: DataFrame) {
   def printSink(): StreamingQuery =
     df.writeStream.format("console").outputMode("append").start()
 
-  def memorySink(name: String, mode: String = "append"): DataFrame = {
-    df.sparkSession.catalog.dropTempView(name)
-    val query = df.writeStream.format("memory").queryName(name)
-      .outputMode(mode).start()
-    query.processAllAvailable()
-    query.stop()
-    df.sparkSession.table(name)
-  }
+  /** Run to completion into the memory sink `name`; the sink table. */
+  def memorySink(name: String, mode: String = "append"): DataFrame =
+    graft.streaming.Drain.toMemory(df, name, mode)._1
 
   def foreachBatchSink(f: (DataFrame, Long) => Unit): DataStreamWriter[org.apache.spark.sql.Row] =
     df.writeStream.foreachBatch(f)

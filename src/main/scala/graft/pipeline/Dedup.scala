@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.{QueryDef, QueryModule, Tables}
+import graft.streaming.Drain
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.CharNGrams.char_ngrams
@@ -187,14 +188,9 @@ object Dedup extends QueryModule {
       def tmp(p: String) = scratchDir(p)
       val idxPath = tmp("graft-ingest-idx")
       DedupIndex.save(corpus, idxPath)
-      val raw = s.read.parquet(s"$dir/documents.parquet").schema
-      val stream =
-        (if (new java.io.File(s"$dir/documents.parquet").isDirectory)
-          s.readStream.schema(raw).parquet(s"$dir/documents.parquet")
-        else s.readStream.schema(raw)
-          .option("pathGlobFilter", "documents.parquet").parquet(dir))
-          .filter(col("doc_id") % 10 === 9)
-          .select(col("doc_id"), col("text"))
+      val stream = Tables.stream(s, dir, "documents")
+        .filter(col("doc_id") % 10 === 9)
+        .select(col("doc_id"), col("text"))
       val outPath = tmp("graft-ingest-out")
       val admittedPath = tmp("graft-ingest-admitted")
       // schema seeds: an EMPTY delta slice produces zero micro-batches,
@@ -212,7 +208,7 @@ object Dedup extends QueryModule {
       DedupIndex.dedupDelta(idx, emptyDelta, Int.MaxValue)
         .write.mode("overwrite").parquet(outPath)
       emptyDelta.write.mode("overwrite").parquet(admittedPath)
-      val q = stream.writeStream
+      Drain(stream.writeStream
         .option("checkpointLocation", tmp("graft-ingest-ckpt"))
         .foreachBatch { (batch: DataFrame, _: Long) =>
           val verdict = DedupIndex.dedupDelta(idx, batch, Int.MaxValue)
@@ -222,10 +218,7 @@ object Dedup extends QueryModule {
           batch.join(verdict.filter(col("is_new"))
             .select(col("doc_id")), "doc_id")
             .write.mode("append").parquet(admittedPath)
-        }
-        .start()
-      q.processAllAvailable()
-      q.stop()
+        })
       DedupIndex.update(s.read.parquet(admittedPath), idxPath)
       s.read.parquet(outPath).orderBy(col("doc_id"))
     },
@@ -362,7 +355,7 @@ object Dedup extends QueryModule {
     q("q136_stream_dedup_minhash",
       duckPairsCtes(recursive = false) +
         "\nSELECT doc_b AS doc_id, min(doc_a) AS dup_of FROM good GROUP BY doc_b ORDER BY doc_id") {
-      (s, dir) => StreamingDedup.minhashDedup(s, dir)
+      (s, dir) => StreamingDedup.minhashDedup(s, dir)._1
     },
 
     // ----- SimHash: 32-bit signature from frequency-weighted word

@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.{QueryDef, QueryModule, Tables}
+import graft.streaming.Drain
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -333,7 +334,7 @@ object Multimodal extends QueryModule {
         |  AND bit_count(xor(a.phash, b.phash)) <= 3
         |GROUP BY a.doc_id
         |ORDER BY a.doc_id""") { (s, dir) =>
-      StreamingDedup.phashDedup(s, dir)
+      StreamingDedup.phashDedup(s, dir)._1
     },
 
     // ----- q230: energy/silence segmentation — the AUDIO shape of
@@ -1238,7 +1239,6 @@ object Multimodal extends QueryModule {
     import s.implicits._
     implicit val sq = s.sqlContext
     val sentinelSec = 4102444800L // epoch 2100 — the q136 convention
-    val raw = s.read.parquet(s"$dir/documents.parquet").schema
     val maxId = Tables.t(s, dir, "documents")
       .agg(max(col("doc_id").cast("long"))).head.getLong(0)
     require(maxId + 1 < sentinelSec,
@@ -1246,29 +1246,19 @@ object Multimodal extends QueryModule {
     val sentinel = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, String, String)]
     sentinel.addData((sentinelSec, "zsentinel", "zsrc"))
-    val stream =
-      (if (new java.io.File(s"$dir/documents.parquet").isDirectory)
-        s.readStream.schema(raw).parquet(s"$dir/documents.parquet")
-      else s.readStream.schema(raw)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir))
-        .select(col("doc_id").cast("long").as("doc_id"), col("text"),
-          col("source"))
-        .unionByName(sentinel.toDF().toDF("doc_id", "text", "source"))
-        .withColumn("ts", expr("timestamp_seconds(doc_id + 1)"))
-        .withWatermark("ts", "0 seconds")
+    val stream = Tables.stream(s, dir, "documents")
+      .select(col("doc_id").cast("long").as("doc_id"), col("text"),
+        col("source"))
+      .unionByName(sentinel.toDF().toDF("doc_id", "text", "source"))
+      .withColumn("ts", expr("timestamp_seconds(doc_id + 1)"))
+      .withWatermark("ts", "0 seconds")
     val agg = withMediaStats(stream)
       .groupBy(window(col("ts"), "100 seconds"), col("source"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_scenes")).as("n_scenes"),
         sum(col("n_frames")).as("n_frames"),
         sum(col("n_silent")).as("n_silent"))
-    val qname = "graft_stream_media_qa"
-    s.catalog.dropTempView(qname)
-    val query = agg.writeStream.format("memory").queryName(qname)
-      .outputMode("append").start()
-    query.processAllAvailable()
-    query.stop()
-    s.table(qname)
+    Drain.toMemory(agg, "graft_stream_media_qa", "append")._1
       .select(col("window.start").as("w_start"), col("source"),
         col("n_docs"), col("n_scenes"), col("n_frames"),
         // zero guard (r15 ADVICE): a window whose docs are all empty

@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.{QueryDef, QueryModule, Tables}
+import graft.streaming.Drain
 import graft.functions.TopK
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -1209,7 +1210,7 @@ object Similarity extends QueryModule {
         |             JOIN norms nb ON nb.vec_id = b_id)
         |SELECT b_id AS vec_id, min(a_id) AS dup_of
         |FROM scored WHERE score >= 0.25 GROUP BY b_id ORDER BY vec_id""") { (s, dir) =>
-      StreamingDedup.embeddingNearDup(s, dir, horizonSeconds = Some(100L))
+      StreamingDedup.embeddingNearDup(s, dir, horizonSeconds = Some(100L))._1
     },
 
     // ----- the same ingest dedup blocked by random-hyperplane LSH
@@ -1251,7 +1252,7 @@ object Similarity extends QueryModule {
       // buckets = signTables × 2^signBits must grow ~log2(corpus) —
       // PLANS.md); the oracle pins 4×2
       StreamingDedup.embeddingNearDup(s, dir, horizonSeconds = Some(200L),
-        signTables = 4, signBits = 2)
+        signTables = 4, signBits = 2)._1
     },
 
     // ----- IVF-shaped two-stage search: stage 1 routes each probe to
@@ -2311,13 +2312,8 @@ object Similarity extends QueryModule {
     val fn = AnnIndex.assigner(s, idxPath)
     AnnIndex.append(fn(e.filter(col("vec_id") % 10 === 9)), idxPath,
       epoch = 0L)
-    val raw = s.read.parquet(s"$dir/documents.parquet").schema
-    val stream =
-      (if (new java.io.File(s"$dir/documents.parquet").isDirectory)
-        s.readStream.schema(raw).parquet(s"$dir/documents.parquet")
-      else s.readStream.schema(raw)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir))
-        .filter(col("doc_id") < 10)
+    val stream = Tables.stream(s, dir, "documents")
+      .filter(col("doc_id") < 10)
     val outPath = Dedup.scratchDir("graft-xmstream-out")
     // schema seed (the q185 device): an empty caption stream must
     // leave outPath readable with the probe's output schema
@@ -2326,17 +2322,14 @@ object Similarity extends QueryModule {
         .localCheckpoint(),
       excludeSelf = false)
       .write.mode("overwrite").parquet(outPath)
-    val q = stream.writeStream
+    Drain(stream.writeStream
       .option("checkpointLocation", Dedup.scratchDir("graft-xmstream-ckpt"))
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val caps = captionFeatures(batch).localCheckpoint()
         if (!caps.isEmpty)
           annProbe(s, idxPath, caps, excludeSelf = false)
             .write.mode("append").parquet(outPath)
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      })
     s.read.parquet(outPath).orderBy(col("query_id"), col("rn"))
   }
 
@@ -2356,30 +2349,19 @@ object Similarity extends QueryModule {
     val maxId = e.agg(max(col("vec_id").cast("long"))).head.getLong(0)
     require(maxId + 1 < sentinelSec,
       s"vec_id $maxId reaches the watermark sentinel epoch $sentinelSec")
-    val raw = s.read.parquet(s"$dir/embeddings.parquet").schema
     val sentinel = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, Array[Float])]
     sentinel.addData((sentinelSec, Array.fill(64)(0f)))
-    val stream =
-      (if (new java.io.File(s"$dir/embeddings.parquet").isDirectory)
-        s.readStream.schema(raw).parquet(s"$dir/embeddings.parquet")
-      else s.readStream.schema(raw)
-        .option("pathGlobFilter", "embeddings.parquet").parquet(dir))
-        .select(col("vec_id").cast("long").as("vec_id"), col("embedding"))
-        .unionByName(sentinel.toDF().toDF("vec_id", "embedding"))
-        .filter(col("vec_id") % 10 === 9)
+    val stream = Tables.stream(s, dir, "embeddings")
+      .select(col("vec_id").cast("long").as("vec_id"), col("embedding"))
+      .unionByName(sentinel.toDF().toDF("vec_id", "embedding"))
+      .filter(col("vec_id") % 10 === 9)
     val agg = fn(stream)
       .withColumn("ts", expr("timestamp_seconds(vec_id + 1)"))
       .withWatermark("ts", "0 seconds")
       .groupBy(window(col("ts"), "100 seconds"), col("cluster"))
       .agg(count(lit(1)).as("n_arrivals"))
-    val qname = "graft_stream_cell_drift"
-    s.catalog.dropTempView(qname)
-    val query = agg.writeStream.format("memory").queryName(qname)
-      .outputMode("append").start()
-    query.processAllAvailable()
-    query.stop()
-    s.table(qname)
+    Drain.toMemory(agg, "graft_stream_cell_drift", "append")._1
       .select(col("window.start").as("w_start"), col("cluster"),
         col("n_arrivals"))
       .orderBy(col("w_start"), col("cluster"))
@@ -2531,19 +2513,14 @@ object Similarity extends QueryModule {
     val idxPath = Dedup.scratchDir("graft-ann-idx")
     AnnIndex.save(s, corpus, idxPath)
     val fn = AnnIndex.assigner(s, idxPath)
-    val raw = s.read.parquet(s"$dir/embeddings.parquet").schema
-    val stream =
-      (if (new java.io.File(s"$dir/embeddings.parquet").isDirectory)
-        s.readStream.schema(raw).parquet(s"$dir/embeddings.parquet")
-      else s.readStream.schema(raw)
-        .option("pathGlobFilter", "embeddings.parquet").parquet(dir))
-        .filter(col("vec_id") % 10 === 9)
-        .select(col("vec_id"), col("embedding"))
+    val stream = Tables.stream(s, dir, "embeddings")
+      .filter(col("vec_id") % 10 === 9)
+      .select(col("vec_id"), col("embedding"))
     val outPath = Dedup.scratchDir("graft-ann-out")
     // schema seed (the q185 device): an empty delta slice must leave
     // outPath readable
     fn(corpus.limit(0)).write.mode("overwrite").parquet(outPath)
-    val q = stream.writeStream
+    Drain(stream.writeStream
       .option("checkpointLocation", Dedup.scratchDir("graft-ann-ckpt"))
       .foreachBatch { (batch: DataFrame, _: Long) =>
         // per batch: the per-row assignment and ONE flat parquet
@@ -2554,10 +2531,7 @@ object Similarity extends QueryModule {
         // scaladoc's "append postings at day close" posture defers;
         // the index ends in the same state (same rows, epoch 0).
         fn(batch).write.mode("append").parquet(outPath)
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      })
     AnnIndex.append(s.read.parquet(outPath), idxPath, epoch = 0L)
     s.read.parquet(outPath)
       .select(col("vec_id"), col("cluster"), col("c0"), col("c1"),

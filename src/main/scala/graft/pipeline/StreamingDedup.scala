@@ -1,8 +1,10 @@
 package graft.pipeline
 
+import graft.Tables
+import graft.streaming.Drain
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQueryProgress}
 
 /** Dedup-at-ingest over a document STREAM (the streaming sibling of
   * the batch MinHash+LSH pipeline, q52): every arriving document is
@@ -70,13 +72,14 @@ object StreamingDedup {
   /** @param horizonSeconds dedup horizon: members sealed longer ago
     *   than this are evicted and can no longer match future arrivals —
     *   the windowed-recall trade-off that bounds state for unbounded
-    *   streams (None = global dedup, state grows with the corpus). */
+    *   streams (None = global dedup, state grows with the corpus).
+    * @return `(doc_id, dup_of)` and the stream's final progress, as do
+    *   [[phashDedup]] and [[embeddingNearDup]] (see [[minOverBuckets]]). */
   def minhashDedup(s: SparkSession, dir: String, threshold: Double = 0.1,
-      horizonSeconds: Option[Long] = None): DataFrame = {
+      horizonSeconds: Option[Long] = None): (DataFrame, Option[StreamingQueryProgress]) = {
     import s.implicits._
 
-    val batch = s.read.parquet(s"$dir/documents.parquet")
-    val raw = batch.schema
+    val batch = Tables.t(s, dir, "documents")
     // ids double as event-time seconds: a doc_id at or past the
     // sentinel would stall sealing (the sentinel is no longer the max
     // timestamp) — fail loudly instead. Parquet min/max stats make
@@ -98,12 +101,8 @@ object StreamingDedup {
     val sentinel = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, String)]
     sentinel.addData((SentinelSec, "zsentinela zsentinelb zsentinelc"))
-    val fileDocs =
-      (if (new java.io.File(s"$dir/documents.parquet").isDirectory)
-        s.readStream.schema(raw).parquet(s"$dir/documents.parquet")
-      else s.readStream.schema(raw)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir))
-        .select(col("doc_id").cast("long").as("doc_id"), col("text"))
+    val fileDocs = Tables.stream(s, dir, "documents")
+      .select(col("doc_id").cast("long").as("doc_id"), col("text"))
     val docs = fileDocs
       .unionByName(sentinel.toDF().toDF("doc_id", "text"))
       // synthetic arrival time: one doc per second in doc_id order,
@@ -185,13 +184,8 @@ object StreamingDedup {
         })
       .toDF("doc_id", "dup_of_bucket")
 
-    // one doc can match in several buckets → min over buckets. The
-    // stream has completed by here (memory-sink collection), so this
-    // final reduction is a plain batch aggregate.
-    StreamingDedup.viaMemorySink(s, pairs, "graft_stream_dedup")
-      .groupBy(col("doc_id"))
-      .agg(min(col("dup_of_bucket")).as("dup_of"))
-      .orderBy(col("doc_id"))
+    // one doc can match in several buckets → min over buckets
+    minOverBuckets(pairs, "doc_id", "graft_stream_dedup")
   }
 
   /** Perceptual-hash dedup at ingest — the MULTIMODAL sibling of
@@ -210,12 +204,11 @@ object StreamingDedup {
     * is the member signature list — 16 bytes a member, bounded by
     * `horizonSeconds` for unbounded streams. */
   def phashDedup(s: SparkSession, dir: String, maxHamming: Int = 3,
-      horizonSeconds: Option[Long] = None): DataFrame = {
+      horizonSeconds: Option[Long] = None): (DataFrame, Option[StreamingQueryProgress]) = {
     import s.implicits._
     require(maxHamming <= 3,
       s"4-block pigeonhole is exact only to hamming 3, got $maxHamming")
-    val batch = s.read.parquet(s"$dir/documents.parquet")
-    val raw = batch.schema
+    val batch = Tables.t(s, dir, "documents")
     val maxId = batch.agg(max(col("doc_id").cast("long"))).head.getLong(0)
     require(maxId + 1 < SentinelSec,
       s"doc_id $maxId reaches the watermark sentinel epoch $SentinelSec")
@@ -226,12 +219,8 @@ object StreamingDedup {
     val sentinel = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, String)]
     sentinel.addData((SentinelSec, "zsentinel"))
-    val fileDocs =
-      (if (new java.io.File(s"$dir/documents.parquet").isDirectory)
-        s.readStream.schema(raw).parquet(s"$dir/documents.parquet")
-      else s.readStream.schema(raw)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir))
-        .select(col("doc_id").cast("long").as("doc_id"), col("text"))
+    val fileDocs = Tables.stream(s, dir, "documents")
+      .select(col("doc_id").cast("long").as("doc_id"), col("text"))
     val docs = fileDocs
       .unionByName(sentinel.toDF().toDF("doc_id", "text"))
       .withColumn("ts", expr("timestamp_seconds(doc_id + 1)"))
@@ -286,11 +275,8 @@ object StreamingDedup {
       .toDF("doc_id", "dup_of_bucket")
 
     // a pair within hamming ≤ 3 can share up to 4 blocks → min over
-    // buckets (same completed-stream batch reduction as the text side)
-    viaMemorySink(s, pairs, "graft_stream_phash_dedup")
-      .groupBy(col("doc_id"))
-      .agg(min(col("dup_of_bucket")).as("dup_of"))
-      .orderBy(col("doc_id"))
+    // buckets
+    minOverBuckets(pairs, "doc_id", "graft_stream_phash_dedup")
   }
 
   /** Streaming embedding near-dup at ingest — the cosine sibling of
@@ -311,10 +297,9 @@ object StreamingDedup {
     * test so fp summation order cannot flip a bucket bit. */
   def embeddingNearDup(s: SparkSession, dir: String, threshold: Double = 0.25,
       horizonSeconds: Option[Long] = None,
-      signTables: Int = 0, signBits: Int = 2): DataFrame = {
+      signTables: Int = 0, signBits: Int = 2): (DataFrame, Option[StreamingQueryProgress]) = {
     import s.implicits._
-    val batch = s.read.parquet(s"$dir/embeddings.parquet")
-    val raw = batch.schema
+    val batch = Tables.t(s, dir, "embeddings")
     val firstRow = batch.agg(max(col("vec_id").cast("long")).as("m"),
       max(size(col("embedding"))).as("d")).head
     val maxId = firstRow.getLong(0)
@@ -334,13 +319,9 @@ object StreamingDedup {
     // null-padding composite) requires length parity for the bucket
     // projection; which bucket the sentinel lands in stays irrelevant
     sentinel.addData((SentinelSec, -1, Seq.fill(dim)(1.0f)))
-    val fileVecs =
-      (if (new java.io.File(s"$dir/embeddings.parquet").isDirectory)
-        s.readStream.schema(raw).parquet(s"$dir/embeddings.parquet")
-      else s.readStream.schema(raw)
-        .option("pathGlobFilter", "embeddings.parquet").parquet(dir))
-        .select(col("vec_id").cast("long").as("vec_id"),
-          col("label").cast("int").as("label"), col("embedding"))
+    val fileVecs = Tables.stream(s, dir, "embeddings")
+      .select(col("vec_id").cast("long").as("vec_id"),
+        col("label").cast("int").as("label"), col("embedding"))
     val vecs0 = fileVecs
       .unionByName(sentinel.toDF().toDF("vec_id", "label", "embedding"))
       .withColumn("ts", expr("timestamp_seconds(vec_id + 1)"))
@@ -429,26 +410,19 @@ object StreamingDedup {
     // a vector can collide with its duplicate in several tables →
     // min across buckets (a no-op under label blocking, where every
     // vector lives in exactly one bucket)
-    viaMemorySink(s, pairs, "graft_stream_vec_dedup")
-      .groupBy(col("vec_id"))
-      .agg(min(col("dup_of_bucket")).as("dup_of"))
-      .orderBy(col("vec_id"))
+    minOverBuckets(pairs, "vec_id", "graft_stream_vec_dedup")
   }
 
-  /** State rows (= live bucket groups) reported by the final progress
-    * of the last memory-sink run — DedupSpec's probe that horizon
-    * eviction really removes quiescent buckets. */
-  @volatile private[pipeline] var lastStateRows: Long = -1L
-
-  private def viaMemorySink(s: SparkSession, df: DataFrame, qname: String): DataFrame = {
-    s.catalog.dropTempView(qname)
-    val query = df.writeStream.format("memory").queryName(qname)
-      .outputMode("append").start()
-    query.processAllAvailable()
-    lastStateRows = Option(query.lastProgress)
-      .flatMap(p => p.stateOperators.headOption.map(_.numRowsTotal))
-      .getOrElse(-1L)
-    query.stop()
-    s.table(qname)
+  /** Drain the `(id, dup_of_bucket)` pair stream into the memory sink
+    * `qname` and reduce to the smallest duplicate per id. The stream
+    * has completed by then, so the reduction is a plain batch
+    * aggregate. Returns it with the final progress, whose state rows
+    * (= live bucket groups) show whether horizon eviction removes
+    * quiescent buckets. */
+  private def minOverBuckets(pairs: DataFrame, id: String,
+      qname: String): (DataFrame, Option[StreamingQueryProgress]) = {
+    val (sink, progress) = Drain.toMemory(pairs, qname, "append")
+    (sink.groupBy(col(id)).agg(min(col("dup_of_bucket")).as("dup_of"))
+      .orderBy(col(id)), progress)
   }
 }

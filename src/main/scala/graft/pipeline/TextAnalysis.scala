@@ -1,8 +1,10 @@
 package graft.pipeline
 
 import graft.{QueryDef, QueryModule, Tables}
+import graft.streaming.Drain
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryProgress
 
 /** Text analysis for data-pipeline curation: token counting
   * (whitespace + BPE-ish regex), quality scoring (length/punctuation/
@@ -197,16 +199,15 @@ object TextAnalysis extends QueryModule {
 
   /** q158's engine: streaming decontamination with append-mode
     * windowed aggregation (see the q158 comment at the `queries`
-    * entry). Returns (result, stateRows) where stateRows is the
-    * state-operator row count from the query's final progress — the
+    * entry). Returns (result, the query's final progress) — the
     * spec's probe that sealed (window, doc) groups really are
-    * EVICTED (≤ 1 live row: only the never-sealing sentinel's).
+    * EVICTED (≤ 1 live state row: only the never-sealing sentinel's).
     * Returning it here, from the run that produced it, avoids any
     * shared mutable state between concurrent runs. */
-  private[pipeline] def decontamStream(s: SparkSession, dir: String): (DataFrame, Long) = {
+  private[pipeline] def decontamStream(s: SparkSession,
+      dir: String): (DataFrame, Option[StreamingQueryProgress]) = {
     import s.implicits._
     implicit val sq = s.sqlContext
-    val raw = s.read.parquet(s"$dir/documents.parquet").schema
     val docs = Tables.t(s, dir, "documents")
     // sentinel guards against testdata drift: it must stay the max
     // timestamp (else real windows stop sealing) and must dodge the
@@ -227,12 +228,8 @@ object TextAnalysis extends QueryModule {
     val sentinel = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, String)]
     sentinel.addData((SentinelId, "zsentinela zsentinelb zsentinelc"))
-    val stream =
-      (if (new java.io.File(s"$dir/documents.parquet").isDirectory)
-        s.readStream.schema(raw).parquet(s"$dir/documents.parquet")
-      else s.readStream.schema(raw)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir))
-        .select(col("doc_id").cast("long").as("doc_id"), col("text"))
+    val stream = Tables.stream(s, dir, "documents")
+      .select(col("doc_id").cast("long").as("doc_id"), col("text"))
     val hits = stream
       .unionByName(sentinel.toDF().toDF("doc_id", "text"))
       .withColumn("ts", expr("timestamp_seconds(doc_id + 1)"))
@@ -245,20 +242,13 @@ object TextAnalysis extends QueryModule {
       .groupBy(window(col("ts"), "1 second"), col("doc_id"))
       .agg(count(lit(1)).as("ng"), count(col("hit")).as("n_shared"))
       .drop("window")
-    s.catalog.dropTempView("graft_stream_decontam")
-    val query = hits.writeStream.format("memory")
-      .queryName("graft_stream_decontam").outputMode("append").start()
-    query.processAllAvailable()
-    val stateRows = Option(query.lastProgress)
-      .flatMap(p => p.stateOperators.headOption.map(_.numRowsTotal))
-      .getOrElse(-1L)
-    query.stop()
-    val out = s.table("graft_stream_decontam")
+    val (sink, progress) = Drain.toMemory(hits, "graft_stream_decontam", "append")
+    val out = sink
       .filter(col("n_shared") >= 1)
       .select(col("doc_id"), col("ng").cast("int").as("n_grams"), col("n_shared"),
         round(col("n_shared").cast("double") / col("ng"), 6).as("contamination"))
       .orderBy(col("doc_id"))
-    (out, stateRows)
+    (out, progress)
   }
 
   /** q243's engine: q240's attribution on q158's sealed-window
@@ -277,7 +267,6 @@ object TextAnalysis extends QueryModule {
       dir: String): DataFrame = {
     import s.implicits._
     implicit val sq = s.sqlContext
-    val raw = s.read.parquet(s"$dir/documents.parquet").schema
     val docs = Tables.t(s, dir, "documents")
     val maxId = docs.agg(max(col("doc_id").cast("long"))).head.getLong(0)
     require(maxId < SentinelId,
@@ -297,12 +286,8 @@ object TextAnalysis extends QueryModule {
     val sentinel = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, String)]
     sentinel.addData((SentinelId, "zsentinela zsentinelb zsentinelc"))
-    val stream =
-      (if (new java.io.File(s"$dir/documents.parquet").isDirectory)
-        s.readStream.schema(raw).parquet(s"$dir/documents.parquet")
-      else s.readStream.schema(raw)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir))
-        .select(col("doc_id").cast("long").as("doc_id"), col("text"))
+    val stream = Tables.stream(s, dir, "documents")
+      .select(col("doc_id").cast("long").as("doc_id"), col("text"))
     val hits = stream
       .unionByName(sentinel.toDF().toDF("doc_id", "text"))
       .withColumn("ts", expr("timestamp_seconds(doc_id + 1)"))
@@ -342,13 +327,7 @@ object TextAnalysis extends QueryModule {
         col("benchmark"))
       .agg(max(col("ng")).as("ng"), count(lit(1)).as("n_shared"))
       .drop("window")
-    val qname = "graft_stream_contam_attr"
-    s.catalog.dropTempView(qname)
-    val query = hits.writeStream.format("memory").queryName(qname)
-      .outputMode("append").start()
-    query.processAllAvailable()
-    query.stop()
-    s.table(qname)
+    Drain.toMemory(hits, "graft_stream_contam_attr", "append")._1
       .select(col("doc_id"), col("benchmark"),
         col("ng").cast("int").as("n_grams"), col("n_shared"),
         round(col("n_shared").cast("double") / col("ng"), 6)
@@ -378,14 +357,13 @@ object TextAnalysis extends QueryModule {
     * seals, so it reaches neither the second aggregation nor the
     * sink.
     *
-    * Returns (result, stateRowsPerOperator) from the run's final
-    * progress — the spec's probe that sealed groups really evict
-    * (stage-1 live state = the sentinel's window only). */
+    * Returns (result, the run's final progress) — the spec's probe
+    * that sealed groups really evict (stage-1 live state = the
+    * sentinel's window only). */
   private[pipeline] def trendingStream(s: SparkSession, dir: String)
-      : (DataFrame, Seq[Long]) = {
+      : (DataFrame, Option[StreamingQueryProgress]) = {
     import s.implicits._
     implicit val sq = s.sqlContext
-    val raw = s.read.parquet(s"$dir/documents.parquet").schema
     val docs = Tables.t(s, dir, "documents")
     val maxId = docs.agg(max(col("doc_id").cast("long"))).head.getLong(0)
     require(maxId < SentinelId,
@@ -393,16 +371,12 @@ object TextAnalysis extends QueryModule {
     val sentinel = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, String)]
     sentinel.addData((SentinelId, "zsentinelword"))
-    val words =
-      (if (new java.io.File(s"$dir/documents.parquet").isDirectory)
-        s.readStream.schema(raw).parquet(s"$dir/documents.parquet")
-      else s.readStream.schema(raw)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir))
-        .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-        .unionByName(sentinel.toDF().toDF("doc_id", "text"))
-        .withColumn("ts", expr("timestamp_seconds(doc_id + 1)"))
-        .withWatermark("ts", "0 seconds")
-        .select(col("ts"), explode(split(lower(col("text")), " ")).as("word"))
+    val words = Tables.stream(s, dir, "documents")
+      .select(col("doc_id").cast("long").as("doc_id"), col("text"))
+      .unionByName(sentinel.toDF().toDF("doc_id", "text"))
+      .withColumn("ts", expr("timestamp_seconds(doc_id + 1)"))
+      .withWatermark("ts", "0 seconds")
+      .select(col("ts"), explode(split(lower(col("text")), " ")).as("word"))
     val counts = words
       .groupBy(window(col("ts"), "100 seconds"), col("word"))
       .agg(count(lit(1)).as("n"))
@@ -410,22 +384,15 @@ object TextAnalysis extends QueryModule {
       .groupBy(window(col("window"), "100 seconds"))
       .agg(graft.functions.TopK.topKStr(3)(
         col("n").cast("double"), col("word")).as("topk"))
-    s.catalog.dropTempView("graft_stream_trending")
-    val query = top.writeStream.format("memory")
-      .queryName("graft_stream_trending").outputMode("append").start()
-    query.processAllAvailable()
-    val stateRows = Option(query.lastProgress)
-      .map(_.stateOperators.toSeq.map(_.numRowsTotal))
-      .getOrElse(Seq.empty)
-    query.stop()
-    val out = s.table("graft_stream_trending")
+    val (sink, progress) = Drain.toMemory(top, "graft_stream_trending", "append")
+    val out = sink
       .select(col("window.start").as("w_start"),
         posexplode(col("topk")).as(Seq("pos", "t")))
       .select(col("w_start"), col("t.id").as("word"),
         col("t.score").cast("bigint").as("n"),
         (col("pos") + 1).cast("int").as("rn"))
       .orderBy(col("w_start"), col("rn"))
-    (out, stateRows)
+    (out, progress)
   }
 
   /** Perplexity gating AT INGEST: arriving docs score against a
@@ -443,7 +410,6 @@ object TextAnalysis extends QueryModule {
   private[pipeline] def perplexityStream(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     implicit val sq = s.sqlContext
-    val raw = s.read.parquet(s"$dir/documents.parquet").schema
     val docs = Tables.t(s, dir, "documents")
     val maxId = docs.agg(max(col("doc_id").cast("long"))).head.getLong(0)
     require(maxId < SentinelId,
@@ -478,12 +444,8 @@ object TextAnalysis extends QueryModule {
     val sentinel = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, String)]
     sentinel.addData((SentinelId, "zsentinela zsentinelb zsentinelc"))
-    val stream =
-      (if (new java.io.File(s"$dir/documents.parquet").isDirectory)
-        s.readStream.schema(raw).parquet(s"$dir/documents.parquet")
-      else s.readStream.schema(raw)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir))
-        .select(col("doc_id").cast("long").as("doc_id"), col("text"))
+    val stream = Tables.stream(s, dir, "documents")
+      .select(col("doc_id").cast("long").as("doc_id"), col("text"))
     val scored = bigrams(stream
         .unionByName(sentinel.toDF().toDF("doc_id", "text"))
         .withColumn("ts", expr("timestamp_seconds(doc_id + 1)"))
@@ -506,12 +468,7 @@ object TextAnalysis extends QueryModule {
         .as("hsum_mic"),
         count(col("term")).as("n"))
       .drop("window")
-    s.catalog.dropTempView("graft_stream_perplexity")
-    val query = scored.writeStream.format("memory")
-      .queryName("graft_stream_perplexity").outputMode("append").start()
-    query.processAllAvailable()
-    query.stop()
-    s.table("graft_stream_perplexity")
+    Drain.toMemory(scored, "graft_stream_perplexity", "append")._1
       .filter(col("n") >= 1)
       .withColumn("hsum", col("hsum_mic").cast("double") / lit(1e6))
       .select(col("doc_id"), col("n").cast("int").as("n_bigrams"),
@@ -604,26 +561,17 @@ object TextAnalysis extends QueryModule {
     * is computed batch-side: it is the VERIFICATION harness, not the
     * sketch (a production stream serves estimates for ad-hoc terms). */
   private[pipeline] def cmsStream(s: SparkSession, dir: String): DataFrame = {
-    val raw = s.read.parquet(s"$dir/documents.parquet").schema
-    val stream =
-      (if (new java.io.File(s"$dir/documents.parquet").isDirectory)
-        s.readStream.schema(raw).parquet(s"$dir/documents.parquet")
-      else s.readStream.schema(raw)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir))
-        .select(explode(split(lower(col("text")), " ")).as("word"))
+    val stream = Tables.stream(s, dir, "documents")
+      .select(explode(split(lower(col("text")), " ")).as("word"))
     val cells = stream
       .select((col("word") +: (0 to 3).map(cmsSlice)): _*)
       .select(posexplode(array((0 to 3).map(j => col(s"h$j")): _*))
         .as(Seq("j", "b")))
       .groupBy(col("j"), col("b")).agg(count(lit(1)).as("c"))
-    s.catalog.dropTempView("graft_stream_cms")
-    val query = cells.writeStream.format("memory")
-      .queryName("graft_stream_cms").outputMode("complete").start()
-    query.processAllAvailable()
-    query.stop()
+    val sink = Drain.toMemory(cells, "graft_stream_cms", "complete")._1
     val w = Tables.t(s, dir, "documents")
       .select(explode(split(lower(col("text")), " ")).as("word"))
-    cmsEstimates(w, s.table("graft_stream_cms"))
+    cmsEstimates(w, sink)
   }
 
   /** BM25 ranked retrieval (q177's operator as a facade). Exact by
@@ -1181,12 +1129,7 @@ object TextAnalysis extends QueryModule {
         |  CAST(CASE WHEN quality > 0.5 AND dup2 <= 0.06 AND topw <= 0.2
         |       THEN 1 ELSE 0 END AS INTEGER) AS keep
         |FROM m ORDER BY doc_id""") { (s, dir) =>
-      val raw = s.read.parquet(s"$dir/documents.parquet").schema
-      val stream =
-        (if (new java.io.File(s"$dir/documents.parquet").isDirectory)
-          s.readStream.schema(raw).parquet(s"$dir/documents.parquet")
-        else s.readStream.schema(raw)
-          .option("pathGlobFilter", "documents.parquet").parquet(dir))
+      val stream = Tables.stream(s, dir, "documents")
       val dup2 = lit(1.0) -
         size(array_distinct(expr("transform(sequence(0, size(w)-2), i -> concat(w[i], ' ', w[i+1]))")))
           .cast("double") / (size(col("w")) - 1)
@@ -1202,12 +1145,7 @@ object TextAnalysis extends QueryModule {
           col("clean_hash"),
           when(col("quality") > 0.5 && col("dup2") <= 0.06 && col("topw") <= 0.2, 1)
             .otherwise(0).as("keep"))
-      s.catalog.dropTempView("graft_stream_gate")
-      val query = gated.writeStream.format("memory")
-        .queryName("graft_stream_gate").outputMode("append").start()
-      query.processAllAvailable()
-      query.stop()
-      s.table("graft_stream_gate").orderBy(col("doc_id"))
+      Drain.toMemory(gated, "graft_stream_gate", "append")._1.orderBy(col("doc_id"))
     },
 
     // ----- embedding QC: per-vector dimension / L2 norm / zero- and

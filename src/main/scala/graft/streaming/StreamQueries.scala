@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.{QueryDef, QueryModule, Tables}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.DecimalType
@@ -23,42 +23,6 @@ import org.apache.spark.sql.types.DecimalType
   * pin the alignment explicitly.
   */
 object StreamQueries extends QueryModule {
-
-  /** Streaming view of events.parquet (same ns→µs handling as
-    * Tables.t, which file-source schemas must pre-declare). */
-  private def streamEvents(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = s.read.parquet(s"$dir/events.parquet").schema
-    // driver testdata ships events.parquet as a single FILE (file
-    // source needs the parent dir + a glob); rewritten copies
-    // (tools.Scale) are parquet DIRECTORIES readable directly
-    val st =
-      if (new java.io.File(s"$dir/events.parquet").isDirectory)
-        s.readStream.schema(raw).parquet(s"$dir/events.parquet")
-      else s.readStream.schema(raw)
-        .option("pathGlobFilter", "events.parquet").parquet(dir)
-    raw("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        st.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        // naive µs generation: cast through the pinned-UTC session
-        // zone so watermarks/event-time see TimestampType as before
-        st.withColumn("ts", col("ts").cast(org.apache.spark.sql.types.TimestampType))
-      case _ => st
-    }
-  }
-
-  /** Run a streaming DF to completion into a memory sink; return the
-    * sink table (the query's final state). */
-  private def viaMemorySink(s: SparkSession, df: DataFrame, mode: String,
-      qname: String): DataFrame = {
-    s.catalog.dropTempView(qname)
-    val query = df.writeStream.format("memory").queryName(qname)
-      .outputMode(mode).start()
-    query.processAllAvailable()
-    query.stop()
-    s.table(qname)
-  }
 
   private val H6 = 6 * 3600 * 1000L  // 6h in ms
   private val H2 = 2 * 3600 * 1000L
@@ -188,14 +152,14 @@ object StreamQueries extends QueryModule {
       sentinel.addData((-1L, java.sql.Timestamp.valueOf("2030-01-01 00:00:00"), -1L, "view"))
       val gap = when(col("event_type") === "error", "10 minutes")
         .otherwise("30 minutes")
-      val agg = streamEvents(s, dir)
+      val agg = Tables.stream(s, dir, "events")
         .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
         .unionByName(sentinel.toDF().toDF("event_id", "ts", "user_id", "event_type"))
         .withWatermark("ts", "1 minute")
         .groupBy(session_window(col("ts"), gap), col("user_id"))
         .agg(count(lit(1)).as("n"))
         .select(col("user_id"), col("session_window.start").as("w_start"), col("n"))
-      viaMemorySink(s, agg, "append", "graft_stream_sess_dyn")
+      Drain.toMemory(agg, "graft_stream_sess_dyn", "append")._1
         .filter(col("user_id") =!= -1L)
         .orderBy(col("user_id"), col("w_start"))
     },
@@ -208,12 +172,12 @@ object StreamQueries extends QueryModule {
          |FROM events
          |GROUP BY 1, 2
          |ORDER BY w_start, event_type""") { (s, dir) =>
-      val agg = streamEvents(s, dir)
+      val agg = Tables.stream(s, dir, "events")
         .withWatermark("ts", "1 hour")
         .groupBy(window(col("ts"), "6 hours"), col("event_type"))
         .agg(count(lit(1)).as("n"))
         .select(col("window.start").as("w_start"), col("event_type"), col("n"))
-      viaMemorySink(s, agg, "complete", "graft_stream_tumble")
+      Drain.toMemory(agg, "graft_stream_tumble", "complete")._1
         .orderBy(col("w_start"), col("event_type"))
     },
 
@@ -221,11 +185,11 @@ object StreamQueries extends QueryModule {
     q("q44_stream_dedup",
       """SELECT DISTINCT user_id, event_type FROM events
         |ORDER BY user_id, event_type""") { (s, dir) =>
-      val dedup = streamEvents(s, dir)
+      val dedup = Tables.stream(s, dir, "events")
         .withWatermark("ts", "1 hour")
         .select(col("user_id"), col("event_type"))
         .dropDuplicates("user_id", "event_type")
-      viaMemorySink(s, dedup, "append", "graft_stream_dedup")
+      Drain.toMemory(dedup, "graft_stream_dedup", "append")._1
         .orderBy(col("user_id"), col("event_type"))
     },
 
@@ -237,7 +201,7 @@ object StreamQueries extends QueryModule {
         |  count(DISTINCT user_id) AS n_users
         |FROM events GROUP BY event_type
         |ORDER BY event_type""") { (s, dir) =>
-      val agg = streamEvents(s, dir)
+      val agg = Tables.stream(s, dir, "events")
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"),
           moneyOut(sum(col("value").cast(DecimalType(18, 4)))).as("sum_value"),
@@ -245,7 +209,7 @@ object StreamQueries extends QueryModule {
       // exact count(distinct) is unsupported on streams; run approx in
       // the stream (scale path) and recompute exact on the final state
       // micro-table for oracle parity
-      val fin = viaMemorySink(s, agg, "complete", "graft_stream_agg")
+      val fin = Drain.toMemory(agg, "graft_stream_agg", "complete")._1
       val exact = Tables.t(s, dir, "events")
         .groupBy(col("event_type"))
         .agg(countDistinct(col("user_id")).as("n_users"))
@@ -297,11 +261,11 @@ object StreamQueries extends QueryModule {
         |FROM events JOIN nation ON CAST(user_id % 25 AS INTEGER) = n_nationkey
         |GROUP BY n_name ORDER BY n_name""") { (s, dir) =>
       val dim = Tables.t(s, dir, "nation")
-      val joined = streamEvents(s, dir)
+      val joined = Tables.stream(s, dir, "events")
         .withColumn("nk", (col("user_id") % 25).cast("int"))
         .join(broadcast(dim), col("nk") === col("n_nationkey"))
         .groupBy(col("n_name")).agg(count(lit(1)).as("n"))
-      viaMemorySink(s, joined, "complete", "graft_stream_static")
+      Drain.toMemory(joined, "graft_stream_static", "complete")._1
         .orderBy(col("n_name"))
     },
 
@@ -335,17 +299,17 @@ object StreamQueries extends QueryModule {
         | AND p.event_type = 'purchase' AND e.event_type = 'error'
         | AND e.ts BETWEEN p.ts - INTERVAL 30 MINUTE AND p.ts
         |ORDER BY purchase_id, error_id""") { (s, dir) =>
-      val p = streamEvents(s, dir).filter(col("event_type") === "purchase")
+      val p = Tables.stream(s, dir, "events").filter(col("event_type") === "purchase")
         .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"), col("ts").as("p_ts"))
         .withWatermark("p_ts", "1 hour")
-      val e = streamEvents(s, dir).filter(col("event_type") === "error")
+      val e = Tables.stream(s, dir, "events").filter(col("event_type") === "error")
         .select(col("event_id").as("error_id"), col("user_id").as("e_user"), col("ts").as("e_ts"))
         .withWatermark("e_ts", "1 hour")
       val joined = p.join(e, col("p_user") === col("e_user")
           && col("e_ts") >= col("p_ts") - expr("INTERVAL 30 MINUTES")
           && col("e_ts") <= col("p_ts"))
         .select(col("purchase_id"), col("error_id"))
-      viaMemorySink(s, joined, "append", "graft_stream_ij")
+      Drain.toMemory(joined, "graft_stream_ij", "append")._1
         .orderBy(col("purchase_id"), col("error_id"))
     },
 
@@ -364,16 +328,14 @@ object StreamQueries extends QueryModule {
       val outPath = "/root/repo/target/roundtrip/q76_over"
       new java.io.File(outPath).delete()
       val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-      val query = streamEvents(s, dir).writeStream.foreachBatch {
+      Drain(Tables.stream(s, dir, "events").writeStream.foreachBatch {
         (df: DataFrame, _: Long) =>
           df.withColumn("rn", row_number().over(w))
             .withColumn("running_n",
               count(lit(1)).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
             .select(col("event_id"), col("rn"), col("running_n"))
             .write.mode("overwrite").parquet(outPath)
-      }.start()
-      query.processAllAvailable()
-      query.stop()
+      })
       s.read.parquet(outPath).orderBy(col("event_id"))
     },
 
@@ -395,7 +357,7 @@ object StreamQueries extends QueryModule {
       sentinel.addData((-1L, java.sql.Timestamp.valueOf("2030-01-01 00:00:00"), -1L))
       val sentinelDf = sentinel.toDF().toDF("event_id", "ts", "user_id")
 
-      val p = streamEvents(s, dir).filter(col("event_type") === "purchase")
+      val p = Tables.stream(s, dir, "events").filter(col("event_type") === "purchase")
         .select(col("event_id"), col("ts"), col("user_id"))
         .unionByName(sentinelDf)
         .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"), col("ts").as("p_ts"))
@@ -405,7 +367,7 @@ object StreamQueries extends QueryModule {
       val sentinelR = org.apache.spark.sql.execution.streaming.runtime
         .MemoryStream[(Long, java.sql.Timestamp, Long)]
       sentinelR.addData((-1L, java.sql.Timestamp.valueOf("2030-01-01 00:00:00"), -1L))
-      val e = streamEvents(s, dir).filter(col("event_type") === "error")
+      val e = Tables.stream(s, dir, "events").filter(col("event_type") === "error")
         .select(col("event_id"), col("ts"), col("user_id"))
         .unionByName(sentinelR.toDF().toDF("event_id", "ts", "user_id"))
         .select(col("event_id").as("error_id"), col("user_id").as("e_user"), col("ts").as("e_ts"))
@@ -416,7 +378,7 @@ object StreamQueries extends QueryModule {
             && col("e_ts") <= col("p_ts"),
           "left_outer")
         .select(col("purchase_id"), col("error_id"))
-      viaMemorySink(s, joined, "append", "graft_stream_oj")
+      Drain.toMemory(joined, "graft_stream_oj", "append")._1
         .filter(col("purchase_id") =!= -1L)
         .orderBy(col("purchase_id"), col("error_id").asc_nulls_first)
     },
@@ -442,7 +404,7 @@ object StreamQueries extends QueryModule {
       sentinel.addData((-1L, java.sql.Timestamp.valueOf("2030-01-01 00:00:00"),
         -1L, "noise"))
       type Ev = (Long, java.sql.Timestamp, Long, String)
-      val ev: Dataset[Ev] = streamEvents(s, dir)
+      val ev: Dataset[Ev] = Tables.stream(s, dir, "events")
         .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
         .unionByName(sentinel.toDF()
           .toDF("event_id", "ts", "user_id", "event_type"))
@@ -459,8 +421,8 @@ object StreamQueries extends QueryModule {
       } { (uid, partial) =>
         (uid, partial.stages("view").head._1, true)
       }
-      viaMemorySink(s, tagged.toDF("user_id", "view_id", "timed_out"),
-          "append", "graft_cep_timeouts")
+      Drain.toMemory(tagged.toDF("user_id", "view_id", "timed_out"),
+          "graft_cep_timeouts", "append")._1
         .filter(col("timed_out") && col("user_id") >= 0)
         .select(col("user_id"), col("view_id"))
         .orderBy(col("view_id"))
@@ -489,7 +451,7 @@ object StreamQueries extends QueryModule {
         .MemoryStream[(Long, java.sql.Timestamp, Long, String)]
       sentinel.addData((-1L, java.sql.Timestamp.valueOf("2030-01-01 00:00:00"),
         -1L, "noise"))
-      val ev = streamEvents(s, dir)
+      val ev = Tables.stream(s, dir, "events")
         .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
         .unionByName(sentinel.toDF()
           .toDF("event_id", "ts", "user_id", "event_type"))
@@ -502,7 +464,7 @@ object StreamQueries extends QueryModule {
           |WITHIN INTERVAL '1' HOUR
           |DEFINE A AS A.event_type = 'view', B AS B.event_type = 'purchase'"""
           .stripMargin)
-      viaMemorySink(s, matched, "append", "graft_match_stream")
+      Drain.toMemory(matched, "graft_match_stream", "append")._1
         .filter(col("user_id") >= 0)
         .orderBy(col("view_id"))
     },
@@ -531,7 +493,7 @@ object StreamQueries extends QueryModule {
         .MemoryStream[(Long, java.sql.Timestamp, Long, String)]
       sentinel.addData((-1L, java.sql.Timestamp.valueOf("2030-01-01 00:00:00"),
         -1L, "noise"))
-      val ev = streamEvents(s, dir)
+      val ev = Tables.stream(s, dir, "events")
         .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
         .unionByName(sentinel.toDF()
           .toDF("event_id", "ts", "user_id", "event_type"))
@@ -545,7 +507,7 @@ object StreamQueries extends QueryModule {
           |WITHIN INTERVAL '1' DAY
           |DEFINE V AS V.event_type = 'view', C AS C.event_type = 'click',
           |       W AS W.event_type = 'view'""".stripMargin)
-      viaMemorySink(s, matched, "append", "graft_match_skipto_stream")
+      Drain.toMemory(matched, "graft_match_skipto_stream", "append")._1
         .filter(col("user_id") >= 0)
         .orderBy(col("user_id"), col("start_id"))
     },
@@ -570,7 +532,7 @@ object StreamQueries extends QueryModule {
         .MemoryStream[(Long, java.sql.Timestamp, Long, String, Double)]
       sentinel.addData((-1L, java.sql.Timestamp.valueOf("2030-01-01 00:00:00"),
         -1L, "signup", 0.0))
-      val ev = streamEvents(s, dir)
+      val ev = Tables.stream(s, dir, "events")
         .filter(col("event_type").isin("signup", "purchase"))
         .select(col("event_id"), col("ts"), col("user_id"),
           col("event_type"), col("value"))
@@ -588,7 +550,7 @@ object StreamQueries extends QueryModule {
           .select(col("user_id"), col("ts"), col("event_id")))
         .joinLateralAsOf(rates, "ts", "user_id", "event_id", "0 seconds")
         .toDF
-      viaMemorySink(s, joined, "append", "graft_temporal_join")
+      Drain.toMemory(joined, "graft_temporal_join", "append")._1
         .filter(col("event_id") >= 0)
         .select(col("event_id"), col("value").as("rate"))
         .orderBy(col("event_id"))
@@ -612,7 +574,7 @@ object StreamQueries extends QueryModule {
         .MemoryStream[(Long, java.sql.Timestamp, Long, Double)]
       sentinel.addData((-1L, java.sql.Timestamp.valueOf("2030-01-01 00:00:00"),
         -1L, 0.0))
-      val ev = streamEvents(s, dir)
+      val ev = Tables.stream(s, dir, "events")
         .select(col("event_id"), col("ts"), col("user_id"), col("value"))
         .unionByName(sentinel.toDF().toDF("event_id", "ts", "user_id", "value"))
         .withWatermark("ts", "0 seconds")
@@ -622,7 +584,7 @@ object StreamQueries extends QueryModule {
         .as[RowTimeOver.OvEvent]
       val summed = RowTimeOver.boundedRangeSum(ev, 3600L * 1000000L)
         .toDF("event_id", "sum_raw")
-      viaMemorySink(s, summed, "append", "graft_over_rowtime")
+      Drain.toMemory(summed, "graft_over_rowtime", "append")._1
         .filter(col("event_id") >= 0)
         .select(col("event_id"),
           moneyOut(col("sum_raw").cast(DecimalType(38, 4))).as("run_sum"))
@@ -646,7 +608,7 @@ object StreamQueries extends QueryModule {
         .MemoryStream[(Long, java.sql.Timestamp, Long, Double)]
       sentinel.addData((-1L, java.sql.Timestamp.valueOf("2030-01-01 00:00:00"),
         -1L, 0.0))
-      val ev = streamEvents(s, dir)
+      val ev = Tables.stream(s, dir, "events")
         .select(col("event_id"), col("ts"), col("user_id"), col("value"))
         .unionByName(sentinel.toDF().toDF("event_id", "ts", "user_id", "value"))
         .withWatermark("ts", "0 seconds")
@@ -656,7 +618,7 @@ object StreamQueries extends QueryModule {
         .as[RowTimeOver.OvEvent]
       val summed = RowTimeOver.boundedRowsSum(ev, 3)
         .toDF("event_id", "sum_raw")
-      viaMemorySink(s, summed, "append", "graft_over_rows")
+      Drain.toMemory(summed, "graft_over_rows", "append")._1
         .filter(col("event_id") >= 0)
         .select(col("event_id"),
           moneyOut(col("sum_raw").cast(DecimalType(38, 4))).as("run_sum"))
@@ -678,14 +640,14 @@ object StreamQueries extends QueryModule {
         |WHERE e.event_type <> 'click' AND e.ts <= m.mt
         |ORDER BY e.event_id""") { (s, dir) =>
       import s.implicits._
-      val ev = streamEvents(s, dir)
+      val ev = Tables.stream(s, dir, "events")
         .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
         .as[(Long, java.sql.Timestamp, Long, String)]
       val sealedEv = new graft.api.StreamOps(ev)
         .keyBy(_._1)
         .punctuatedSeal(_._2.getTime, _._3)(_._4 == "click")
         .map(_._3)
-      viaMemorySink(s, sealedEv.toDF("event_id"), "append", "graft_punct_seal")
+      Drain.toMemory(sealedEv.toDF("event_id"), "graft_punct_seal", "append")._1
         .orderBy(col("event_id"))
     },
 
@@ -709,13 +671,13 @@ object StreamQueries extends QueryModule {
         m.addData((-1L, java.sql.Timestamp.valueOf("2030-01-01 00:00:00"), -1L))
         m.toDF().toDF("event_id", "ts", "user_id")
       }
-      val v = streamEvents(s, dir).filter(col("event_type") === "view")
+      val v = Tables.stream(s, dir, "events").filter(col("event_type") === "view")
         .select(col("event_id"), col("ts"), col("user_id"))
         .unionByName(sentinel())
         .withWatermark("ts", "1 minute")
         .select(col("event_id").as("view_id"), col("user_id").as("v_user"),
           window(col("ts"), "1 hour").as("vw"))
-      val p = streamEvents(s, dir).filter(col("event_type") === "purchase")
+      val p = Tables.stream(s, dir, "events").filter(col("event_type") === "purchase")
         .select(col("event_id"), col("ts"), col("user_id"))
         .unionByName(sentinel())
         .withWatermark("ts", "1 minute")
@@ -724,7 +686,7 @@ object StreamQueries extends QueryModule {
       val joined = v.join(p,
           col("v_user") === col("p_user") && col("vw") === col("pw"))
         .select(col("view_id"), col("purchase_id"))
-      viaMemorySink(s, joined, "append", "graft_window_join")
+      Drain.toMemory(joined, "graft_window_join", "append")._1
         .filter(col("view_id") =!= -1L)
         .orderBy(col("view_id"), col("purchase_id"))
     },
@@ -748,14 +710,14 @@ object StreamQueries extends QueryModule {
       val sentinel = org.apache.spark.sql.execution.streaming.runtime
         .MemoryStream[(Long, java.sql.Timestamp, Long)]
       sentinel.addData((-1L, java.sql.Timestamp.valueOf("2030-01-01 00:00:00"), -1L))
-      val agg = streamEvents(s, dir)
+      val agg = Tables.stream(s, dir, "events")
         .select(col("event_id"), col("ts"), col("user_id"))
         .unionByName(sentinel.toDF().toDF("event_id", "ts", "user_id"))
         .withWatermark("ts", "1 minute")
         .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
         .agg(count(lit(1)).as("n"))
         .select(col("user_id"), col("session_window.start").as("w_start"), col("n"))
-      viaMemorySink(s, agg, "append", "graft_stream_sess")
+      Drain.toMemory(agg, "graft_stream_sess", "append")._1
         .filter(col("user_id") =!= -1L)
         .orderBy(col("user_id"), col("w_start"))
     },
@@ -786,7 +748,7 @@ object StreamQueries extends QueryModule {
       val sentinel = org.apache.spark.sql.execution.streaming.runtime
         .MemoryStream[(Long, java.sql.Timestamp, Double)]
       sentinel.addData((-1L, java.sql.Timestamp.valueOf("2030-01-01 00:00:00"), 0.0))
-      val ev = streamEvents(s, dir)
+      val ev = Tables.stream(s, dir, "events")
         .select(col("user_id"), col("ts"), round(col("value") * 10000).as("c"))
         .unionByName(sentinel.toDF().toDF("user_id", "ts", "c"))
         .withWatermark("ts", "1 minute")
@@ -795,7 +757,7 @@ object StreamQueries extends QueryModule {
         ev, windowMillis = 6 * 3600 * 1000L,
         evictor = graft.streaming.Triggers.CountEvictor(20))
       val df = fired.toDF("user_id", "w_start", "n", "sum_cents", "is_final")
-      viaMemorySink(s, df, "append", "graft_trigger_final")
+      Drain.toMemory(df, "graft_trigger_final", "append")._1
         .filter(col("is_final") && col("user_id") =!= -1L)
         .select(col("user_id"), col("w_start"), col("n"),
           (col("sum_cents") / 10000).as("sum_value"))
@@ -816,7 +778,7 @@ object StreamQueries extends QueryModule {
         |ORDER BY mx.user_id""") { (s, dir) =>
       // event values are 2-dp, so extreme-value ties are common: break
       // them deterministically by smallest event_id via struct ordering
-      val agg = streamEvents(s, dir)
+      val agg = Tables.stream(s, dir, "events")
         .select(col("user_id"), col("event_id"), round(col("value"), 6).as("v"))
         .groupBy(col("user_id"))
         .agg(
@@ -824,7 +786,7 @@ object StreamQueries extends QueryModule {
           max(col("v")).as("max_value"),
           min_by(col("event_id"), struct(col("v"), col("event_id"))).as("min_event"),
           min(col("v")).as("min_value"))
-      viaMemorySink(s, agg, "complete", "graft_stream_minmax")
+      Drain.toMemory(agg, "graft_stream_minmax", "complete")._1
         .orderBy(col("user_id"))
     },
 
@@ -837,13 +799,11 @@ object StreamQueries extends QueryModule {
       val chk = "/root/repo/target/roundtrip/q85_chk"
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(chk))
-      val query = streamEvents(s, dir)
+      Drain(Tables.stream(s, dir, "events")
         .select(col("event_id"), col("event_type"))
         .writeStream.format("parquet")
         .option("path", out).option("checkpointLocation", chk)
-        .outputMode("append").start()
-      query.processAllAvailable()
-      query.stop()
+        .outputMode("append"))
       s.read.parquet(out)
         .groupBy(col("event_type")).agg(count(lit(1)).as("n"))
         .orderBy(col("event_type"))
@@ -873,7 +833,7 @@ object StreamQueries extends QueryModule {
       val sentinel = org.apache.spark.sql.execution.streaming.runtime
         .MemoryStream[(Long, java.sql.Timestamp)]
       sentinel.addData((-1L, java.sql.Timestamp.valueOf("2030-01-01 00:00:00")))
-      val base = streamEvents(s, dir)
+      val base = Tables.stream(s, dir, "events")
       def side(t: String) = base.filter(col("event_type") === t)
         .select(col("user_id").cast("long"), col("ts"))
       val left = new StreamOps(
@@ -885,8 +845,8 @@ object StreamQueries extends QueryModule {
         (uid, ws, views, purchases) =>
           Iterator((uid, ws, views.size.toLong, purchases.size.toLong))
       }
-      viaMemorySink(s, cg.toDF("user_id", "win", "views", "purchases"),
-          "append", "graft_stream_cogroup")
+      Drain.toMemory(cg.toDF("user_id", "win", "views", "purchases"),
+          "graft_stream_cogroup", "append")._1
         .filter(col("user_id") >= 0)
         .orderBy(col("user_id"), col("win"))
     },
@@ -904,14 +864,14 @@ object StreamQueries extends QueryModule {
       import s.implicits._
       import graft.api.StreamOps
       type KV = (Long, Long, Long) // (user_id, event_id max, count)
-      val ev = streamEvents(s, dir)
+      val ev = Tables.stream(s, dir, "events")
         .select(col("user_id").cast("long"), col("event_id").cast("long"),
           lit(1L))
         .as[(Long, Long, Long)]
       val reduced = new StreamOps(ev).keyBy(_._1)
         .reduce((a, b) => (a._1, math.max(a._2, b._2), a._3 + b._3))
-      viaMemorySink(s, reduced.toDF("user_id", "kv"),
-          "complete", "graft_stream_keyed_reduce")
+      Drain.toMemory(reduced.toDF("user_id", "kv"),
+          "graft_stream_keyed_reduce", "complete")._1
         .select(col("user_id"), col("kv._2").as("max_event"),
           col("kv._3").as("n"))
         .orderBy(col("user_id"))
@@ -929,15 +889,16 @@ object StreamQueries extends QueryModule {
         |  max(ts) AS last_ts
         |FROM events GROUP BY user_id
         |ORDER BY user_id""") { (s, dir) =>
-      val state = streamEvents(s, dir)
+      val state = Tables.stream(s, dir, "events")
         .groupBy(col("user_id"))
         .agg(count(lit(1)).as("n"),
           moneyOut(sum(col("value").cast(DecimalType(18, 4)))).as("sum_value"),
           max(col("ts")).as("last_ts"))
       val store = QueryableState.asQueryableState(s, "graft_qstate", state)
       store.processAllAvailable()
-      val out = store.snapshot().orderBy(col("user_id")).cache()
-      out.count() // materialize before the serving query stops
+      // materialize before the serving query stops (eager, and not
+      // registered with the session's CacheManager)
+      val out = store.snapshot().orderBy(col("user_id")).localCheckpoint()
       store.stop()
       out
     }

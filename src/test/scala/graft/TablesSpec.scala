@@ -38,6 +38,33 @@ class TablesSpec extends SparkSpec {
     assert(va == vb, "both generations must yield identical UTC instants")
   }
 
+  test("Tables.stream reads each events generation and layout like Tables.t") {
+    import graft.streaming.Drain
+    def micros(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+      df.select(col("event_id"), unix_micros(col("ts"))).as[(Long, Long)].collect().toMap
+    // a single-file copy of a written events directory: the layout of
+    // the sf testdata, read by the file source through a glob
+    def singleFile(from: String): String = {
+      val to = java.nio.file.Files.createTempDirectory("graft_ev_file")
+      val part = new java.io.File(s"$from/events.parquet").listFiles()
+        .filter(_.getName.endsWith(".parquet")).head
+      java.nio.file.Files.copy(part.toPath, to.resolve("events.parquet"))
+      to.toString
+    }
+    for (ntz <- Seq(true, false)) {
+      val dir = java.nio.file.Files.createTempDirectory("graft_ev_stream").toString
+      writeEvents(dir, ntz)
+      spark.read.parquet(s"$dir/events.parquet").coalesce(1)
+        .write.parquet(s"$dir/one/events.parquet")
+      for (d <- Seq(dir, singleFile(s"$dir/one"))) {
+        val (out, _) = Drain.toMemory(Tables.stream(spark, d, "events"),
+          "graft_tables_stream_spec", "append")
+        assert(out.schema("ts").dataType == TimestampType, s"ntz=$ntz $d")
+        assert(micros(out) == micros(Tables.t(spark, d, "events")), s"ntz=$ntz $d")
+      }
+    }
+  }
+
   test("the real testdata events load as TimestampType at every sf") {
     for (sf <- Seq("0.001", "0.01", "0.1")) {
       val t = Tables.t(spark, s"/root/testdata/sf$sf", "events")

@@ -53,13 +53,13 @@ class DedupSpec extends SparkSpec {
     ).toDF("doc_id", "text").coalesce(1)
       .write.parquet(dir + "/documents.parquet")
 
-    val global = StreamingDedup.minhashDedup(spark, dir)
+    val global = StreamingDedup.minhashDedup(spark, dir)._1
       .as[(Long, Long)].collect().toSet
     assert(global == Set((200L, 1L), (211L, 210L)))
 
     // 60s horizon: doc 1 has aged out when 200 arrives; the adjacent
     // pair still dedups
-    val windowed = StreamingDedup.minhashDedup(spark, dir, horizonSeconds = Some(60L))
+    val windowed = StreamingDedup.minhashDedup(spark, dir, horizonSeconds = Some(60L))._1
       .as[(Long, Long)].collect().toSet
     assert(windowed == Set((211L, 210L)))
   }
@@ -74,20 +74,26 @@ class DedupSpec extends SparkSpec {
       .toDF("vec_id", "label", "embedding").coalesce(1)
       .write.parquet(dir + "/embeddings.parquet")
 
-    val global = StreamingDedup.embeddingNearDup(spark, dir, threshold = 0.9)
-      .as[(Long, Long)].collect().toSet
+    // state rows (= live blocks) of the drained stream's final progress
+    def stateRows(p: Option[org.apache.spark.sql.streaming.StreamingQueryProgress]): Long =
+      p.flatMap(_.stateOperators.headOption.map(_.numRowsTotal)).getOrElse(-1L)
+
+    val (globalDf, globalProgress) =
+      StreamingDedup.embeddingNearDup(spark, dir, threshold = 0.9)
+    val global = globalDf.as[(Long, Long)].collect().toSet
     assert(global == Set((300L, 1L), (311L, 310L)))
     // no horizon → no eviction: all label blocks stay live
-    assert(StreamingDedup.lastStateRows >= 2,
-      s"expected live blocks without a horizon, saw ${StreamingDedup.lastStateRows}")
+    assert(stateRows(globalProgress) >= 2,
+      s"expected live blocks without a horizon, saw ${stateRows(globalProgress)}")
 
-    val windowed = StreamingDedup.embeddingNearDup(spark, dir, threshold = 0.9,
-      horizonSeconds = Some(60L)).as[(Long, Long)].collect().toSet
+    val (windowedDf, windowedProgress) = StreamingDedup.embeddingNearDup(spark, dir,
+      threshold = 0.9, horizonSeconds = Some(60L))
+    val windowed = windowedDf.as[(Long, Long)].collect().toSet
     assert(windowed == Set((311L, 310L)))
     // horizon eviction removes quiescent blocks once the watermark
     // passes their members; only the sentinel's pending block survives
-    assert(StreamingDedup.lastStateRows <= 1,
-      s"horizon left ${StreamingDedup.lastStateRows} state rows")
+    assert(stateRows(windowedProgress) <= 1,
+      s"horizon left ${stateRows(windowedProgress)} state rows")
   }
 
   test("sign-bucket blocking finds cross-label near-dups label blocking misses") {
@@ -99,12 +105,12 @@ class DedupSpec extends SparkSpec {
       .toDF("vec_id", "label", "embedding").coalesce(1)
       .write.parquet(dir + "/embeddings.parquet")
 
-    val byLabel = StreamingDedup.embeddingNearDup(spark, dir, threshold = 0.9)
+    val byLabel = StreamingDedup.embeddingNearDup(spark, dir, threshold = 0.9)._1
       .as[(Long, Long)].collect().toSet
     assert(byLabel.isEmpty)
 
     val bySign = StreamingDedup.embeddingNearDup(spark, dir, threshold = 0.9,
-      signTables = 4, signBits = 2).as[(Long, Long)].collect().toSet
+      signTables = 4, signBits = 2)._1.as[(Long, Long)].collect().toSet
     assert(bySign == Set((2L, 1L)))
   }
 

@@ -132,13 +132,13 @@ class MultimodalSpec extends SparkSpec {
     ).toDF("doc_id", "text").coalesce(1)
       .write.parquet(dir + "/documents.parquet")
 
-    val global = StreamingDedup.phashDedup(spark, dir)
+    val global = StreamingDedup.phashDedup(spark, dir)._1
       .as[(Long, Long)].collect().toSet
     assert(global == Set((200L, 1L), (211L, 210L)))
 
     // 60s horizon: doc 1 has aged out when 200 arrives; the adjacent
     // pair still dedups
-    val windowed = StreamingDedup.phashDedup(spark, dir, horizonSeconds = Some(60L))
+    val windowed = StreamingDedup.phashDedup(spark, dir, horizonSeconds = Some(60L))._1
       .as[(Long, Long)].collect().toSet
     assert(windowed == Set((211L, 210L)))
   }

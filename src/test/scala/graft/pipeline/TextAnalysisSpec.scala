@@ -82,7 +82,9 @@ class TextAnalysisSpec extends SparkSpec {
 
   test("q158 append-mode ingest decontamination keeps bounded state") {
     import graft.Registry
-    val (streamDf, stateRows) = TextAnalysis.decontamStream(spark, sf)
+    val (streamDf, progress) = TextAnalysis.decontamStream(spark, sf)
+    val stateRows = progress.flatMap(_.stateOperators.headOption.map(_.numRowsTotal))
+      .getOrElse(-1L)
     val q155 = Registry.all.find(_.name == "q155_decontamination").get
     val a = streamDf.collect().map(_.toSeq).toSeq
     val b = q155.fn(spark, sf).collect().map(_.toSeq).toSeq
@@ -159,7 +161,9 @@ class TextAnalysisSpec extends SparkSpec {
   }
 
   test("q193 sealed-window trending keeps bounded state and a windows×3 sink") {
-    val (out, stateRows) = TextAnalysis.trendingStream(spark, sf)
+    val (out, progress) = TextAnalysis.trendingStream(spark, sf)
+    val stateRows = progress.map(_.stateOperators.toSeq.map(_.numRowsTotal))
+      .getOrElse(Seq.empty)
     val rows = out.collect()
     // the sink table holds ONE row per sealed window with a ≤3-element
     // top-k array — the windows × 3 bound (the r11 complete-mode form

@@ -36,6 +36,16 @@ class QueryableStateSpec extends SparkSpec {
     } finally store.stop()
   }
 
+  test("q168 leaves no cached plan behind once its serving query stops") {
+    val cache = spark.sharedState.cacheManager
+    spark.catalog.clearCache()
+    val q168 = graft.Registry.all.find(_.name == "q168_queryable_state").get
+    assert(q168.fn(spark, sf).count() > 0)
+    // a cached snapshot would stay pinned for every later query of the
+    // session
+    assert(cache.isEmpty, "q168 registered its snapshot with the CacheManager")
+  }
+
   test("canonKey gives array-typed keys structural equality") {
     // Array[Byte] (a binary key column) compares by reference — the
     // duplicate-key early-flush must see repeats by VALUE

@@ -120,8 +120,6 @@ object QuantGuard {
     "pipeline/Quality.scala#iterCtes" -> // oracle epoch CTEs
       Covered(Set("q212_grad_floor_int")),
     "pipeline/Quality.scala#quantMargins" -> infra,
-    "pipeline/Quality.scala#duckH32" -> pow2,
-    "pipeline/Quality.scala#duckH52" -> pow2,
     // ---- teacher sigmoid + retrieval family (TextAnalysis) ----------
     "pipeline/TextAnalysis.scala#qualityRaw" ->
       Covered(Set("teacher_sigmoid_half")),
@@ -151,7 +149,6 @@ object QuantGuard {
       Covered(Set("q184_idf_ln_half", "q184_score_half")),
     "pipeline/TextAnalysis.scala#tfidfRaw" ->
       Covered(Set("q184_idf_ln_half", "q184_score_half")),
-    "pipeline/TextAnalysis.scala#duckHash" -> pow2,
     "pipeline/TextAnalysis.scala#cmsEstimates" -> pow2,
     "pipeline/TextAnalysis.scala#q125_hash_split" -> pow2,
     "pipeline/TextAnalysis.scala#q159_quota_sample" -> pow2,
@@ -159,11 +156,10 @@ object QuantGuard {
     "pipeline/TextAnalysis.scala#q181_token_budget_mix" -> pow2,
     "pipeline/TextAnalysis.scala#q199_temperature_mix" -> pow2,
     // ---- hash devices & power-of-two signatures ---------------------
-    "pipeline/CorpusStats.scala#duckH32" -> pow2,
-    "pipeline/CorpusStats.scala#duckH52" -> pow2,
     "pipeline/CorpusStats.scala#q201_stratified_sample" -> pow2,
     "pipeline/CorpusStats.scala#q204_sif_embeddings" -> pow2,
-    "pipeline/Dedup.scala#duckHash" -> pow2,
+    "pipeline/Dedup.scala#duckH32" -> pow2,
+    "pipeline/Dedup.scala#duckH52" -> pow2,
     "pipeline/Dedup.scala#duckBandHash" -> pow2,
     "pipeline/Dedup.scala#q138_curation_keeplist" -> pow2,
     "pipeline/Dedup.scala#q53_simhash" -> pow2,

@@ -3,11 +3,10 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{Block, CodegenContext, EmptyBlock, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType}
 
 /** Fused vector arithmetic for the embedding family (ANN search,
   * near-dup scoring, k-means assignment). The composite
@@ -76,78 +75,35 @@ object VecMath {
 
   /** The engine's one exact argmin: the position in `cents` of the
     * vector with the smallest (round(Σ (aᵢ−cᵢ)², 6), id) — ties to the
-    * lowest id, doubles ordered as Spark orders them — over every
-    * position, or over the positions listed in `cands` (null entries
-    * skipped). -1 when there is no candidate. */
+    * lowest id, doubles ordered as Spark orders them. -1 when `cents`
+    * is empty. */
   def nearestIndex(a: ArrayData, cents: Array[Array[Double]], ids: Array[Long],
-      cands: ArrayData, aF: Boolean): Int = {
+      aF: Boolean): Int = {
     val n = a.numElements()
-    val m = if (cands == null) cents.length else cands.numElements()
     var best = -1
     var bd = 0.0
-    var k = 0
-    while (k < m) {
-      if (cands == null || !cands.isNullAt(k)) {
-        val c = if (cands == null) k else cands.getInt(k)
-        val cv = cents(c)
-        if (cv.length != n)
-          throw new IllegalArgumentException(
-            s"vec_nearest_index: length mismatch $n vs ${cv.length}")
-        var acc = 0.0
-        var i = 0
-        while (i < n) {
-          if (a.isNullAt(i))
-            throw new IllegalArgumentException(s"vec_nearest_index: null element at $i")
-          val x = if (aF) a.getFloat(i).toDouble else a.getDouble(i)
-          val d = x - cv(i)
-          acc += d * d
-          i += 1
-        }
-        val r = round6(acc)
-        val cmp = if (best < 0) -1 else SQLOrderingUtil.compareDoubles(r, bd)
-        if (cmp < 0 || (cmp == 0 && ids(c) < ids(best))) { bd = r; best = c }
-      }
-      k += 1
-    }
-    best
-  }
-
-  /** Indices of the p nearest centroids, ascending by (dist, index) —
-    * the IVF multi-probe routing primitive. p is small (≤ centroids),
-    * so selection is a bounded insertion pass. */
-  def nearestIndices(a: ArrayData, cents: Array[Array[Double]], p: Int,
-      aF: Boolean): ArrayData = {
-    val n = a.numElements()
-    val m = math.min(p, cents.length)
-    val bi = new Array[Int](m)
-    val bdArr = new Array[Double](m)
-    java.util.Arrays.fill(bdArr, Double.MaxValue)
     var c = 0
     while (c < cents.length) {
       val cv = cents(c)
       if (cv.length != n)
         throw new IllegalArgumentException(
-          s"vec_nearest_indices: length mismatch $n vs ${cv.length}")
-      val worst = bdArr(m - 1)
+          s"vec_nearest_index: length mismatch $n vs ${cv.length}")
       var acc = 0.0
       var i = 0
-      while (i < n && acc < worst) { // can't displace once past the worst kept
+      while (i < n) {
+        if (a.isNullAt(i))
+          throw new IllegalArgumentException(s"vec_nearest_index: null element at $i")
         val x = if (aF) a.getFloat(i).toDouble else a.getDouble(i)
         val d = x - cv(i)
         acc += d * d
         i += 1
       }
-      if (acc < worst) { // strict < → ties keep the earlier (lower) index
-        var j = m - 1
-        while (j > 0 && acc < bdArr(j - 1)) {
-          bdArr(j) = bdArr(j - 1); bi(j) = bi(j - 1); j -= 1
-        }
-        bdArr(j) = acc; bi(j) = c
-      }
+      val r = round6(acc)
+      val cmp = if (best < 0) -1 else SQLOrderingUtil.compareDoubles(r, bd)
+      if (cmp < 0 || (cmp == 0 && ids(c) < ids(best))) { bd = r; best = c }
       c += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      bi.map(i => Int.box(i): AnyRef))
+    best
   }
 
   import org.apache.spark.sql.graftbridge.Bridge
@@ -161,19 +117,10 @@ object VecMath {
     * (round(vec_sq_dist, 6), id) — ties to the lowest id, the contract
     * every DuckDB oracle replays. `model` is a driver-collected
     * (id, vector) table carried by reference into generated code, so
-    * plan size does not grow with k; `candidates` (array<int> of
-    * positions in `model`) restricts the scan per row. NULL when the
-    * candidate set is empty. A pure map, legal in a streaming
-    * projection. */
-  def vec_nearest_index(a: Column, model: Seq[(Long, Seq[Double])],
-      candidates: Option[Column] = None): Column =
-    Bridge.column(VecNearestIndex(Bridge.expression(a), model,
-      candidates.map(Bridge.expression)))
-
-  /** Top-p variant (multi-probe IVF routing): array of the p nearest
-    * centroid indices, ascending by (dist, index). */
-  def vec_nearest_indices(a: Column, centroids: Seq[Seq[Double]], p: Int): Column =
-    Bridge.column(VecNearestIndices(Bridge.expression(a), centroids, p))
+    * plan size does not grow with k. NULL when the model is empty.
+    * A pure map, legal in a streaming projection. */
+  def vec_nearest_index(a: Column, model: Seq[(Long, Seq[Double])]): Column =
+    Bridge.column(VecNearestIndex(Bridge.expression(a), model))
 
   /** Σ (aᵢ−bᵢ)² — the k-means assignment metric. */
   def vec_sq_dist(a: Column, b: Column): Column =
@@ -231,9 +178,8 @@ case class VecDot(left: Expression, right: Expression)
   override def prettyName: String = "vec_dot"
 }
 
-case class VecNearestIndex(child: Expression, model: Seq[(Long, Seq[Double])],
-    candidates: Option[Expression])
-    extends Expression {
+case class VecNearestIndex(child: Expression, model: Seq[(Long, Seq[Double])])
+    extends UnaryExpression {
 
   @transient private lazy val cents: Array[Array[Double]] =
     model.map(_._2.toArray).toArray
@@ -241,92 +187,33 @@ case class VecNearestIndex(child: Expression, model: Seq[(Long, Seq[Double])],
   private def aFloat: Boolean =
     child.dataType.asInstanceOf[ArrayType].elementType == FloatType
 
-  override def children: Seq[Expression] = child +: candidates.toSeq
   override def nullable: Boolean = true
   override def dataType: DataType = LongType
 
   override def checkInputDataTypes(): TypeCheckResult =
-    VecMath.checkVecInputs(prettyName, Seq(child)) match {
-      case TypeCheckResult.TypeCheckSuccess => candidates.map(_.dataType) match {
-        case Some(t) if !t.isInstanceOf[ArrayType] ||
-            t.asInstanceOf[ArrayType].elementType != IntegerType =>
-          TypeCheckResult.TypeCheckFailure(
-            s"$prettyName candidates must be array<int>, got ${t.catalogString}")
-        case _ => TypeCheckResult.TypeCheckSuccess
-      }
-      case failure => failure
-    }
+    VecMath.checkVecInputs(prettyName, Seq(child))
 
-  override def eval(input: InternalRow): Any = {
-    val a = child.eval(input)
-    val c = candidates.map(_.eval(input))
-    if (a == null || c.contains(null)) return null
-    val i = VecMath.nearestIndex(a.asInstanceOf[ArrayData], cents, ids,
-      c.orNull.asInstanceOf[ArrayData], aFloat)
+  override protected def nullSafeEval(a: Any): Any = {
+    val i = VecMath.nearestIndex(a.asInstanceOf[ArrayData], cents, ids, aFloat)
     if (i < 0) null else ids(i)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val a = child.genCode(ctx)
-    val c = candidates.map(_.genCode(ctx))
     val centsRef = ctx.addReferenceObj("cents", cents, "double[][]")
     val idsRef = ctx.addReferenceObj("ids", ids, "long[]")
     val i = ctx.freshName("nearest")
-    ev.copy(code = code"""
-      ${a.code}
-      ${c.fold(EmptyBlock: Block)(_.code)}
-      boolean ${ev.isNull} = true;
-      long ${ev.value} = -1L;
-      if (!${a.isNull} && !${c.fold("false")(_.isNull.toString)}) {
-        int $i = graft.functions.VecMath.nearestIndex(${a.value}, $centsRef,
-          $idsRef, ${c.fold("null")(_.value.toString)}, $aFloat);
-        if ($i >= 0) {
-          ${ev.isNull} = false;
-          ${ev.value} = $idsRef[$i];
-        }
-      }""")
+    nullSafeCodeGen(ctx, ev, a => s"""
+      int $i = graft.functions.VecMath.nearestIndex($a, $centsRef, $idsRef, $aFloat);
+      if ($i < 0) ${ev.isNull} = true;
+      else ${ev.value} = $idsRef[$i];""")
   }
 
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): VecNearestIndex =
-    copy(child = newChildren.head, candidates = newChildren.lift(1))
+  override protected def withNewChildInternal(newChild: Expression): VecNearestIndex =
+    copy(child = newChild)
 
   override def prettyName: String = "vec_nearest_index"
   // keep the model payload out of plan renders
-  override def toString: String =
-    s"vec_nearest_index($child, k=${model.length}${candidates.fold("")(c => s", $c")})"
-}
-
-case class VecNearestIndices(child: Expression, centroids: Seq[Seq[Double]],
-    p: Int)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-
-  @transient private lazy val arr: Array[Array[Double]] =
-    centroids.map(_.toArray).toArray
-  private def aFloat: Boolean =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    VecMath.checkVecInputs(prettyName, Seq(child))
-
-  override def dataType: DataType =
-    ArrayType(org.apache.spark.sql.types.IntegerType, containsNull = false)
-
-  override protected def nullSafeEval(a: Any): Any =
-    VecMath.nearestIndices(a.asInstanceOf[ArrayData], arr, p, aFloat)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("centroids", arr, "double[][]")
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.functions.VecMath.nearestIndices($a, $ref, $p, $aFloat);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): VecNearestIndices =
-    copy(child = newChild)
-
-  override def prettyName: String = "vec_nearest_indices"
-  override def toString: String =
-    s"vec_nearest_indices($child, k=${centroids.length}, p=$p)"
+  override def toString: String = s"vec_nearest_index($child, k=${model.length})"
 }
 
 case class VecSqDist(left: Expression, right: Expression)

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.{QueryDef, QueryModule, Tables}
 import graft.api.Skew
+import graft.pipeline.Dedup
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.types.DecimalType
@@ -57,7 +58,7 @@ object ScaleQueries extends QueryModule {
         |  CAST(round(sum(CAST(l_quantity AS decimal(18,4))), 4) AS DOUBLE) AS sum_qty
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
         |GROUP BY o_orderstatus ORDER BY o_orderstatus""") { (s, dir) =>
-      val base = "/root/repo/target/bucketed"
+      val base = Dedup.scratchDir("graft-q79")
       s.sql("DROP TABLE IF EXISTS g_li_bucketed")
       s.sql("DROP TABLE IF EXISTS g_ord_bucketed")
       Tables.t(s, dir, "lineitem").select(col("l_orderkey"), col("l_quantity"))

@@ -415,7 +415,7 @@ object AnnIndex {
     * keeper join broadcasts that table, and ONLY clusters that
     * actually contain duplicates rewrite (partition-local; untouched
     * cells stay byte-stable — AnnMaintSpec pins it). Keeper rows
-    * retain their own commit epoch, so [[annProbe]]-style as-of reads
+    * retain their own commit epoch, so [[annSearch]]-style as-of reads
     * stay meaningful after a compaction. Returns the per-cell report
     * (cluster, n_before, n_after, n_dropped); bumps the model epoch
     * the way [[splitCell]] does. */

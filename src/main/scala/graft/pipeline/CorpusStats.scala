@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.{QueryDef, QueryModule, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Corpus composition analytics for a training-data pipeline —
@@ -21,19 +21,7 @@ import org.apache.spark.sql.functions._
   */
 object CorpusStats extends QueryModule {
 
-  /** First 13 hex chars of md5 as a 52-bit long (exact in double). */
-  private def h52(c: Column): Column =
-    conv(substring(md5(c), 1, 13), 16, 10).cast("long")
-
-  private def duckH52(e: String): String =
-    s"CAST(list_sum(list_transform(range(1,14), hx -> (strpos('0123456789abcdef', substr(md5($e), hx, 1))-1) * (2**(4*(13-hx))))) AS BIGINT)"
-
-  /** First 8 hex chars of md5 as a 32-bit long. */
-  private def h32(c: Column): Column =
-    conv(substring(md5(c), 1, 8), 16, 10).cast("long")
-
-  private def duckH32(e: String): String =
-    s"CAST(list_sum(list_transform(range(1,9), hx -> (strpos('0123456789abcdef', substr(md5($e), hx, 1))-1) * (2**(4*(8-hx))))) AS BIGINT)"
+  import Dedup.{duckH52, h32, h52}
 
   def queries: Seq[QueryDef] = Seq(
 
@@ -303,12 +291,8 @@ object CorpusStats extends QueryModule {
     // 2) — bounded by the source count, NOT the corpus, so the join
     // is linear in gram volume at any scale. The full matrix frame
     // (sizes × sizes, tiny) broadcasts; pairs sharing nothing emit
-    // inter = 0. AUTO-ROUTED at scale (r14): the r13 1000× probe
-    // measured this exact path 8–14×/decade superlinear (the gram
-    // self-join's spill), so past `routeMaxChars` total corpus
-    // chars sourceOverlap WARN-logs and serves the q206 MinHash
-    // estimate in this same schema — see sourceOverlapRouted. Every
-    // sweep SF stays on the exact oracle-checked path. -----
+    // inter = 0. Always exact: where the gram self-join is too large,
+    // q206's MinHash sketch is the separate estimating query. -----
     q("q205_source_overlap",
       s"""WITH w AS (SELECT doc_id, source, string_split(lower(text), ' ') AS w
         |            FROM documents),
@@ -515,14 +499,12 @@ object CorpusStats extends QueryModule {
     }
   )
 
-  // ---- q205 auto-route machinery (r13 verdict item 3) ----------------
-
-  /** The distinct per-source 3-gram-hash table plus the size and
-    * pair-matrix frames both overlap paths share: ONE corpus pass +
-    * one vocab-shuffle distinct (linear); everything pair-shaped
-    * after this is either the exact gh equi-join or the 16-row
-    * signatures. */
-  private def overlapFrames(docs: DataFrame): (DataFrame, DataFrame) = {
+  /** q205's engine: the distinct per-source 3-gram-hash table (ONE
+    * corpus pass + one vocab-shuffle distinct), its gram-hash equi
+    * self-join — fan-out per gram bounded by the source count — and
+    * the broadcast (sizes × sizes) pair frame, so pairs sharing
+    * nothing emit inter = 0. */
+  private[pipeline] def sourceOverlap(docs: DataFrame): DataFrame = {
     val g = docs
       .withColumn("w", split(lower(col("text")), " "))
       .filter(size(col("w")) >= 3)
@@ -536,13 +518,6 @@ object CorpusStats extends QueryModule {
     val pr = sz.select(col("source").as("src_a"), col("n").as("n_a"))
       .crossJoin(sz.select(col("source").as("src_b"), col("n").as("n_b")))
       .filter(col("src_a") < col("src_b"))
-    (g, pr)
-  }
-
-  /** The EXACT q205 path (the oracle-checked shape): gram-hash equi
-    * self-join, fan-out per gram bounded by the source count. */
-  private[pipeline] def sourceOverlapExact(
-      g: DataFrame, pr: DataFrame): DataFrame = {
     val iv = g.select(col("source").as("src_a"), col("gh"))
       .join(g.select(col("source").as("src_b"), col("gh")), "gh")
       .filter(col("src_a") < col("src_b"))
@@ -557,78 +532,6 @@ object CorpusStats extends QueryModule {
             - coalesce(col("inter"), lit(0L))).cast("double"), 6)
           .as("jaccard"))
       .orderBy(col("src_a"), col("src_b"))
-  }
-
-  /** The ROUTED path: the q206 MinHash estimator re-emitted in q205's
-    * schema. 16 salted permutations over the SAME distinct gram-hash
-    * table (map-side-combined mins → sources×16 signature rows), then
-    * inter derives from signature agreement in ALL-INTEGER form:
-    * Broder's resemblance estimate j ≈ agree/16 inverted through
-    * inter = j·(n_a+n_b)/(1+j) = agree·(n_a+n_b) div (16+agree) —
-    * exact integer division, zero float surface. Permutations are
-    * xxhash64(j, gh), NOT the md5 h52 device: this path never serves
-    * below the route threshold, so it has no DuckDB oracle to
-    * mirror, and 16 md5 digests per distinct gram were measured as
-    * the routed wall itself in the all-unique-grams replica regime
-    * (355 s at 1000× vs 162 s exact; xxhash64 is ~free and equally a
-    * deterministic uniform permutation for Broder's estimator). The
-    * pair space never exceeds sources², and the corpus-sized
-    * self-join is gone. */
-  private[pipeline] def sourceOverlapRouted(
-      g: DataFrame, pr: DataFrame): DataFrame = {
-    val p = g
-      .select(col("source"), posexplode(array((0 until 16).map(j =>
-        xxhash64(lit(j), col("gh"))): _*)).as(Seq("j", "hj")))
-      .groupBy(col("source"), col("j"))
-      .agg(min(col("hj")).as("mh"))
-    val ag = p.select(col("source").as("src_a"), col("j"), col("mh").as("ma"))
-      .join(p.select(col("source").as("src_b"), col("j"), col("mh").as("mb")),
-        "j")
-      .filter(col("src_a") < col("src_b"))
-      .groupBy(col("src_a"), col("src_b"))
-      .agg(sum(when(col("ma") === col("mb"), 1L).otherwise(0L)).as("agree"))
-    broadcast(pr).join(ag, Seq("src_a", "src_b"), "left")
-      .withColumn("agree0", coalesce(col("agree"), lit(0L)))
-      // div is marked nullable (÷0 → null); 16+agree0 ≥ 16 makes that
-      // unreachable — the coalesce restores the exact path's
-      // non-null schema contract
-      .withColumn("inter", coalesce(
-        expr("(agree0 * (n_a + n_b)) div (16 + agree0)").cast("long"),
-        lit(0L)))
-      .select(col("src_a"), col("src_b"),
-        col("n_a").cast("long").as("n_a"), col("n_b").cast("long").as("n_b"),
-        col("inter"),
-        round(col("inter").cast("double")
-          / (col("n_a") + col("n_b") - col("inter")).cast("double"), 6)
-          .as("jaccard"))
-      .orderBy(col("src_a"), col("src_b"))
-  }
-
-  /** q205's operator with the auto-route (the semDedup routeSuperK
-    * precedent): below `routeMaxChars` total corpus chars the exact
-    * pairwise path runs (the oracle-checked default at every sweep
-    * SF); above it the engine WARN-logs and serves the MinHash
-    * estimate in the same schema — a user calling exact overlap at
-    * 100 TB gets the linear sketch instead of the quadratic join.
-    * The default keeps every sweep SF and the 100× tier exact (sf0.1
-    * is ~1.5e6 chars, 100× ~1.5e7) and routes at the 1000× tier
-    * (~1.5e8), where the exact path's gram self-join was 8–14×/decade
-    * superlinear (169.5 s at 1000× — r13).
-    * The volume probe is one map-side-combined sum over the n_chars
-    * column — never a gram materialization. */
-  private[pipeline] def sourceOverlap(docs: DataFrame,
-      routeMaxChars: Long = 50000000L): DataFrame = {
-    val (g, pr) = overlapFrames(docs)
-    val totChars = docs.agg(coalesce(sum(col("n_chars")), lit(0L)))
-      .collect()(0).getLong(0)
-    if (totChars <= routeMaxChars) sourceOverlapExact(g, pr)
-    else {
-      println(s"[overlap-route] WARN corpus chars=$totChars > " +
-        s"routeMaxChars=$routeMaxChars — routing q205 exact source " +
-        "overlap to the MinHash sketch estimator (q206 device); " +
-        "inter/jaccard are deterministic 16-permutation estimates")
-      sourceOverlapRouted(g, pr)
-    }
   }
 
   /** The UniMax water-filling allocator over a (lang, avail) token

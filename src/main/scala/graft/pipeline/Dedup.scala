@@ -39,13 +39,22 @@ object Dedup extends QueryModule {
     d.toString
   }
 
-  /** First 8 hex chars of md5 as a long — the shared cross-engine hash. */
-  private def hexHash(c: Column): Column =
+  /** The cross-engine content hash every curation module shares:
+    * the first 8 hex chars of md5 as a 32-bit long. */
+  private[pipeline] def h32(c: Column): Column =
     conv(substring(md5(c), 1, 8), 16, 10).cast("long")
 
-  /** Same hash in DuckDB SQL (no conv(); digit-expand the hex). */
-  private def duckHash(e: String): String =
+  /** [[h32]] in DuckDB SQL (no conv(); digit-expand the hex). */
+  private[pipeline] def duckH32(e: String): String =
     s"CAST(list_sum(list_transform(range(1,9), hx -> (strpos('0123456789abcdef', substr(md5($e), hx, 1))-1) * (2**(4*(8-hx))))) AS BIGINT)"
+
+  /** The first 13 hex chars of md5 as a 52-bit long (exact in double). */
+  private[pipeline] def h52(c: Column): Column =
+    conv(substring(md5(c), 1, 13), 16, 10).cast("long")
+
+  /** [[h52]] in DuckDB SQL. */
+  private[pipeline] def duckH52(e: String): String =
+    s"CAST(list_sum(list_transform(range(1,14), hx -> (strpos('0123456789abcdef', substr(md5($e), hx, 1))-1) * (2**(4*(13-hx))))) AS BIGINT)"
 
   /** Band b's 32-bit hash = hex slice [8b+1, 8b+8] of a precomputed
     * md5 digest: the 128-bit digest carries all four band values, so
@@ -362,7 +371,7 @@ object Dedup extends QueryModule {
     // hashes (bit j votes ±1 per occurrence; sign → bit) -----
     q("q53_simhash",
       s"""WITH wrd AS (SELECT doc_id, unnest(string_split(lower(text), ' ')) AS word FROM documents),
-         |wh AS (SELECT doc_id, ${duckHash("word")} AS h FROM wrd),
+         |wh AS (SELECT doc_id, ${duckH32("word")} AS h FROM wrd),
          |bits AS (
          |  SELECT doc_id, j, sum(CASE WHEN (h >> j) & 1 = 1 THEN 1 ELSE -1 END) AS v
          |  FROM wh CROSS JOIN (SELECT unnest(range(32)) AS j)
@@ -372,7 +381,7 @@ object Dedup extends QueryModule {
          |FROM bits GROUP BY doc_id ORDER BY doc_id""") { (s, dir) =>
       val wh = Tables.t(s, dir, "documents")
         .select(col("doc_id"), explode(split(lower(col("text")), " ")).as("word"))
-        .withColumn("h", hexHash(col("word")))
+        .withColumn("h", h32(col("word")))
       wh.select(col("doc_id"), col("h"), explode(sequence(lit(0), lit(31))).as("j"))
         .groupBy(col("doc_id"), col("j"))
         .agg(sum(when(expr("(shiftright(h, j) & 1) = 1"), 1)
@@ -645,7 +654,7 @@ object Dedup extends QueryModule {
     q("q55_fingerprint",
       s"""WITH g AS (SELECT doc_id,
          |    list_sort(list_distinct(list_transform(range(1, length(text)-2),
-         |      i -> ${duckHash("substr(text, i, 4)")}))) AS hs
+         |      i -> ${duckH32("substr(text, i, 4)")}))) AS hs
          |  FROM documents)
          |SELECT doc_id, array_to_string(hs[1:3], '-') AS fp
          |FROM g ORDER BY doc_id""") { (s, dir) =>
@@ -662,7 +671,7 @@ object Dedup extends QueryModule {
   /** DuckDB CTE fragment computing (doc_id, lang, simhash). */
   private val duckSimhash =
     s"""wrd AS (SELECT doc_id, lang, unnest(string_split(lower(text), ' ')) AS word FROM documents),
-       |wh AS (SELECT doc_id, lang, ${duckHash("word")} AS h FROM wrd),
+       |wh AS (SELECT doc_id, lang, ${duckH32("word")} AS h FROM wrd),
        |bits AS (
        |  SELECT doc_id, lang, j, sum(CASE WHEN (h >> j) & 1 = 1 THEN 1 ELSE -1 END) AS v
        |  FROM wh CROSS JOIN (SELECT unnest(range(32)) AS j)
@@ -679,7 +688,7 @@ object Dedup extends QueryModule {
     val wh = Tables.spread(Tables.t(s, dir, "documents"), "doc_id")
       .select(col("doc_id"), col("lang"),
         explode(split(lower(col("text")), " ")).as("word"))
-      .withColumn("h", hexHash(col("word")))
+      .withColumn("h", h32(col("word")))
     wh.select(col("doc_id"), col("lang"), col("h"),
         explode(sequence(lit(0), lit(31))).as("j"))
       .groupBy(col("doc_id"), col("lang"), col("j"))
@@ -939,7 +948,7 @@ object Dedup extends QueryModule {
     // STATIC partition pruning for the colocated layout: the shingle
     // probe's pb values are a subset of the DELTA's band buckets, a
     // ≤ bandBuckets-element set — broadcast-sized control metadata,
-    // collected once (same budget class as assignTwoLevel's centroid
+    // collected once (same budget class as a k-means centroid
     // collect). A literal IN filter prunes the scan deterministically;
     // dynamic pruning would need the probe side broadcast, which the
     // candidate×shingle frame is not.

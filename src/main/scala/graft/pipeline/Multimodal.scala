@@ -177,10 +177,7 @@ object Multimodal extends QueryModule {
     // the operator a pipeline actually runs there is per-doc cluster
     // assignment: group by the 28-bit signature, representative =
     // min doc_id — ONE map-side-combined agg + one hash join back,
-    // linear at ANY duplicate density (the q136 dup_of shape).
-    // Near-dup pairing at scale then runs q224's blocked join over
-    // DISTINCT signatures only — replicas collapse before any pair
-    // space exists. -----
+    // linear at ANY duplicate density (the q136 dup_of shape). -----
     // ----- temporal scene segmentation — the VIDEO shape of the
     // q224 device (r14): per-frame integer signatures over the q124
     // framing (64-byte frames), consecutive frames whose signatures
@@ -718,24 +715,12 @@ object Multimodal extends QueryModule {
     // a true containment concentrates votes on ONE offset, while
     // coincidental key collisions scatter. Query split: doc_id%10=9
     // clips against the rest (the q185 convention). ALL-INTEGER.
-    // Scale (r16 — the r15 verdict's one `weak`, now guarded IN
-    // ENGINE, not in documentation):
-    //   * landmarks generate ARRAY-LOCALLY per doc (peaks filter out
-    //     of the energy array in place, pairs unfold inside one
-    //     transform — the r15 explode + per-doc window is gone; the
-    //     plan is scan → project → generate(landmark rows));
-    //   * the vote join is key-equi, and the operator now PROBES its
-    //     own pair space before running it: a duplicate-heavy corpus
-    //     (dup ratio ≥ 2 on exact energy profiles) collapses exact-
-    //     clone groups per side first — EXACTLY output-preserving
-    //     (clones share landmark sets; the per-side min-id rep wins
-    //     every vote tie) — and a corpus whose predicted vote rows
-    //     Σ df_q·df_c exceed the budget (mediaAlign's voteBudget,
-    //     default 5e7) drops the hottest keys from BOTH
-    //     sides with a WARN (rare-landmark voting — the q231 maxDf /
-    //     q177 maxDfFrac posture). Neither guard fires at the oracle
-    //     gate SFs (organic corpora: dup ratio 1.0, votes ≪ budget);
-    //     MultimodalSpec pins both on constructed corpora. -----
+    // Plan: landmarks generate ARRAY-LOCALLY per doc (peaks filter out
+    // of the energy array in place, pairs unfold inside one transform:
+    // scan → project → generate(landmark rows)), then one key-equi
+    // vote join and one min-struct aggregate per query. The vote join
+    // is Σ over keys of df_query·df_corpus rows — a corpus that
+    // saturates the landmark key space pays that product in full. -----
     q("q235_media_align",
       """WITH bytes AS (
         |  SELECT doc_id, i.i AS i, ascii(substr(text, i.i, 1)) AS b
@@ -787,13 +772,9 @@ object Multimodal extends QueryModule {
     // bytes stand in for the media); in production the two sides are
     // separate columns and the plan shape — two signature families,
     // two bucketed candidate joins, one pair-keyed outer join — is
-    // unchanged. Both sides run their exact semantics at any
-    // duplicate density: dup-heavy corpora collapse exact clone
-    // groups per modality IN ENGINE and expand the pair list back
-    // (r17 — phashNearDup's signature expansion, textPairsClone's
-    // payload expansion; both exactly output-preserving, both
-    // spec-pinned route ≡ unrouted), so the oracle contract holds
-    // unconditionally on data shape. -----
+    // unchanged. Both pair lists are exact; on a duplicate-heavy
+    // corpus they are quadratic in each clone family's size, as the
+    // true pair list is. -----
     q("q239_crossmodal_pairs",
       Dedup.duckPairsCtes(recursive = false) +
         """,
@@ -897,11 +878,9 @@ object Multimodal extends QueryModule {
           |  UNION SELECT w.a, e.b FROM walk w JOIN edges e ON w.b = e.a)
           |SELECT a AS doc_id, min(b) AS cluster_id, a = min(b) AS keep
           |FROM walk GROUP BY a ORDER BY doc_id""".stripMargin) { (s, dir) =>
-      // crossModalCcEdges: the consistent-pair graph's components from
-      // O(docs + rep-pairs) edges — on clone-free gate corpora it IS
-      // the consistent pair list; on dup-heavy corpora stars replace
-      // within-group complete graphs, components unchanged (spec-pinned)
-      val pairs = crossModalCcEdges(Tables.t(s, dir, "documents"))
+      val pairs = crossModalPairs(Tables.t(s, dir, "documents"))
+        .filter(col("verdict") === "consistent")
+        .select(col("doc_a"), col("doc_b"))
         .localCheckpoint()
       graft.graph.Graph.fromEdges(
           pairs.select(col("doc_a").as("src"), col("doc_b").as("dst")))
@@ -917,28 +896,12 @@ object Multimodal extends QueryModule {
     * the family's proven bounded shapes (LSH band buckets / dHash
     * block pigeonhole); the only new operation is a pair-keyed full
     * outer join — pair-list-sized, never corpus-sized. Unordered —
-    * the query sorts.
-    *
-    * DUP-HEAVY posture IN ENGINE (r16 verdict item 1 — the "dedup
-    * first" scaladoc note, now code): each side carries its own
-    * exactly-output-preserving clone-collapse route — the media side
-    * pairs distinct signatures and expands ([[phashNearDup]]), the
-    * text side collapses exact payload clones and expands
-    * ([[textPairsClone]]). Neither fires on organic gate/decade
-    * corpora; both are pinned route ≡ unrouted in MultimodalSpec.
-    *
-    * Output-asymmetry rails: `asymMediaPairs` is the predicted media
-    * pair count past which the pair-keyed full outer must not shuffle
-    * the media list, `asymTextRows` the text-list row cap for the
-    * broadcast assembly. */
-  private[pipeline] def crossModalPairs(docs: DataFrame,
-      asymMediaPairs: Long = 100000000L,
-      asymTextRows: Long = 5000000L): DataFrame = {
-    val text = textPairsClone(docs)
+    * the query sorts. */
+  private[pipeline] def crossModalPairs(docs: DataFrame): DataFrame = {
+    val text = Dedup.lshVerifiedPairs(docs)
       .select(col("doc_a"), col("doc_b"), col("jacc"))
     val media = phashNearDup(docs)
-      .select(col("doc_a"), col("doc_b"), col("hamming"))
-    def fullOuter = text.join(media, Seq("doc_a", "doc_b"), "full_outer")
+    text.join(media, Seq("doc_a", "doc_b"), "full_outer")
       .select(col("doc_a"), col("doc_b"),
         coalesce(col("jacc"), lit(-1.0)).as("jacc"),
         coalesce(col("hamming"), lit(-1)).cast("int").as("hamming"),
@@ -946,187 +909,6 @@ object Multimodal extends QueryModule {
           "consistent")
           .when(col("jacc").isNotNull, "text_only")
           .otherwise("media_only").as("verdict"))
-    // OUTPUT-ASYMMETRY route (r17 — the q239 x1000 wall after the
-    // clone routes landed): a signature-saturated corpus's media pair
-    // list is output-sized-huge (measured 4.8e9 rows at 5M suffixed
-    // docs) while its text list stays linear; the pair-keyed
-    // full-outer then shuffles the entire media list — the last
-    // corpus-scale shuffle in this operator. When the sig-level
-    // ANALYTIC prediction (within + cross pair counts, aggregates
-    // only) exceeds `asymMediaPairs` AND the text list fits a
-    // broadcast, the SAME output assembles shuffle-free:
-    //   * text rows annotate with hamming(sig_a, sig_b) via two
-    //     broadcast joins against the phash table — a pair is
-    //     'consistent' iff that hamming ≤ 3, which is EXACTLY
-    //     membership in the media list (the q224 pigeonhole argument:
-    //     hamming ≤ 3 guarantees a shared block, so the blocked list
-    //     contains precisely these pairs);
-    //   * media rows not in text emit 'media_only' through a
-    //     broadcast LEFT ANTI — the media expansion STREAMS, never
-    //     shuffles, never materializes.
-    // The union is row-for-row the full-outer's output.
-    val groups = phash(docs).groupBy(col("phash"))
-      .agg(count(lit(1)).as("g")).localCheckpoint()
-    val st = groups
-      .agg(sum(col("g")).as("n"), count(lit(1)).as("d"),
-        sum(expr("g * (g - 1) div 2")).as("within")).head
-    val (nDocs, nSigs) = (st.getLong(0), st.getLong(1))
-    if (nSigs == 0 || nDocs / nSigs < 2) fullOuter
-    else {
-      val bl = groups.select(col("phash"),
-          explode(sequence(lit(0), lit(3))).as("j"))
-        .withColumn("bkt", expr("shiftright(phash, 7*j) & 127"))
-      val cross = bl.select(col("phash").as("ha"), col("j"), col("bkt"))
-        .join(bl.select(col("phash").as("hb"), col("j"), col("bkt")),
-          Seq("j", "bkt"))
-        .filter(col("ha") < col("hb"))
-        .select(col("ha"), col("hb")).distinct()
-        .filter(bit_count(col("ha").bitwiseXOR(col("hb"))) <= 3)
-        .join(groups.select(col("phash").as("ha"), col("g").as("ga")), "ha")
-        .join(groups.select(col("phash").as("hb"), col("g").as("gb")), "hb")
-        .agg(coalesce(sum(col("ga") * col("gb")), lit(0L))).head.getLong(0)
-      val predicted = st.getLong(2) + cross
-      if (predicted < asymMediaPairs) fullOuter
-      else {
-        val t = text.localCheckpoint()
-        val nText = t.count()
-        if (nText > asymTextRows) {
-          println(s"[xmodal-asym] predicted media pairs $predicted AND " +
-            s"text pairs $nText both exceed their rails — keeping the " +
-            "pair-keyed full outer (output is quadratic in duplicates " +
-            "on BOTH sides; dedup-first applies)")
-          fullOuter
-        } else {
-          println(s"[xmodal-asym] predicted media pairs $predicted >= " +
-            s"$asymMediaPairs with a broadcastable text list ($nText " +
-            "rows) — assembling the verdict table shuffle-free " +
-            "(broadcast text annotation + broadcast anti media_only); " +
-            "output is EXACTLY the full-outer's")
-          val ph = phash(docs)
-          // both annotation joins BROADCAST the (text-list-sized)
-          // small side and stream the corpus phash table — the
-          // corpus never shuffles
-          val ta = ph.select(col("doc_id").as("doc_a"),
-              col("phash").as("__ha"))
-            .join(broadcast(t), "doc_a")
-          val withHam = ph.select(col("doc_id").as("doc_b"),
-              col("phash").as("__hb"))
-            .join(broadcast(ta), "doc_b")
-          val mh = bit_count(col("__ha").bitwiseXOR(col("__hb"))).cast("int")
-          val textRows = withHam
-            .select(col("doc_a"), col("doc_b"), col("jacc"),
-              when(mh <= 3, mh).otherwise(lit(-1)).as("hamming"),
-              when(mh <= 3, "consistent").otherwise("text_only")
-                .as("verdict"))
-          val mediaOnly = media
-            .join(broadcast(t.select(col("doc_a"), col("doc_b"))),
-              Seq("doc_a", "doc_b"), "left_anti")
-            .select(col("doc_a"), col("doc_b"), lit(-1.0).as("jacc"),
-              col("hamming"), lit("media_only").as("verdict"))
-          textRows.unionByName(mediaOnly)
-        }
-      }
-    }
-  }
-
-  /** The text-side pair list with the EXACT payload-clone collapse
-    * route (q239/q245's dedup-first posture in engine, r16 verdict
-    * item 1): one aggregate probes payload dup density; past
-    * `routeDupRatio` the corpus collapses to one representative per
-    * DISTINCT payload (min doc_id), the q52 LSH machinery runs on
-    * representatives only, and the pair list expands back —
-    * cross-group pairs inherit the representative pair's Jaccard
-    * (identical payloads ⇒ identical shingle sets ⇒ identical
-    * Jaccard and identical band buckets), within-group pairs are
-    * exactly jacc 1.0 whenever the payload carries shingles at all
-    * (the ≥ 3-words fence [[Dedup.lshVerifiedPairs]] applies;
-    * shingle-less payloads never pair). Output EXACTLY the unrouted
-    * list at any duplicate density — the pure-function-of-payload
-    * argument mediaAlign's clone route makes. */
-  private[pipeline] def textPairsClone(docs: DataFrame,
-      routeDupRatio: Long = 2L): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val st = docs.agg(count(lit(1)).as("n"),
-      count_distinct(xxhash64(col("text"))).as("d")).head
-    val (nDocs, nTexts) = (st.getLong(0), st.getLong(1))
-    if (nTexts == 0 || nDocs / nTexts < routeDupRatio)
-      Dedup.lshVerifiedPairs(docs)
-        .select(col("doc_a"), col("doc_b"), col("jacc"))
-    else {
-      println(s"[textpairs-route] corpus is duplicate-heavy in payload " +
-        s"space ($nDocs docs, $nTexts distinct payloads) — collapsing " +
-        "exact clone groups before LSH pairing and expanding back; " +
-        "output is EXACTLY the all-docs pair list")
-      val g = docs.select(col("doc_id"), col("text"))
-        .withColumn("rep",
-          min(col("doc_id")).over(Window.partitionBy(col("text"))))
-        .localCheckpoint()
-      val repPairs = Dedup.lshVerifiedPairs(
-          g.filter(col("doc_id") === col("rep"))
-            .select(col("doc_id"), col("text")))
-        .select(col("doc_a"), col("doc_b"), col("jacc"))
-      val mem = g.select(col("rep"), col("doc_id"))
-      val cross = repPairs
-        .join(mem.select(col("rep").as("doc_a"), col("doc_id").as("da")),
-          "doc_a")
-        .join(mem.select(col("rep").as("doc_b"), col("doc_id").as("db")),
-          "doc_b")
-        .select(least(col("da"), col("db")).as("doc_a"),
-          greatest(col("da"), col("db")).as("doc_b"), col("jacc"))
-      val withShingles = g
-        .filter(size(split(lower(col("text")), " ")) >= 3)
-        .select(col("rep"), col("doc_id"))
-      val within = withShingles.as("x")
-        .join(withShingles.as("y"), col("x.rep") === col("y.rep")
-          && col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-          lit(1.0).as("jacc"))
-      cross.unionByName(within)
-    }
-  }
-
-  /** q245's edge generator: the consistent pairs SUFFICIENT for
-    * connected components. On payload-dup-heavy corpora the
-    * within-clone-group complete graphs collapse to STAR edges
-    * (representative — member) and cross-group pair families to their
-    * single representative edge, which preserves the component
-    * structure EXACTLY: consistency is a pure function of the two
-    * payloads, so (a ∈ A, b ∈ B) is consistent iff (rep_A, rep_B) is,
-    * and a multi-member group's members are within-consistent iff the
-    * payload carries shingles (text jacc 1.0 + media hamming 0) —
-    * exactly the groups whose stars are emitted. Members of
-    * shingle-less groups are isolated in the true graph (no text
-    * evidence anywhere) and get no star. Edge volume O(docs +
-    * rep-pairs) instead of Θ(dups²). */
-  private[pipeline] def crossModalCcEdges(docs: DataFrame,
-      routeDupRatio: Long = 2L): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val st = docs.agg(count(lit(1)).as("n"),
-      count_distinct(xxhash64(col("text"))).as("d")).head
-    val (nDocs, nTexts) = (st.getLong(0), st.getLong(1))
-    if (nTexts == 0 || nDocs / nTexts < routeDupRatio)
-      crossModalPairs(docs).filter(col("verdict") === "consistent")
-        .select(col("doc_a"), col("doc_b"))
-    else {
-      println(s"[ccedges-route] corpus is duplicate-heavy in payload " +
-        s"space ($nDocs docs, $nTexts distinct payloads) — emitting " +
-        "representative edges + clone-group stars; connected " +
-        "components are EXACTLY the all-pairs graph's")
-      val g = docs.select(col("doc_id"), col("text"))
-        .withColumn("rep",
-          min(col("doc_id")).over(Window.partitionBy(col("text"))))
-        .localCheckpoint()
-      val repEdges = crossModalPairs(
-          g.filter(col("doc_id") === col("rep"))
-            .select(col("doc_id"), col("text")))
-        .filter(col("verdict") === "consistent")
-        .select(col("doc_a"), col("doc_b"))
-      val stars = g
-        .filter(col("doc_id") =!= col("rep")
-          && size(split(lower(col("text")), " ")) >= 3)
-        .select(col("rep").as("doc_a"), col("doc_id").as("doc_b"))
-      repEdges.unionByName(stars)
-    }
   }
 
   /** q226's engine, factored so MultimodalSpec can drive synthetic
@@ -1312,107 +1094,16 @@ object Multimodal extends QueryModule {
       .select(col("doc_id"), col("lm.key").as("key"), col("lm.af").as("af"))
       .distinct()
 
-  /** The guarded vote join + best-alignment aggregate over a landmark
-    * frame. `maxKeyDf` is the explicit dial (df_q+df_c cap per key,
-    * both sides — the q231 maxDf posture); with it unset the
-    * predicted vote count auto-guards against key saturation: past
-    * `voteBudget` the hottest keys drop (cumulative-volume order,
-    * deterministic) and the operator WARNs instead of spilling. Below
-    * the budget the served plan is EXACTLY the unguarded join — no
-    * extra semi-join, no window — so the oracle gate SFs execute the
-    * r15 plan shape plus one probe pass. The landmark subtree is
-    * deliberately NOT checkpointed: it is scan-bound and
-    * embarrassingly parallel, so recomputing it per consumer beats
-    * materializing a corpus-sized intermediate at 100 TB (and keeps
-    * the executed plan inspectable — PlanSpec pins the fused
-    * frame_energies expression on it). */
-  private[pipeline] def alignVotes(lms: DataFrame, maxKeyDf: Option[Long],
-      voteBudget: Long): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val isQ = col("doc_id") % 10 === 9
-    val keyDf = lms.groupBy(col("key"))
-      .agg(sum(when(isQ, 1L).otherwise(0L)).as("dfq"),
-        sum(when(isQ, 0L).otherwise(1L)).as("dfc"))
-      .withColumn("v", col("dfq") * col("dfc"))
-    val kept = maxKeyDf match {
-      case Some(cap) =>
-        println(s"[align-cap] dropping landmark keys with total df > " +
-          s"$cap from BOTH vote-join sides (explicit rare-landmark dial)")
-        lms.join(keyDf.filter(col("dfq") + col("dfc") <= cap)
-          .select(col("key")), "key")
-      case None =>
-        val pred = keyDf.agg(coalesce(sum(col("v")), lit(0L)))
-          .head.getLong(0)
-        if (pred <= voteBudget) lms
-        else {
-          // keep keys in ascending vote-volume order while the
-          // cumulative vote count fits the budget — deterministic
-          // (ties on key), and by construction the surviving join is
-          // at most voteBudget rows. The dropped keys are the
-          // saturated ones: shared by so many clips that their votes
-          // carry no alignment signal anyway (the BM25 maxDfFrac
-          // argument at the landmark level).
-          //
-          // TWO-PASS BUCKETED cumulative sum (r16 verdict item 5 —
-          // the r15 form's global unpartitioned Window pulled the
-          // whole key table into ONE partition): bucket keys by the
-          // bit-length of v (monotone in v, all-integer), cumulate
-          // the ≤64 bucket totals DRIVER-side, then sort only the
-          // single boundary bucket. Identical keep set to a global
-          // (v, key) running sum: buckets are disjoint v-ranges, so
-          // bucket order ∘ within-bucket (v, key) order IS the
-          // global order.
-          val bucketed = keyDf.withColumn("b", length(bin(col("v"))))
-          val bSums = bucketed.groupBy(col("b"))
-            .agg(sum(col("v")).as("bv")).collect()
-            .map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-          var rem = voteBudget
-          var boundary = -1
-          val fullBuckets = scala.collection.mutable.ArrayBuffer[Int]()
-          var i = 0
-          while (i < bSums.length && boundary < 0) {
-            val (b, bv) = bSums(i)
-            if (bv <= rem) { rem -= bv; fullBuckets += b }
-            else boundary = b
-            i += 1
-          }
-          val keptFull =
-            if (fullBuckets.isEmpty) keyDf.filter(lit(false))
-            else bucketed.filter(col("b") <= lit(fullBuckets.max))
-          val keptBoundary = if (boundary < 0) keyDf.filter(lit(false))
-          else {
-            // one bucket's keys only — the sort is bounded by keys of
-            // similar vote volume, never the whole key table
-            val w = Window.orderBy(col("v"), col("key"))
-              .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-            bucketed.filter(col("b") === lit(boundary))
-              .withColumn("cum", sum(col("v")).over(w))
-              .filter(col("cum") <= lit(rem))
-          }
-          val keep0 = keptFull.select(col("key"))
-            .unionByName(keptBoundary.select(col("key")))
-          // FLOOR (r16 ADVICE): a budget below even the coolest key's
-          // volume must not silently return an empty alignment table —
-          // keep exactly the coolest (v, key) and say so
-          val keep =
-            if (keep0.isEmpty) {
-              println(s"[align-budget] WARN budget $voteBudget is below " +
-                "the coolest landmark key's own vote volume — flooring " +
-                "to that single key so the alignment table stays " +
-                "non-degenerate; raise voteBudget")
-              keyDf.agg(min(struct(col("v"), col("key"))).as("m"))
-                .select(col("m.key").as("key"))
-            } else keep0
-          println(s"[align-budget] WARN predicted vote rows $pred > " +
-            s"budget $voteBudget — dropping the hottest landmark keys " +
-            "from BOTH join sides (rare-landmark voting); raise " +
-            "voteBudget to force the exact join")
-          lms.join(keep, "key")
-        }
-    }
-    val q = kept.filter(isQ)
+  /** The key-equi vote join + best-alignment aggregate over a
+    * landmark frame. The landmark subtree is deliberately NOT
+    * checkpointed: it is scan-bound and embarrassingly parallel, so
+    * recomputing it per consumer beats materializing a corpus-sized
+    * intermediate (and keeps the executed plan inspectable — PlanSpec
+    * pins the fused frame_energies expression on it). */
+  private[pipeline] def alignVotes(lms: DataFrame): DataFrame = {
+    val q = lms.filter(col("doc_id") % 10 === 9)
       .select(col("doc_id").as("query_id"), col("key"), col("af").as("qf"))
-    val c = kept.filter(col("doc_id") % 10 =!= 9)
+    val c = lms.filter(col("doc_id") % 10 =!= 9)
       .select(col("doc_id").as("match_id"), col("key"), col("af").as("cf"))
     q.join(c, "key")
       .groupBy(col("query_id"), col("match_id"),
@@ -1427,61 +1118,12 @@ object Multimodal extends QueryModule {
   }
 
   /** q235's engine: array-local landmark build ([[alignLandmarks]]),
-    * guarded key-equi vote join ([[alignVotes]]), best alignment per
-    * query via one min-struct aggregate. Unordered — the query sorts.
-    *
-    * IN-ENGINE SCALE GUARDS (r15 verdict item 1 — the vote join is
-    * quadratic in corpus size at fixed key diversity, and guards must
-    * live in code, not documentation):
-    *   1. duplicate-heavy corpora (≥ half the docs are exact energy-
-    *      profile clones — one cheap aggregate probes this) collapse
-    *      clone groups PER SIDE to their min-id representative before
-    *      any landmark work, then expand query-side results back —
-    *      EXACTLY output-preserving: landmarks are a pure function of
-    *      the energy array, so clones contribute identical vote rows
-    *      and the (votes DESC, match_id ASC) tie-break always selects
-    *      the representative (q234's cluster-reduction precedent,
-    *      MultimodalSpec-pinned);
-    *   2. saturated key spaces refuse votes past `voteBudget`
-    *      predicted vote-join rows (Σ over keys of df_query·df_corpus;
-    *      see [[alignVotes]] — loud, deterministic, both sides). The
-    *      default keeps every oracle gate SF and the organic decade
-    *      tiers exact; corpora that SATURATE the key space (the r15
-    *      div-512 regime: 78 keys → 5.1e9 votes) hit the budget
-    *      instead of the 21 GB spill.
-    * Neither fires on organic gate/decade corpora. */
-  private[pipeline] def mediaAlign(docs: DataFrame,
-      maxKeyDf: Option[Long] = None,
-      voteBudget: Long = 50000000L): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val en = docs.select(col("doc_id"),
+    * key-equi vote join ([[alignVotes]]), best alignment per query via
+    * one min-struct aggregate. Unordered — the query sorts. */
+  private[pipeline] def mediaAlign(docs: DataFrame): DataFrame =
+    alignVotes(alignLandmarks(docs.select(col("doc_id"),
       graft.functions.MediaSig.frame_energies(
-        encode(col("text"), "UTF-8")).as("en"))
-    val st = en.agg(count(lit(1)).as("n"),
-      count_distinct(xxhash64(col("en"))).as("d")).head
-    val (nDocs, nProfiles) = (st.getLong(0), st.getLong(1))
-    if (nDocs < 2 * nProfiles) {
-      alignVotes(alignLandmarks(en), maxKeyDf, voteBudget)
-    } else {
-      println(s"[align-route] corpus is duplicate-heavy ($nDocs docs, " +
-        s"$nProfiles distinct energy profiles) — collapsing exact-clone " +
-        "groups per side before voting (q234's cluster-reduction " +
-        "precedent); output is EXACTLY the unrouted result")
-      val w = Window.partitionBy(col("side"), col("en"))
-      val g = en
-        .withColumn("side", (col("doc_id") % 10 === 9).cast("int"))
-        .withColumn("rep", min(col("doc_id")).over(w))
-        .localCheckpoint()
-      val reps = g.filter(col("doc_id") === col("rep"))
-        .select(col("doc_id"), col("en"))
-      val repBest = alignVotes(alignLandmarks(reps), maxKeyDf, voteBudget)
-      val qMap = g.filter(col("side") === 1)
-        .select(col("rep").as("qrep"), col("doc_id").as("qid"))
-      repBest.join(qMap, col("query_id") === col("qrep"))
-        .select(col("qid").as("query_id"), col("match_id"),
-          col("t_offset"), col("votes"))
-    }
-  }
+        encode(col("text"), "UTF-8")).as("en"))))
 
   /** q234's engine: per-doc ordered scene-signature sequence (one
     * aggregate — sort_array over (scene_id, rep_sig) structs keeps
@@ -1551,87 +1193,33 @@ object Multimodal extends QueryModule {
         expr("100 * n_shared div (na + nb - n_shared)").as("jac_pct"))
   }
 
-  /** The 28-bit integer dHash per document (4 rows × 8 cols) —
-    * factored so MultimodalSpec can pin signature invariants and the
-    * decade probes can hash alone. All-integer: binning, pooling and
-    * the bit pack are div/shift/compare on exact longs, zero float
-    * surface (the q223 discipline applied to the multimodal family). */
-  /** q224's engine with the EXACTLY-OUTPUT-PRESERVING dup-heavy route
-    * (r16 verdict item 1 applied to the media side — supersedes the
-    * r16 representative-only route, whose output held only
-    * conditionally on data shape, the r16 ADVICE q224 item): one
-    * cheap aggregate probes the corpus's signature dup ratio; past
-    * `routeDupRatio` (default 2 — at least half the docs are
-    * signature-clones of another) the blocked pair join runs over
-    * DISTINCT signatures (bounded candidate space) and the resulting
-    * signature pairs — INCLUDING each multi-member signature's
-    * hamming-0 self-pair — expand back through the (doc_id, phash)
-    * membership table. Hamming is a pure function of the two
-    * signatures, so the expansion reproduces the all-docs pair list
-    * EXACTLY at any duplicate density (MultimodalSpec pins routed ≡
-    * forced-exact on a cloned corpus); the expansion join is
-    * output-sized — the true pair list on a dup-heavy corpus is
-    * Θ(dups²) by definition, but no candidate volume beyond it is
-    * ever materialized (the r16 form's 4-block × full-corpus join at
-    * saturated-bucket density is what exhausted the x1000 probe's
-    * disk). Organic corpora (gate SFs ratio ≈ 1.0, z100 ratio 1.04)
-    * keep the exact all-docs plan shape unchanged. */
-  private[pipeline] def phashNearDup(docs: DataFrame,
-      routeDupRatio: Long = 2L): DataFrame = {
-    val ph0 = phash(docs)
-    val st = ph0.agg(count(lit(1)).as("n"),
-      count_distinct(col("phash")).as("d")).head
-    val (nDocs, nSigs) = (st.getLong(0), st.getLong(1))
-    // division form: overflow-safe for any routeDupRatio (callers
-    // pass Long.MaxValue to force the all-docs join shape)
-    if (nSigs == 0 || nDocs / nSigs < routeDupRatio) {
-      val bl = ph0.select(col("doc_id"), col("phash"),
-          explode(sequence(lit(0), lit(3))).as("j"))
-        .withColumn("bkt", expr("shiftright(phash, 7*j) & 127"))
-      val a = bl.select(col("doc_id").as("doc_a"), col("j"), col("bkt"),
-        col("phash").as("ha"))
-      val b = bl.select(col("doc_id").as("doc_b"), col("j"), col("bkt"),
-        col("phash").as("hb"))
-      a.join(b, Seq("j", "bkt"))
-        .filter(col("doc_a") < col("doc_b"))
-        .select(col("doc_a"), col("doc_b"), col("ha"), col("hb")).distinct()
-        .withColumn("hamming",
-          bit_count(col("ha").bitwiseXOR(col("hb"))).cast("int"))
-        .filter(col("hamming") <= 3)
-        .select(col("doc_a"), col("doc_b"), col("hamming"))
-    } else {
-      println(s"[phash-route] corpus is duplicate-heavy in signature " +
-        s"space ($nDocs docs, $nSigs distinct signatures) — pairing " +
-        "DISTINCT signatures and expanding back through the membership " +
-        "table; output is EXACTLY the all-docs pair list")
-      val members = ph0.localCheckpoint()
-      val sigs = members.select(col("phash")).distinct()
-      val bl = sigs.select(col("phash"),
-          explode(sequence(lit(0), lit(3))).as("j"))
-        .withColumn("bkt", expr("shiftright(phash, 7*j) & 127"))
-      val a = bl.select(col("phash").as("ha"), col("j"), col("bkt"))
-      val b = bl.select(col("phash").as("hb"), col("j"), col("bkt"))
-      // ha <= hb keeps each unordered signature pair once and admits
-      // the self-pair (ha = hb, hamming 0) exactly when the signature
-      // has >= 2 members — the within-signature doc pairs the r16
-      // representative route dropped
-      val sigPairs = a.join(b, Seq("j", "bkt"))
-        .filter(col("ha") <= col("hb"))
-        .select(col("ha"), col("hb")).distinct()
-        .withColumn("hamming",
-          bit_count(col("ha").bitwiseXOR(col("hb"))).cast("int"))
-        .filter(col("hamming") <= 3)
-      sigPairs
-        .join(members.select(col("phash").as("ha"),
-          col("doc_id").as("da")), "ha")
-        .join(members.select(col("phash").as("hb"),
-          col("doc_id").as("db")), "hb")
-        .filter(col("ha") =!= col("hb") || col("da") < col("db"))
-        .select(least(col("da"), col("db")).as("doc_a"),
-          greatest(col("da"), col("db")).as("doc_b"), col("hamming"))
-    }
+  /** q224's engine: every document's dHash fans out to its four 7-bit
+    * blocks, docs sharing a (block, bucket) pair up, and the distinct
+    * candidates keep hamming ≤ 3 — exact by the pigeonhole argument
+    * (three differing bits cannot cover four blocks). Unordered — the
+    * query sorts. */
+  private[pipeline] def phashNearDup(docs: DataFrame): DataFrame = {
+    val bl = phash(docs).select(col("doc_id"), col("phash"),
+        explode(sequence(lit(0), lit(3))).as("j"))
+      .withColumn("bkt", expr("shiftright(phash, 7*j) & 127"))
+    val a = bl.select(col("doc_id").as("doc_a"), col("j"), col("bkt"),
+      col("phash").as("ha"))
+    val b = bl.select(col("doc_id").as("doc_b"), col("j"), col("bkt"),
+      col("phash").as("hb"))
+    a.join(b, Seq("j", "bkt"))
+      .filter(col("doc_a") < col("doc_b"))
+      .select(col("doc_a"), col("doc_b"), col("ha"), col("hb")).distinct()
+      .withColumn("hamming",
+        bit_count(col("ha").bitwiseXOR(col("hb"))).cast("int"))
+      .filter(col("hamming") <= 3)
+      .select(col("doc_a"), col("doc_b"), col("hamming"))
   }
 
+  /** The 28-bit integer dHash per document (4 rows × 8 cols) —
+    * factored so MultimodalSpec can pin signature invariants. All-
+    * integer: binning, pooling and the bit pack are div/shift/compare
+    * on exact longs, zero float surface (the q223 discipline applied
+    * to the multimodal family). */
   private[pipeline] def phash(docs: DataFrame): DataFrame =
     // r15: the whole signature — nearest-rank binning, integer-mean
     // pooling, gradient-bit pack — runs inside ONE codegen'd

@@ -23,19 +23,7 @@ import org.apache.spark.sql.functions._
   */
 object Quality extends QueryModule {
 
-  /** First 13 hex chars of md5 as a 52-bit long (exact in double). */
-  private def h52(c: Column): Column =
-    conv(substring(md5(c), 1, 13), 16, 10).cast("long")
-
-  private def duckH52(e: String): String =
-    s"CAST(list_sum(list_transform(range(1,14), hx -> (strpos('0123456789abcdef', substr(md5($e), hx, 1))-1) * (2**(4*(13-hx))))) AS BIGINT)"
-
-  /** First 8 hex chars of md5 as a 32-bit long. */
-  private def h32(c: Column): Column =
-    conv(substring(md5(c), 1, 8), 16, 10).cast("long")
-
-  private def duckH32(e: String): String =
-    s"CAST(list_sum(list_transform(range(1,9), hx -> (strpos('0123456789abcdef', substr(md5($e), hx, 1))-1) * (2**(4*(8-hx))))) AS BIGINT)"
+  import Dedup.{duckH32, duckH52, h32, h52}
 
   private val stopList = Seq("the", "be", "to", "of", "and", "that", "have", "with")
 

@@ -146,9 +146,8 @@ object Similarity extends QueryModule {
     modelFrame(s, arr.toSeq.map(c => Row(c._1, c._2)), "cluster" -> LongType)
 
   /** The Lloyd's FIT alone: (cluster, cv) after `updates` iterations.
-    * Exposed separately (r10) so callers can pair the fit with either
-    * assignment pass — [[assignFlat]] (exact, the oracle pin) or
-    * [[assignTwoLevel]] (Θ(N·2√k), the large-k scale path).
+    * Exposed separately so callers can assign against a standing
+    * model ([[assignWith]]).
     *
     * Each iteration collects the current centroids (k rows) and
     * assigns per row with [[VecMath.vec_nearest_index]], feeding the
@@ -210,105 +209,6 @@ object Similarity extends QueryModule {
   /** [[withClusterFlat]] over an (vec_id, embedding, …) frame. */
   private def withClusterLit(e: DataFrame, cent: DataFrame): DataFrame =
     withClusterFlat(e, cent, expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
-
-  /** Two-level nearest-centroid assignment — the escape hatch for the
-    * flat pass's Θ(N·k) FLOP cost when k itself scales with the
-    * corpus (k ≈ N/clusterSize makes flat assignment Θ(N²/clusterSize);
-    * see the r9 SemDeDup probe notes in PLANS.md). The k centroids are
-    * grouped into `superK` super-centroids by a small driver-side
-    * Lloyd's (the centroid set is broadcast-sized by construction —
-    * collecting it is the same data volume the flat pass already
-    * ships to every task); each vector routes to its nearest super
-    * (N·superK) and then scans only that super's member centroids
-    * (N·k/superK on average) — Θ(N·2√k) at superK = √k. Both stages
-    * are per-row projections against the driver-collected model: the
-    * corpus never shuffles.
-    *
-    * APPROXIMATE at the boundary: a vector whose true nearest
-    * centroid sits in a non-probed super-cluster mis-routes.
-    * `nProbe` is the standard IVF dial: route to the nProbe nearest
-    * supers (work Θ(N·(superK + nProbe·k/superK))); agreement with
-    * the flat pass is MONOTONE in nProbe (candidate sets grow), and
-    * nProbe = superK degenerates to the exact flat scan.
-    * TwoLevelAssignSpec pins nProbe=1 exactness on separated data,
-    * monotonicity + the nProbe=superK equality on the real table.
-    * Same 6-dp/lowest-id determinism contract as the flat pass, so
-    * results are reproducible under any partitioning.
-    *
-    * Row contract: the assignment is per ROW, not per vec_id — one
-    * (vec_id, cluster) row per input row (minus rows whose probed
-    * supers are all memberless, see [[withClusterTwoLevel]]). Rows
-    * sharing a vec_id are neither merged nor deduplicated, so callers
-    * must pass unique vec_ids: every consumer keys the result by
-    * vec_id (pair joins, keep-lists), where a duplicate would fan out.
-    * TwoLevelAssignSpec pins the duplicate case. */
-  private[pipeline] def assignTwoLevel(s: SparkSession, vecs: DataFrame,
-      cent: DataFrame, superK: Int, iters: Int = 2, nProbe: Int = 1): DataFrame =
-    assignTwoLevelAll(s, vecs, cent, superK, iters, nProbe)
-      .select(col("vec_id"), col("cluster"))
-
-  private def assignTwoLevelAll(s: SparkSession, vecs: DataFrame,
-      cent: DataFrame, superK: Int, iters: Int, nProbe: Int): DataFrame = {
-    val centArr = collectCent(cent).map(c => (c._1, c._2.toArray))
-    require(centArr.nonEmpty && superK >= 1, "need centroids and superK >= 1")
-    val dim = centArr.head._2.length
-    def sq(a: Array[Double], b: Array[Double]): Double = {
-      var acc = 0.0; var i = 0
-      while (i < dim) { val d = a(i) - b(i); acc += d * d; i += 1 }
-      acc
-    }
-    def nearest(v: Array[Double], sup: IndexedSeq[Array[Double]]): Int = {
-      var best = 0; var bd = Double.MaxValue; var i = 0
-      while (i < sup.length) {
-        val d = sq(v, sup(i)); if (d < bd) { bd = d; best = i }; i += 1
-      }
-      best // ties to lowest super id via strict <
-    }
-    var sup: IndexedSeq[Array[Double]] =
-      centArr.take(superK).map(_._2).toIndexedSeq
-    for (_ <- 1 to iters) {
-      val byS = centArr.groupBy(c => nearest(c._2, sup))
-      sup = (0 until sup.length).map { sId =>
-        byS.get(sId).map { ms =>
-          val m = new Array[Double](dim)
-          ms.foreach(c => (0 until dim).foreach(i => m(i) += c._2(i)))
-          m.map(_ / ms.length)
-        }.getOrElse(sup(sId))
-      }
-    }
-    // r18 OPT (verdict item 8 — the large-k join-back): stage 2 is a
-    // PER-ROW PROJECTION, like stage 1. Each row's candidates are the
-    // members of its nProbe probed supers (a literal super → member
-    // positions map), and the exact kernel takes the same
-    // (round(dist, 6), cluster) min over them that the flat pass takes
-    // over all centroids — no N-row argmin exchange and no assignment
-    // join-back on vec_id (supers partition the centroids, so the
-    // candidate set per row is exactly the probed members;
-    // TwoLevelAssignSpec pins exactness/monotonicity/degeneracy). A
-    // vector whose probed supers are ALL memberless gets a NULL
-    // cluster and is dropped.
-    val owner = centArr.map(c => nearest(c._2, sup))
-    val memberIdx: Map[Int, Seq[Int]] = (0 until sup.length)
-      .map(sId => sId -> centArr.indices.filter(owner(_) == sId)).toMap
-    val cands = flatten(transform(
-      VecMath.vec_nearest_indices(col("ev"), sup.map(_.toSeq), nProbe),
-      sId => element_at(typedlit(memberIdx), sId)))
-    val clusterCol = VecMath.vec_nearest_index(col("ev"),
-      centArr.map(c => (c._1, c._2.toSeq)).toSeq, Some(cands))
-    vecs.withColumn("cluster", clusterCol)
-      .filter(col("cluster").isNotNull)
-  }
-
-  /** [[assignTwoLevel]] keeping the input columns: `cluster` attaches
-    * to the vector row as a projection, so large-k callers skip the
-    * assignment join-back on vec_id entirely (r18, verdict item 8).
-    * Same row contract: one output row per input row, except that a
-    * row whose probed supers are all memberless is dropped; vec_ids
-    * must be unique, since duplicates pass through as separate rows. */
-  private[pipeline] def withClusterTwoLevel(s: SparkSession,
-      vecs: DataFrame, cent: DataFrame, superK: Int, iters: Int = 2,
-      nProbe: Int = 1): DataFrame =
-    assignTwoLevelAll(s, vecs, cent, superK, iters, nProbe)
 
   /** IVF with real k-means routing: cluster the corpus with the
     * relational Lloyd's above, then run the two-stage search — probes
@@ -491,63 +391,13 @@ object Similarity extends QueryModule {
     * The assignment is localCheckpoint'd so the three consumers
     * (both self-join sides + the annotate join) don't re-run Lloyd's.
     */
-  /** Measured flat↔two-level crossing (PLANS.md r10 two-level
-    * tables): on clustered corpora the two-level assignment wins
-    * from k ≈ 800 (amortizes by k = 2000: 323 s → 39 s, identical
-    * keep-list); below that — and on adversarial isotropic data,
-    * where routing margins concentrate — the exact flat pass wins.
-    * [[routeSuperK]] encodes the decision so callers need not know
-    * the probe tables. */
-  private[pipeline] val twoLevelThreshold = 800
-
-  /** Auto-routing: 0 (exact flat) below the measured threshold, else
-    * two-level with superK = √k — the shape both r10 probe rows used
-    * (28 at k = 800, 89 at k = 8000) and the Θ(N·2√k) optimum of the
-    * two-level FLOP count. */
-  private[pipeline] def routeSuperK(k: Int): Int =
-    if (k < twoLevelThreshold) 0
-    else math.max(2, math.round(math.sqrt(k.toDouble)).toInt)
-
   def semDedup(s: SparkSession, dir: String, k: Int = 8, updates: Int = 2,
-      tau: Double = 0.25, superK: Int = -1, nProbe: Int = 1): DataFrame = {
+      tau: Double = 0.25): DataFrame = {
     val e = Tables.t(s, dir, "embeddings")
-    // superK >= 2 switches the assignment from the exact flat pass
-    // (Θ(N·k) FLOPs — the bottleneck once k ∝ N, PLANS.md r9) to the
-    // two-level Θ(N·(superK + nProbe·k/superK)) routing. The fit is
-    // identical either way; only the corpus-wide assignment differs,
-    // and only approximately (boundary vectors may route to a
-    // non-probed super — the documented IVF recall trade, monotone
-    // in nProbe). superK = 0 forces the exact flat pass (the oracle
-    // pin — q167 passes it explicitly);
-    // the DEFAULT (-1) auto-routes on the measured threshold, so a
-    // caller at k = 2000 gets the 8× assignment win without reading
-    // the probe tables. Isotropic-embedding corpora should force
-    // flat (the documented adversarial regime for routing). The
-    // regime switch is NOT silent (r12 advice): auto-routing into the
-    // approximate path logs at WARN so sweeps/regressions can detect
-    // an exact→approximate flip without reading this scaladoc.
-    val sk = if (superK >= 0) superK else {
-      val r = routeSuperK(k)
-      if (r > 1) org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"semDedup auto-routed to APPROXIMATE two-level assignment " +
-          s"(k=$k >= $twoLevelThreshold, superK=$r, nProbe=$nProbe); " +
-          "boundary vectors may misroute — pass superK = 0 to force " +
-          "the exact flat pass")
-      r
-    }
-    // r17 OPT: the exact flat route attaches the cluster as a
-    // projection (no assignment join back on vec_id); r18 (verdict
-    // item 8): the two-level route does too — withClusterTwoLevel
-    // keeps cluster on the vector row, so the former N-row
-    // assignment ⋈ embeddings join-back is gone
-    val clustered = (if (sk <= 1)
-        withClusterLit(e.select(col("vec_id"), col("embedding")),
-          kmeansCentroids(e, k, updates))
-      else withClusterTwoLevel(s,
-          e.select(col("vec_id"), col("embedding"),
-            expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("ev")),
-          kmeansCentroids(e, k, updates), sk, nProbe = nProbe)
-        .drop("ev"))
+    // the exact flat assignment attaches the cluster as a projection
+    // (no assignment join back on vec_id)
+    val clustered = withClusterLit(e.select(col("vec_id"), col("embedding")),
+        kmeansCentroids(e, k, updates))
       .select(col("vec_id"), col("cluster"), col("embedding"),
         normExpr("embedding").as("nrm"))
       .localCheckpoint()
@@ -756,8 +606,8 @@ object Similarity extends QueryModule {
     * lookup table of exact subspace distances to every codeword, and
     * a database vector's approximate distance is the j-ordered sum
     * of 4 table lookups — 4 adds per candidate instead of a 64-float
-    * scan. This is the MEMORY side of the ANN scale story (IVF/
-    * two-level cut the candidate COUNT, PQ cuts bytes-per-candidate):
+    * scan. This is the MEMORY side of the ANN scale story (IVF
+    * cuts the candidate COUNT, PQ cuts bytes-per-candidate):
     * the codes table is 4 small ints per vector vs 256 raw bytes, so
     * a 100 TB corpus's index stays executor-resident. Plan shape:
     * codes × broadcast(lookup tables) equi-join on (j, code) with a
@@ -1098,8 +948,7 @@ object Similarity extends QueryModule {
         |  CAST(CASE WHEN d.dup_of IS NULL THEN 1 ELSE 0 END AS INTEGER) AS kept
         |FROM ${lloydFin()} a LEFT JOIN dups d ON d.b_id = a.vec_id
         |ORDER BY a.vec_id""") { (s, dir) =>
-      // superK = 0: the exact flat assignment the oracle replays
-      semDedup(s, dir, superK = 0)
+      semDedup(s, dir)
     },
 
     // ----- the PAPER's keep strategy: duplicate groups keep their
@@ -1851,7 +1700,7 @@ object Similarity extends QueryModule {
     // a two-tower model, and everything downstream (per-row
     // assignment against the frozen router, family-expanded
     // partition-pruned probe, broadcast ADC LUTs) is IDENTICAL to
-    // q242's vector path: one annProbe, two modalities. No
+    // q242's vector path: one annSearch, two modalities. No
     // self-exclusion — query ids live in the caption id space, so a
     // numeric collision with vec_ids must NOT drop candidates. The
     // oracle replays featurizer, corpus fit, caption assignment,
@@ -2218,7 +2067,7 @@ object Similarity extends QueryModule {
     val captions = captionFeatures(
         Tables.t(s, dir, "documents").filter(col("doc_id") < 10))
       .localCheckpoint()
-    annProbe(s, idxPath, captions, excludeSelf = false)
+    annSearch(s, idxPath, captions, excludeSelf = false)
   }
 
   /** The caption-tower featurizer STUB shared by q248 (batch) and
@@ -2250,7 +2099,7 @@ object Similarity extends QueryModule {
       idxPath, epoch = 0L)
     AnnIndex.append(fn(delta.filter(expr("(vec_id div 10) % 2 = 1"))),
       idxPath, epoch = 1L)
-    annProbe(s, idxPath,
+    annSearch(s, idxPath,
       corpus.filter(col("vec_id") < 10)
         .select(col("vec_id"), col("embedding")),
       excludeSelf = true, asOfEpoch = Some(0L))
@@ -2299,7 +2148,7 @@ object Similarity extends QueryModule {
   /** q251's engine: captions STREAM in; each micro-batch featurizes
     * per-row and probes the frozen media index through the batch
     * path inside foreachBatch (the q238 device — a micro-batch is a
-    * batch frame, so annProbe's driver-side cluster collect and
+    * batch frame, so annSearch's driver-side cluster collect and
     * static partition IN filter apply per batch). Every query is one
     * row, so its top-k completes within its own micro-batch:
     * deterministic under any schedule, replayed by q248's oracle. */
@@ -2317,7 +2166,7 @@ object Similarity extends QueryModule {
     val outPath = Dedup.scratchDir("graft-xmstream-out")
     // schema seed (the q185 device): an empty caption stream must
     // leave outPath readable with the probe's output schema
-    annProbe(s, idxPath,
+    annSearch(s, idxPath,
       captionFeatures(Tables.t(s, dir, "documents")).limit(0)
         .localCheckpoint(),
       excludeSelf = false)
@@ -2327,7 +2176,7 @@ object Similarity extends QueryModule {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val caps = captionFeatures(batch).localCheckpoint()
         if (!caps.isEmpty)
-          annProbe(s, idxPath, caps, excludeSelf = false)
+          annSearch(s, idxPath, caps, excludeSelf = false)
             .write.mode("append").parquet(outPath)
       })
     s.read.parquet(outPath).orderBy(col("query_id"), col("rn"))
@@ -2401,7 +2250,7 @@ object Similarity extends QueryModule {
     // stateless per-row map, which AnnIngestSpec pins)
     AnnIndex.append(fn(e.filter(col("vec_id") % 10 === 9)), idxPath,
       epoch = 0L)
-    annProbe(s, idxPath,
+    annSearch(s, idxPath,
       corpus.filter(col("vec_id") < 10)
         .select(col("vec_id"), col("embedding")),
       excludeSelf = true)
@@ -2421,7 +2270,7 @@ object Similarity extends QueryModule {
     * persisted codebooks; the leaf list collects driver-side
     * (model-sized) into a STATIC IN filter, so a 1000-cell 100 TB
     * index reads ≤ |query families' leaves| directories. */
-  private[graft] def annProbe(s: SparkSession, idxPath: String,
+  private[graft] def annSearch(s: SparkSession, idxPath: String,
       queries: DataFrame, excludeSelf: Boolean,
       asOfEpoch: Option[Long] = None): DataFrame = {
     // r17 OPT: the model reads ONCE into driver arrays — pre-r17 the

@@ -20,6 +20,7 @@ import org.apache.spark.sql.streaming.StreamingQueryProgress
   * shuffles 8-byte gram hashes with map-side partial aggregation.
   */
 object TextAnalysis extends QueryModule {
+  import Dedup.{duckH32, h32}
 
   private val TOKEN_RE = "[A-Za-z]+|[0-9]|[^A-Za-z0-9 ]"
 
@@ -55,15 +56,6 @@ object TextAnalysis extends QueryModule {
       SSN_RE, "[SSN]"),
       PHONE_RE, "[PHONE]"),
       IP_RE, "[IP]")
-
-  /** First 8 hex chars of md5 as a long — the shared cross-engine
-    * hash (same contract as Dedup); at 100 TB widen the slice to the
-    * full digest, the plan shape is unchanged. */
-  private def hexHash(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    conv(substring(md5(c), 1, 8), 16, 10).cast("long")
-
-  private def duckHash(e: String): String =
-    s"CAST(list_sum(list_transform(range(1,9), hx -> (strpos('0123456789abcdef', substr(md5($e), hx, 1))-1) * (2**(4*(8-hx))))) AS BIGINT)"
 
   /** Watermark sentinel for q158: 2100-01-01T00:00Z as epoch seconds.
     * Guarded at run time against testdata drift (max doc_id must stay
@@ -423,8 +415,8 @@ object TextAnalysis extends QueryModule {
         explode(expr("sequence(0, size(w)-2)")).as("p"),
         col("w"))
       .select(col("doc_id"), col("ts"), col("p"),
-        hexHash(expr("element_at(w, p+1)")).as("h1"),
-        hexHash(concat(expr("element_at(w, p+1)"), lit(" "),
+        h32(expr("element_at(w, p+1)")).as("h1"),
+        h32(concat(expr("element_at(w, p+1)"), lit(" "),
           expr("element_at(w, p+2)"))).as("hb"))
     // r17 OPT: the frozen LM's two count tables both read the batch
     // bigram frame — materialize it once instead of re-running the
@@ -483,8 +475,8 @@ object TextAnalysis extends QueryModule {
   private lazy val perplexityOracle: String =
     s"""WITH w AS (SELECT doc_id, string_split(text,' ') AS w FROM documents),
        |b AS (SELECT doc_id, i AS pos,
-       |        ${duckHash("w[i]")} AS h1,
-       |        ${duckHash("w[i] || ' ' || w[i+1]")} AS hb
+       |        ${duckH32("w[i]")} AS h1,
+       |        ${duckH32("w[i] || ' ' || w[i+1]")} AS hb
        |      FROM (SELECT doc_id, unnest(range(1, len(w))) AS i, w
        |            FROM w WHERE len(w) >= 2)),
        |cb AS (SELECT hb, count(*) AS c FROM b GROUP BY hb),
@@ -576,7 +568,7 @@ object TextAnalysis extends QueryModule {
 
   /** BM25 ranked retrieval (q177's operator as a facade). Exact by
     * default; `maxDfFrac` < 1 is the approximate-pruning dial the
-    * round-10 verdict asked for (the nProbe pattern): terms whose
+    * round-10 verdict asked for (the IVF probe-count pattern): terms whose
     * document frequency exceeds `maxDfFrac · n_docs` — the hot,
     * near-zero-idf stopword tail whose postings lists are the skew
     * story of any inverted index — are dropped from the QUERY-TERM
@@ -633,7 +625,7 @@ object TextAnalysis extends QueryModule {
     // explode+md5 pass — it ran as ONE task at any core count
     val h = Tables.spread(Tables.t(s, dir, "documents"), "doc_id")
       .select(col("doc_id"), explode(split(lower(col("text")), " ")).as("word"))
-      .withColumn("hw", hexHash(col("word")))
+      .withColumn("hw", h32(col("word")))
     val isQ = col("doc_id") % 97 === 0
     // r18 OPT (guide §1.2 — the r17 plan replayed the corpus
     // explode+md5 pass SIX times: qt, corp×2 [df + the join], dl×2
@@ -1009,7 +1001,7 @@ object TextAnalysis extends QueryModule {
     q("q157_crossdoc_ngram_dup",
       s"""WITH w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
          |g AS (SELECT doc_id, $duckGrams3 AS grams FROM w WHERE len(w) >= 3),
-         |e AS (SELECT doc_id, len(grams) AS n_grams, ${duckHash("unnest(grams)")} AS gh FROM g),
+         |e AS (SELECT doc_id, len(grams) AS n_grams, ${duckH32("unnest(grams)")} AS gh FROM g),
          |df AS (SELECT gh, count(*) AS df FROM e GROUP BY gh)
          |SELECT e.doc_id, CAST(e.n_grams AS INTEGER) AS n_grams,
          |  CAST(sum(CASE WHEN df.df >= 2 THEN 1 ELSE 0 END) AS INTEGER) AS n_dup,
@@ -1024,7 +1016,7 @@ object TextAnalysis extends QueryModule {
         .withColumn("w", split(col("text"), " "))
         .filter(size(col("w")) >= 3)
         .select(col("doc_id"), explode(expr(sparkGrams3)).as("g"))
-        .select(col("doc_id"), hexHash(col("g")).as("gh"))
+        .select(col("doc_id"), h32(col("g")).as("gh"))
       val df = e.groupBy(col("gh")).agg(count(lit(1)).as("df"))
       e.join(df, "gh")
         .groupBy(col("doc_id"))
@@ -1291,7 +1283,7 @@ object TextAnalysis extends QueryModule {
          |g AS (SELECT doc_id, unnest(range(1, len(w)-5+2)) AS p, w
          |      FROM w WHERE len(w) >= 5),
          |hh AS (SELECT doc_id, p,
-         |         ${duckHash("array_to_string(w[p:p+4], ' ')")} AS h FROM g),
+         |         ${duckH32("array_to_string(w[p:p+4], ' ')")} AS h FROM g),
          |dup AS (SELECT h FROM hh GROUP BY h HAVING count(DISTINCT doc_id) >= 2),
          |st AS (SELECT DISTINCT doc_id, p FROM hh JOIN dup USING (h)),
          |cv AS (SELECT DISTINCT doc_id, p + o AS pos FROM st
@@ -1318,7 +1310,7 @@ object TextAnalysis extends QueryModule {
         .select(col("doc_id"), col("w"),
           explode(expr(s"sequence(0, size(w)-$K)")).as("p"))
         .select(col("doc_id"), col("p"),
-          hexHash(concat_ws(" ", expr(s"slice(w, p+1, $K)"))).as("h"))
+          h32(concat_ws(" ", expr(s"slice(w, p+1, $K)"))).as("h"))
       val dup = grams.groupBy(col("h"))
         .agg(countDistinct(col("doc_id")).as("nd"))
         .filter(col("nd") >= 2).select(col("h"))
@@ -1407,7 +1399,7 @@ object TextAnalysis extends QueryModule {
     q("q174_vocab_oov",
       s"""WITH w AS (SELECT doc_id, unnest(string_split(text,' ')) AS word
          |           FROM documents),
-         |h AS (SELECT doc_id, word, ${duckHash("word")} AS hw FROM w),
+         |h AS (SELECT doc_id, word, ${duckH32("word")} AS hw FROM w),
          |cnt AS (SELECT hw, count(*) AS c FROM h GROUP BY hw),
          |vocab AS (SELECT hw FROM cnt
          |          ORDER BY c DESC, hw ASC LIMIT 16),
@@ -1422,7 +1414,7 @@ object TextAnalysis extends QueryModule {
       import graft.functions.TopK
       val words = Tables.t(s, dir, "documents")
         .select(col("doc_id"), explode(split(col("text"), " ")).as("word"))
-        .withColumn("hw", hexHash(col("word")))
+        .withColumn("hw", h32(col("word")))
       val vocab = words.groupBy(col("hw")).agg(count(lit(1)).as("c"))
         // TopK orders (score DESC, id ASC) — exactly (c DESC, hw ASC)
         .agg(TopK.topK(16)(col("c").cast("double"), col("hw")).as("top"))
@@ -1455,7 +1447,7 @@ object TextAnalysis extends QueryModule {
     q("q175_dsir_select",
       s"""WITH w AS (SELECT doc_id, string_split(text,' ') AS w FROM documents),
          |b AS (SELECT doc_id, i AS pos,
-         |        ${duckHash("w[i] || ' ' || w[i+1]")} % 256 AS bkt
+         |        ${duckH32("w[i] || ' ' || w[i+1]")} % 256 AS bkt
          |      FROM (SELECT doc_id, unnest(range(1, len(w))) AS i, w
          |            FROM w WHERE len(w) >= 2)),
          |tc AS (SELECT bkt, count(*) AS c FROM b WHERE doc_id % 97 = 0 GROUP BY bkt),
@@ -1518,7 +1510,7 @@ object TextAnalysis extends QueryModule {
     q("q177_bm25_topk",
       s"""WITH w AS (SELECT doc_id, unnest(string_split(lower(text),' ')) AS word
          |           FROM documents),
-         |h AS (SELECT doc_id, ${duckHash("word")} AS hw FROM w),
+         |h AS (SELECT doc_id, ${duckH32("word")} AS hw FROM w),
          |corp AS (SELECT doc_id, hw, count(*) AS tf FROM h
          |         WHERE doc_id % 97 <> 0 GROUP BY doc_id, hw),
          |dl AS (SELECT doc_id, count(*) AS dl FROM h
@@ -1562,7 +1554,7 @@ object TextAnalysis extends QueryModule {
     q("q178_text_cluster",
       s"""WITH w AS (SELECT doc_id, unnest(string_split(lower(text),' ')) AS word
          |           FROM documents),
-         |cnt AS (SELECT doc_id, ${duckHash("word")} % 64 AS b, count(*) AS c
+         |cnt AS (SELECT doc_id, ${duckH32("word")} % 64 AS b, count(*) AS c
          |        FROM w GROUP BY 1, 2),
          |grid AS (SELECT d.doc_id, r.b
          |         FROM (SELECT DISTINCT doc_id FROM documents) d
@@ -1593,7 +1585,7 @@ object TextAnalysis extends QueryModule {
       import graft.functions.VecMath
       val cnt = Tables.t(s, dir, "documents")
         .select(col("doc_id"), explode(split(lower(col("text")), " ")).as("word"))
-        .select(col("doc_id"), (hexHash(col("word")) % 64).cast("int").as("b"))
+        .select(col("doc_id"), (h32(col("word")) % 64).cast("int").as("b"))
         .groupBy(col("doc_id"), col("b")).agg(count(lit(1)).cast("double").as("c"))
       // dense 64-dim vector: ordered fold over the (bucket, count)
       // pairs with missing buckets zero-filled — per-doc, no grid join
@@ -1635,7 +1627,7 @@ object TextAnalysis extends QueryModule {
     q("q179_novelty_score",
       s"""WITH g AS (SELECT doc_id,
          |    unnest(list_distinct(list_transform(range(1, length(text)-1),
-         |      i -> ${duckHash("substr(text, i, 3)")}))) AS gh
+         |      i -> ${duckH32("substr(text, i, 3)")}))) AS gh
          |  FROM documents),
          |own AS (SELECT gh, min(doc_id) AS owner FROM g GROUP BY gh),
          |sc AS (SELECT g.doc_id, count(*) AS n_grams,
@@ -1931,7 +1923,7 @@ object TextAnalysis extends QueryModule {
          |g AS (SELECT doc_id, len(w)-2 AS nk, unnest(range(1, len(w)-1)) AS i, w
          |      FROM w WHERE len(w) >= 3),
          |hh AS (SELECT doc_id, nk, i-1 AS p,
-         |         ${duckHash("w[i] || ' ' || w[i+1] || ' ' || w[i+2]")} AS h FROM g),
+         |         ${duckH32("w[i] || ' ' || w[i+1] || ' ' || w[i+2]")} AS h FROM g),
          |win AS (SELECT s.doc_id, s.p AS st, g2.h
          |        FROM hh s JOIN hh g2 ON g2.doc_id = s.doc_id
          |          AND g2.p BETWEEN s.p AND s.p + 3
@@ -1956,7 +1948,7 @@ object TextAnalysis extends QueryModule {
             | i -> concat(w[i], ' ', w[i+1], ' ', w[i+2]))""".stripMargin))
             .as(Seq("p", "gram")))
         .select(col("doc_id"), col("nk"), col("p"),
-          hexHash(col("gram")).as("h"))
+          h32(col("gram")).as("h"))
       // materialize ONCE (the q179 rule): the explode+md5+window pass
       // dominates and feeds three consumers (df cap, both join sides);
       // the frame is (doc_id, 8-byte hash) — ~¼ the gram count
@@ -1998,7 +1990,7 @@ object TextAnalysis extends QueryModule {
       s"""WITH w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
          |seg AS (SELECT doc_id, unnest(range(0, len(w), 10)) AS st, w FROM w),
          |hh AS (SELECT doc_id, st // 10 AS seg_id,
-         |         ${duckHash("array_to_string(w[st+1 : st+10], ' ')")} AS h
+         |         ${duckH32("array_to_string(w[st+1 : st+10], ' ')")} AS h
          |       FROM seg),
          |dup AS (SELECT h FROM hh GROUP BY h
          |        HAVING count(DISTINCT doc_id) > 1),
@@ -2024,7 +2016,7 @@ object TextAnalysis extends QueryModule {
           posexplode(expr(s"transform(sequence(0, size(w)-1, $S), st -> slice(w, st+1, $S))"))
             .as(Seq("seg_id", "seg")))
         .select(col("doc_id"), col("seg_id"),
-          hexHash(array_join(col("seg"), " ")).as("h"))
+          h32(array_join(col("seg"), " ")).as("h"))
         .localCheckpoint()
       val dup = segs.groupBy(col("h"))
         .agg(countDistinct(col("doc_id")).as("nd"))
@@ -2069,8 +2061,8 @@ object TextAnalysis extends QueryModule {
       .select(col("doc_id"), col("w"),
         explode(expr("sequence(0, size(w)-2)")).as("p"))
       .select(col("doc_id"), col("p"),
-        hexHash(expr("element_at(w, p+1)")).as("h1"),
-        hexHash(concat(expr("element_at(w, p+1)"), lit(" "),
+        h32(expr("element_at(w, p+1)")).as("h1"),
+        h32(concat(expr("element_at(w, p+1)"), lit(" "),
           expr("element_at(w, p+2)"))).as("hb"))
       .localCheckpoint()
     val cb = b.groupBy(col("hb")).agg(count(lit(1)).as("cb"))
@@ -2087,7 +2079,7 @@ object TextAnalysis extends QueryModule {
       .select(col("doc_id"),
         explode(expr("sequence(0, size(w)-2)")).as("p"), col("w"))
       .select(col("doc_id"), col("p"),
-        (hexHash(concat(expr("element_at(w, p+1)"), lit(" "),
+        (h32(concat(expr("element_at(w, p+1)"), lit(" "),
           expr("element_at(w, p+2)"))) % 256).as("bkt"))
 
   /** q175's 256-row bucket table with the PRE-ROUND log-ratio. */

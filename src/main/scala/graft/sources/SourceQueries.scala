@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.{QueryDef, QueryModule, Tables}
+import graft.pipeline.Dedup
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
@@ -17,7 +18,7 @@ object SourceQueries extends QueryModule {
     q("q71_csv_roundtrip",
       """SELECT n_nationkey, n_name, n_regionkey FROM nation
         |ORDER BY n_nationkey""") { (s, dir) =>
-      val path = "/root/repo/target/roundtrip/nation_csv"
+      val path = Dedup.scratchDir("graft-q71") + "/nation_csv"
       val n = Tables.t(s, dir, "nation")
       n.write.mode("overwrite").option("header", true).csv(path)
       s.read.option("header", true).schema(n.schema).csv(path)
@@ -58,7 +59,7 @@ object SourceQueries extends QueryModule {
       """SELECT o_orderkey, o_orderstatus, o_totalprice FROM orders
         |WHERE o_totalprice > 200000
         |ORDER BY o_orderkey""") { (s, dir) =>
-      val path = "/root/repo/target/roundtrip/orders_orc"
+      val path = Dedup.scratchDir("graft-q101") + "/orders_orc"
       val o = Tables.t(s, dir, "orders")
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
       o.write.mode("overwrite").orc(path)
@@ -105,7 +106,7 @@ object SourceQueries extends QueryModule {
         |  CAST(round(sum(CAST(l_extendedprice AS decimal(18,4))), 4) AS DOUBLE) AS rev
         |FROM lineitem WHERE year(l_shipdate) = 1998
         |GROUP BY l_returnflag ORDER BY l_returnflag""") { (s, dir) =>
-      val path = "/root/repo/target/roundtrip/lineitem_by_year"
+      val path = Dedup.scratchDir("graft-q127") + "/lineitem_by_year"
       Tables.t(s, dir, "lineitem")
         .select(col("l_returnflag"), col("l_extendedprice"), col("l_shipdate"),
           year(col("l_shipdate")).as("l_year"))

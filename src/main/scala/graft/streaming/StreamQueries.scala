@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.{QueryDef, QueryModule, Tables}
+import graft.pipeline.Dedup
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -325,8 +326,7 @@ object StreamQueries extends QueryModule {
         |       ROWS UNBOUNDED PRECEDING) AS BIGINT) AS running_n
         |FROM events ORDER BY event_id""") { (s, dir) =>
       import org.apache.spark.sql.expressions.Window
-      val outPath = "/root/repo/target/roundtrip/q76_over"
-      new java.io.File(outPath).delete()
+      val outPath = Dedup.scratchDir("graft-q76") + "/q76_over"
       val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
       Drain(Tables.stream(s, dir, "events").writeStream.foreachBatch {
         (df: DataFrame, _: Long) =>
@@ -795,10 +795,8 @@ object StreamQueries extends QueryModule {
     q("q85_stream_file_sink",
       """SELECT event_type, count(*) AS n FROM events
         |GROUP BY event_type ORDER BY event_type""") { (s, dir) =>
-      val out = "/root/repo/target/roundtrip/q85_sink"
-      val chk = "/root/repo/target/roundtrip/q85_chk"
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(chk))
+      val base = Dedup.scratchDir("graft-q85")
+      val (out, chk) = (s"$base/q85_sink", s"$base/q85_chk")
       Drain(Tables.stream(s, dir, "events")
         .select(col("event_id"), col("event_type"))
         .writeStream.format("parquet")

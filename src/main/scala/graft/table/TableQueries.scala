@@ -2,6 +2,7 @@ package graft.table
 
 import graft.{QueryDef, QueryModule, Tables}
 import graft.functions.FlinkFunctions
+import graft.pipeline.Dedup
 import org.apache.spark.sql.functions._
 
 /** Queries through the Table/SQL façade: Flink group-window SQL
@@ -101,9 +102,9 @@ object TableQueries extends QueryModule {
       val env = TableEnv(s)
       env.registerTable("nation_src", Tables.t(s, dir, "nation"))
       s.sql("DROP TABLE IF EXISTS g_nation_sink")
-      s.sql("""CREATE TABLE g_nation_sink (n_nationkey INT, n_name STRING)
-              |USING parquet LOCATION '/root/repo/target/roundtrip/q90_sink'"""
-        .stripMargin)
+      val sink = Dedup.scratchDir("graft-q90") + "/q90_sink"
+      s.sql(s"""CREATE TABLE g_nation_sink (n_nationkey INT, n_name STRING)
+              |USING parquet LOCATION '$sink'""".stripMargin)
       env.sqlUpdate(
         """INSERT OVERWRITE TABLE g_nation_sink
           |SELECT n_nationkey, n_name FROM nation_src WHERE n_regionkey = 2"""

@@ -37,6 +37,34 @@ class ConfigSurfaceSpec extends AnyFunSuite {
       s"environment reads outside the allowed set: ${unexpected.mkString(", ")}")
   }
 
+  /** A string (or SQL single-quoted) literal opening with an absolute
+    * path of at least two segments. */
+  private val absPath = """["'](/[A-Za-z0-9_.-]+){2,}""".r
+
+  test("src/main names no absolute path outside the test-data defaults") {
+    val root = Paths.get("src/main/scala")
+    val sources = Using.resource(Files.walk(root))(
+      _.iterator().asScala.filter(_.toString.endsWith(".scala")).toList)
+    val hits = for {
+      f <- sources
+      file = root.relativize(f).toString
+      (line, n) <- Files.readAllLines(f).asScala.zipWithIndex
+      trimmed = line.trim
+      if !(trimmed.startsWith("//") || trimmed.startsWith("*") ||
+        trimmed.startsWith("/*"))
+      m <- absPath.findAllIn(line)
+    } yield (file, n + 1, m)
+    // a query writes under a per-run Dedup.scratchDir; only the mains'
+    // default scale-factor directories name a fixed location
+    val unexpected = hits.filterNot {
+      case ("graft/Bench.scala" | "graft/SparkEntry.scala" |
+          "graft/tools/Explain.scala", _, p) => p.contains("/testdata/")
+      case _ => false
+    }
+    assert(unexpected.isEmpty,
+      s"absolute paths in src/main: ${unexpected.mkString(", ")}")
+  }
+
   test("no registered oracle is a deliberate SELECT error(...)") {
     val failing = Registry.all.collect {
       case QueryDef(n, Some(sql), _) if sql.trim.toUpperCase.startsWith("SELECT ERROR(") => n

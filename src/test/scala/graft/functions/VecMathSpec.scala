@@ -87,10 +87,6 @@ class VecMathSpec extends SparkSpec {
         df.select(VecMath.vec_nearest_index(bad, Seq(0L -> Seq(0.0, 0.0, 0.0)))).collect()
       }
       assert(e3.getMessage.contains("array<float> or array<double>"), e3.getMessage)
-      val e4 = intercept[org.apache.spark.sql.AnalysisException] {
-        df.select(VecMath.vec_nearest_indices(bad, Seq(Seq(0.0, 0.0, 0.0)), 1)).collect()
-      }
-      assert(e4.getMessage.contains("array<float> or array<double>"), e4.getMessage)
     }
     // the valid element types still pass analysis
     df.select(VecMath.vec_dot(col("fs"), col("fs"))).collect()
@@ -112,40 +108,28 @@ class VecMathSpec extends SparkSpec {
   }
 
   /** The reference argmin the kernel replaced:
-    * array_min(array(struct(round(vec_sq_dist(v, c), 6), id) …)),
-    * restricted to the positions in `cands` when given. */
-  private def referenceArgmin(v: Column, model: Seq[(Long, Seq[Double])],
-      cands: Option[Column]): Column = {
-    val all = array(model.zipWithIndex.map { case ((id, c), p) =>
+    * array_min(array(struct(round(vec_sq_dist(v, c), 6), id) …)). */
+  private def referenceArgmin(v: Column, model: Seq[(Long, Seq[Double])]): Column =
+    array_min(array(model.map { case (id, c) =>
       struct(round(VecMath.vec_sq_dist(v, typedLit(c)), 6).as("dist"),
-        lit(id).as("id"), lit(p).as("pos"))
-    }: _*)
-    array_min(cands.fold(all)(cs =>
-      filter(all, s => array_contains(cs, s.getField("pos"))))).getField("id")
-  }
+        lit(id).as("id"))
+    }: _*)).getField("id")
 
-  /** (kernel, reference) per row of `rows` (id, v, cands), through a
+  /** (kernel, reference) per row of `rows` (id, v), through a
     * non-local plan so the projection really runs under `mode`. */
   private def compare(mode: String, model: Seq[(Long, Seq[Double])],
       rows: Seq[Row], vType: DataType): Unit = {
     val schema = StructType(Seq(StructField("id", LongType),
-      StructField("v", ArrayType(vType, containsNull = false)),
-      StructField("cands", ArrayType(IntegerType, containsNull = false))))
+      StructField("v", ArrayType(vType, containsNull = false))))
     val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), schema)
     val out = df.select(col("id"),
         VecMath.vec_nearest_index(col("v"), model).as("k_all"),
-        referenceArgmin(col("v"), model, None).as("r_all"),
-        VecMath.vec_nearest_index(col("v"), model, Some(col("cands"))).as("k_sub"),
-        referenceArgmin(col("v"), model, Some(col("cands"))).as("r_sub"),
-        size(col("cands")).as("n_sub"))
+        referenceArgmin(col("v"), model).as("r_all"))
       .collect()
     assert(out.length == rows.length)
     out.foreach { r =>
       assert(!r.isNullAt(1) && r.get(1) == r.get(2),
         s"$mode row ${r.getLong(0)}: kernel ${r.get(1)} vs reference ${r.get(2)}")
-      assert(r.get(3) == r.get(4),
-        s"$mode row ${r.getLong(0)} (subset): kernel ${r.get(3)} vs reference ${r.get(4)}")
-      if (r.getInt(5) == 0) assert(r.isNullAt(3), "an empty candidate set must give null")
     }
   }
 
@@ -166,13 +150,6 @@ class VecMathSpec extends SparkSpec {
   private def ids(n: Int, rnd: scala.util.Random): Seq[Long] =
     rnd.shuffle((0 until n).map(i => 1000L - 37L * i))
 
-  private def subset(n: Int, rnd: scala.util.Random): Seq[Int] =
-    rnd.nextInt(4) match {
-      case 0 => Seq.empty
-      case 1 => Seq(rnd.nextInt(n))
-      case _ => (0 until n).filter(_ => rnd.nextBoolean())
-    }
-
   test("vec_nearest_index equals the rounded array_min reference on random float and double vectors") {
     val rnd = new scala.util.Random(42)
     val dim = 16
@@ -180,7 +157,7 @@ class VecMathSpec extends SparkSpec {
     val model = ids(k, rnd).map(id =>
       id -> Seq.fill(dim)(rnd.nextGaussian() * math.pow(10, rnd.nextInt(3) - 1)))
     def rows(toElem: Double => Any) = (0 until 120).map { i =>
-      Row(i.toLong, Seq.fill(dim)(toElem(rnd.nextGaussian())), subset(k, rnd))
+      Row(i.toLong, Seq.fill(dim)(toElem(rnd.nextGaussian())))
     }
     underModes { mode =>
       compare(mode, model, rows(_.toFloat), FloatType)
@@ -208,7 +185,7 @@ class VecMathSpec extends SparkSpec {
     val rows = (0 until 150).map { i =>
       val v = if (i % 3 == 0) Seq(0.0, 0.0)
         else Seq(rnd.nextDouble() * 1e-6, rnd.nextDouble() * 1e-6)
-      Row(i.toLong, v, subset(model.size, rnd))
+      Row(i.toLong, v)
     }
     underModes(mode => compare(mode, model, rows, DoubleType))
     // the tie case by hand: distances 1.7e-6 and 1.6e-6 both round to

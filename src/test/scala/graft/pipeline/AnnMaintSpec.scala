@@ -41,7 +41,7 @@ class AnnMaintSpec extends SparkSpec {
       idx, epoch = 0L)
     val queries = corpus.filter(col("vec_id") < 10)
       .select(col("vec_id"), col("embedding"))
-    def probe() = Similarity.annProbe(spark, idx, queries,
+    def probe() = Similarity.annSearch(spark, idx, queries,
       excludeSelf = true).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
       .toSeq
@@ -102,7 +102,7 @@ class AnnMaintSpec extends SparkSpec {
       idx, epoch = 0L)
     val queries = corpus.filter(col("vec_id") < 10)
       .select(col("vec_id"), col("embedding"))
-    def probe() = Similarity.annProbe(spark, idx, queries,
+    def probe() = Similarity.annSearch(spark, idx, queries,
       excludeSelf = true).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
       .toSeq
@@ -159,7 +159,7 @@ class AnnMaintSpec extends SparkSpec {
     val queries = corpus.filter(col("vec_id") < 10)
       .select(col("vec_id"), col("embedding"))
     def probe(idx: String, asOf: Option[Long]) =
-      Similarity.annProbe(spark, idx, queries, excludeSelf = true,
+      Similarity.annSearch(spark, idx, queries, excludeSelf = true,
         asOfEpoch = asOf).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
         .toSeq

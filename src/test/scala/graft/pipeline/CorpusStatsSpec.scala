@@ -71,43 +71,6 @@ class CorpusStatsSpec extends SparkSpec {
       rs("dd") == 8L)
   }
 
-  // ---- q205 auto-route (r13 verdict item 3) --------------------------
-
-  test("q205 route: below the char threshold the dispatcher IS the exact path") {
-    val docs = graft.Tables.t(spark, sf, "documents")
-    // dispatcher with an unreachable ceiling ≡ registered q205 output
-    val viaDispatch = CorpusStats.sourceOverlap(docs, Long.MaxValue)
-      .collect().toSeq
-    val registered = run("q205_source_overlap").collect().toSeq
-    assert(viaDispatch == registered)
-  }
-
-  test("q205 route: above the threshold the sketch path serves, deterministically, in the exact schema") {
-    val docs = graft.Tables.t(spark, sf, "documents")
-    val exact = CorpusStats.sourceOverlap(docs, Long.MaxValue)
-    val routed = CorpusStats.sourceOverlap(docs, 0L) // force-route
-    assert(routed.schema == exact.schema)
-    val r1 = routed.collect().toSeq
-    assert(r1 == CorpusStats.sourceOverlap(docs, 0L).collect().toSeq,
-      "routed estimate must be deterministic (all-integer estimator)")
-    // the dispatcher really switched: at 16 permutations on this
-    // corpus at least one pair's estimate differs from the exact
-    // intersection (if they ever all coincided the route would be
-    // indistinguishable — fail loudly so the corpus gets swapped)
-    val e = exact.collect().toSeq
-    assert(r1 != e, "force-routed output identical to exact — route not taken?")
-    // estimator sanity on every pair: integer bounds and a consistent
-    // jaccard recomputed from the emitted inter
-    r1.foreach { r =>
-      val (na, nb, inter) = (r.getAs[Long]("n_a"), r.getAs[Long]("n_b"),
-        r.getAs[Long]("inter"))
-      assert(inter >= 0L && inter <= na + nb)
-      val j = r.getAs[Double]("jaccard")
-      assert(j == BigDecimal(inter.toDouble / (na + nb - inter).toDouble)
-        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
-    }
-  }
-
   test("q227 fertility: integer ratios match a driver-side recomputation exactly") {
     val rows = graft.Registry.all.find(_.name == "q227_tokenizer_fertility")
       .get.fn(spark, sf).collect()

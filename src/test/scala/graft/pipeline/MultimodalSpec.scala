@@ -239,34 +239,7 @@ class MultimodalSpec extends SparkSpec {
     }
   }
 
-  test("q224 dup-heavy route expands distinct-signature pairs back to EXACTLY the all-docs list") {
-    // replicate the organic corpus 3x with IDENTICAL payloads (ids
-    // shifted) — signature dup ratio 3 fires the route
-    val base = graft.Tables.t(spark, sf, "documents")
-      .select(col("doc_id"), col("text"))
-    val docs = base
-      .unionByName(base.select((col("doc_id") + 10000L).as("doc_id"), col("text")))
-      .unionByName(base.select((col("doc_id") + 20000L).as("doc_id"), col("text")))
-    val out = new java.io.ByteArrayOutputStream()
-    val routed = Console.withOut(new java.io.PrintStream(out)) {
-      Multimodal.phashNearDup(docs).collect()
-    }.map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    assert(out.toString.contains("[phash-route]"),
-      "signature dup ratio 3 must trigger the distinct-signature route")
-    // truth: the FULL all-docs pair list (forced exact) — the r17
-    // expansion route must reproduce it bit for bit, including the
-    // within-signature hamming-0 pairs the r16 representative route
-    // dropped (the r16 ADVICE q224 item)
-    val truth = Multimodal.phashNearDup(docs, routeDupRatio = Long.MaxValue)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    assert(truth.nonEmpty, "no pairs — spec lost its teeth")
-    assert(truth.exists(_._3 == 0),
-      "cloned corpus must contain within-signature hamming-0 pairs")
-    assert(routed == truth,
-      s"route diverged: missing=${truth -- routed}, extra=${routed -- truth}")
-  }
-
-  test("q239/q245 clone routes: pair list and components EXACTLY the unrouted results") {
+  test("q245 clusters are the components of its consistent pairs") {
     import spark.implicits._
     // 4 clone families × 12 copies + 2 singletons. Families f0/f1
     // share most words (near-dup texts), f2 is distinct prose, f3 has
@@ -285,84 +258,32 @@ class MultimodalSpec extends SparkSpec {
       .unionByName(Seq((100L, "singleton one has its own words here okay"),
         (101L, "another loner with completely private vocabulary indeed"))
         .toDF("doc_id", "text"))
-    val out = new java.io.ByteArrayOutputStream()
-    val routed = Console.withOut(new java.io.PrintStream(out)) {
-      Multimodal.crossModalPairs(docs).collect()
-    }.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3),
-      r.getString(4))).toSet
-    assert(out.toString.contains("[textpairs-route]"),
-      "payload dup ratio 8 must trigger the text clone route")
-    // truth: both routes forced off
-    val truth = {
-      val text = graft.pipeline.Dedup.lshVerifiedPairs(docs)
-        .select(col("doc_a"), col("doc_b"), col("jacc"))
-      val media = Multimodal.phashNearDup(docs, routeDupRatio = Long.MaxValue)
-        .select(col("doc_a"), col("doc_b"), col("hamming"))
-      text.join(media, Seq("doc_a", "doc_b"), "full_outer")
-        .select(col("doc_a"), col("doc_b"),
-          coalesce(col("jacc"), lit(-1.0)).as("jacc"),
-          coalesce(col("hamming"), lit(-1)).cast("int").as("hamming"),
-          when(col("jacc").isNotNull && col("hamming").isNotNull,
-            "consistent").when(col("jacc").isNotNull, "text_only")
-            .otherwise("media_only").as("verdict"))
-    }.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
-      r.getInt(3), r.getString(4))).toSet
-    assert(truth.exists(_._5 == "consistent") && truth.size > 100,
+    val pairs = Multimodal.crossModalPairs(docs).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getString(4)))
+    assert(pairs.exists(_._3 == "consistent") && pairs.length > 100,
       "constructed corpus must have a rich pair list — spec lost its teeth")
-    assert(routed == truth,
-      s"clone route diverged: missing=${(truth -- routed).take(5)}, " +
-        s"extra=${(routed -- truth).take(5)}")
-    // q245's star-edge route: components must equal the full graph's
-    def comps(edges: org.apache.spark.sql.DataFrame): Map[Long, Long] =
-      graft.graph.Graph.fromEdges(
-          edges.select(col("doc_a").as("src"), col("doc_b").as("dst")))
-        .connectedComponents().collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val routedC = Console.withOut(new java.io.PrintStream(
-      new java.io.ByteArrayOutputStream())) {
-      comps(Multimodal.crossModalCcEdges(docs))
+    // truth: union-find over the consistent pairs, named by min id
+    val parent = scala.collection.mutable.Map[Long, Long]()
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
     }
-    val truthC = comps(spark.createDataFrame(
-      spark.sparkContext.parallelize(truth.filter(_._5 == "consistent")
-        .map(t => org.apache.spark.sql.Row(t._1, t._2)).toSeq),
-      new org.apache.spark.sql.types.StructType()
-        .add("doc_a", "long").add("doc_b", "long")))
-    assert(routedC == truthC,
-      "star-edge components diverged from the all-pairs graph's")
+    pairs.filter(_._3 == "consistent").foreach { case (a, b, _) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    val truth = parent.keys.toSeq.map(id => id -> find(id)).toMap
+    val rows = graft.Registry.all
+      .find(_.name == "q245_crossmodal_dedup_clusters").get
+      .fn(spark, {
+        val dir = java.nio.file.Files.createTempDirectory("graft_q245").toString
+        docs.coalesce(1).write.parquet(dir + "/documents.parquet"); dir
+      })
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(rows == truth, "q245 components diverged from the consistent graph's")
     // shingle-less family f3 must never merge: its members are
     // media-only pairs, absent from the consistent graph entirely
-    assert(!truthC.keySet.exists(id => id % 4 == 3 && id < 48))
-  }
-
-  test("q239 output-asymmetry route assembles EXACTLY the full-outer verdict table") {
-    // the q224 construct: the organic corpus replicated 3x with
-    // identical payloads — signature dup ratio 3, so the asym probe
-    // runs; rails forced (media >= 1, text cap high) to fire the
-    // shuffle-free assembly
-    val base = graft.Tables.t(spark, sf, "documents")
-      .select(col("doc_id"), col("text"))
-    val docs = base
-      .unionByName(base.select((col("doc_id") + 10000L).as("doc_id"), col("text")))
-      .unionByName(base.select((col("doc_id") + 20000L).as("doc_id"), col("text")))
-    def run(asymMedia: Long) = {
-      val out = new java.io.ByteArrayOutputStream()
-      val r = Console.withOut(new java.io.PrintStream(out)) {
-        Multimodal.crossModalPairs(docs, asymMediaPairs = asymMedia,
-          asymTextRows = Long.MaxValue).collect()
-      }.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3),
-        r.getString(4))).toSet
-      (r, out.toString)
-    }
-    val (routed, log) = run(1L)
-    assert(log.contains("[xmodal-asym]") && log.contains("shuffle-free"),
-      "forced rails must fire the asymmetric assembly")
-    val (truth, _) = run(Long.MaxValue)
-    assert(truth.count(_._5 == "media_only") > 0
-      && truth.count(_._5 == "consistent") > 0,
-      "construct must exercise both branches — spec lost its teeth")
-    assert(routed == truth,
-      s"asym route diverged: missing=${(truth -- routed).take(5)}, " +
-        s"extra=${(routed -- truth).take(5)}")
+    assert(!rows.keySet.exists(id => id % 4 == 3 && id < 48))
   }
 
   test("q245 clusters only cross-modally CONSISTENT pairs; single-modality evidence never merges") {
@@ -403,8 +324,6 @@ class MultimodalSpec extends SparkSpec {
       "reordered-words pair must not be cross-modally consistent"))
   }
 
-  // ---- q235 scale guards (r16 — the r15 verdict's one `weak`) -------
-
   /** Loud/quiet alternating 64-byte frames: every loud frame is an
     * energy peak (both neighbors quieter), so landmark structure is
     * fully controlled. `frames` frames; loud byte `loud`, quiet byte
@@ -416,99 +335,24 @@ class MultimodalSpec extends SparkSpec {
       b.toString * 64
     }.mkString
 
-  private def enOf(docs: org.apache.spark.sql.DataFrame) =
-    docs.select(col("doc_id"),
-      graft.functions.MediaSig.frame_energies(
-        encode(col("text"), "UTF-8")).as("en"))
-
-  test("q235 clone route: dup-heavy corpus collapses per side, output EXACTLY the unrouted result") {
-    import spark.implicits._
-    // 12 clone families × 50 copies = 600 docs, dup ratio 50 — the
-    // route fires. Families differ in loud-byte value AND frame count
-    // so their landmark keys differ; ids 0..599 spread every family
-    // across both sides of the %10 split.
-    val base = (0 until 12).map(g =>
-      framedPayload(14 + g, ('d' + g).toChar, '2'))
-    val docs = (0 until 600).map(i => (i.toLong, base(i % 12)))
-      .toDF("doc_id", "text")
-    val out = new java.io.ByteArrayOutputStream()
-    val routed = Console.withOut(new java.io.PrintStream(out)) {
-      Multimodal.mediaAlign(docs).collect()
-    }.map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    assert(out.toString.contains("[align-route]"),
-      "dup ratio 50 must trigger the clone-collapse route")
-    val truth = Multimodal
-      .alignVotes(Multimodal.alignLandmarks(enOf(docs)), None, Long.MaxValue)
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    assert(truth.nonEmpty, "constructed corpus produced no alignments — spec lost its teeth")
-    assert(routed == truth,
-      s"clone route diverged: missing=${truth -- routed}, extra=${routed -- truth}")
-  }
-
-  test("q235 vote budget refuses saturated keys, both sides, deterministically") {
+  test("q235 saturated keys: every query aligns to doc 0 at offset 0") {
     import spark.implicits._
     // 40 docs, all sharing ONE landmark-key set (identical peak
     // structure) but pairwise-distinct energy profiles (each doc
     // patches a different QUIET frame with a unique byte — quiet
-    // frames never enter landmark keys, so keys saturate while the
-    // clone route stays off).
+    // frames never enter landmark keys, so keys saturate).
     val docs = (0 until 40).map { i =>
       (i.toLong, framedPayload(20, 'z', 'a',
         patch = Map(2 * (i % 10) -> ('a' + 1 + i / 10).toChar)))
     }.toDF("doc_id", "text")
-    // guards off: every query aligns to corpus doc 0 at offset 0 (all
-    // profiles share keys; offset-0 votes dominate; min-id tie-break)
+    // every query aligns to corpus doc 0 at offset 0 (all profiles
+    // share keys; offset-0 votes dominate; min-id tie-break)
     val full = Multimodal.mediaAlign(docs).collect()
     assert(full.length == 4)
     full.foreach { r =>
       assert(r.getLong(1) == 0L && r.getLong(2) == 0L,
         s"expected (match 0, offset 0), got $r")
     }
-    val fullVotes = full.map(r => r.getLong(3)).max
-    // budget 0 FLOORS to the coolest key (r16 ADVICE: a budget below
-    // even the coolest key must not silently return an empty table):
-    // the coolest key is dt=14, which alone aligns every query
-    val out0 = new java.io.ByteArrayOutputStream()
-    val floored = Console.withOut(new java.io.PrintStream(out0)) {
-      Multimodal.mediaAlign(docs, voteBudget = 0L).collect()
-    }
-    assert(out0.toString.contains("flooring"),
-      "budget below the coolest key must WARN about the floor")
-    assert(floored.length == 4,
-      "floored run must still align every query on the coolest key")
-    floored.foreach { r =>
-      assert(r.getLong(1) == 0L && r.getLong(2) == 0L)
-      assert(r.getLong(3) < fullVotes,
-        "floored votes must be strictly below the exact run's")
-    }
-    // middle budget: keys are the peak-pair gaps dt = 2,4,...,14; the
-    // key dt carries (18-dt)/2 anchors per doc, so its predicted vote
-    // rows are v = (4·a)·(36·a). The coolest key (dt=14, a=2) has
-    // v = 8·72 = 576; the next (dt=12, a=3) already cumulates past
-    // 600 — budget 600 keeps exactly the dt=14 key, and alignments
-    // survive on it with strictly fewer votes than the exact run
-    val out = new java.io.ByteArrayOutputStream()
-    val capped = Console.withOut(new java.io.PrintStream(out)) {
-      Multimodal.mediaAlign(docs, voteBudget = 600L).collect()
-    }
-    assert(out.toString.contains("[align-budget]"),
-      "budget overrun must WARN loudly")
-    assert(capped.length == 4, "capped run must still align every query")
-    capped.foreach { r =>
-      assert(r.getLong(1) == 0L && r.getLong(2) == 0L)
-      assert(r.getLong(3) < fullVotes,
-        "capped votes must be strictly below the exact run's")
-    }
-    // the explicit maxKeyDf dial (df in landmark ROWS, both sides):
-    // the hottest key (dt=2, 8 anchors/doc) has df = 40·8 = 320, the
-    // coolest (dt=14) df = 40·2 = 80 — cap 320 keeps everything
-    // (== exact), cap 79 refuses everything
-    val dialAll = Multimodal.mediaAlign(docs, maxKeyDf = Some(320L))
-      .collect().map(r => (r.getLong(0), r.getLong(3))).toSet
-    assert(dialAll == full.map(r => (r.getLong(0), r.getLong(3))).toSet)
-    assert(Multimodal.mediaAlign(docs, maxKeyDf = Some(79L))
-      .collect().isEmpty)
   }
 
   test("q224: identical payloads hash identically (hamming-0 pair)") {

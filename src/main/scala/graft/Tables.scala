@@ -1,8 +1,11 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr}
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Parquet star-schema loaders for the sf testdata (TESTDATA.md),
   * batch ([[t]]) and streaming ([[stream]]) — the one module that knows
@@ -11,6 +14,11 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * All reads go through the parquet source so Catalyst gets column
   * pruning + filter pushdown into the scan for free — at 100 TB these
   * scans are the dominant cost and must stay prunable.
+  *
+  * Every read passes the table's schema to the parquet source. Without
+  * one, Spark infers it on each read with a one-task job that reads a
+  * file footer; here it is inferred once per JVM and table, and again
+  * only when the table's files or the inference settings change.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -29,18 +37,58 @@ object Tables {
     * directly. */
   def stream(spark: SparkSession, dir: String, name: String): DataFrame = {
     val file = new java.io.File(s"$dir/$name.parquet")
-    val r = spark.readStream.schema(read(spark, dir, name).schema)
+    val r = spark.readStream.schema(schema(spark, dir, name))
     normalized(name,
       if (file.isDirectory) r.parquet(file.getPath)
       else r.option("pathGlobFilter", file.getName).parquet(dir))
   }
 
-  private def read(spark: SparkSession, dir: String, name: String): DataFrame = {
+  private def read(spark: SparkSession, dir: String, name: String): DataFrame =
+    spark.read.schema(schema(spark, dir, name)).parquet(s"$dir/$name.parquet")
+
+  /** Parquet settings that change the types Spark infers from a file. */
+  private val inferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled")
+
+  /** What an inferred schema depends on: the table's files (name,
+    * length, modification time — a single file, or the data files of
+    * a tools.Scale directory) and the inference settings. */
+  private final case class Stamp(files: Seq[(String, Long, Long)],
+      confs: Seq[Option[String]])
+
+  /** Table path → the schema inferred for it and the stamp it was
+    * inferred under: one entry per table path. */
+  private val schemas = new ConcurrentHashMap[String, (Stamp, StructType)]()
+
+  /** The table's schema as Spark infers it, inferred again only when
+    * the stamp changed since the last read of the same path. */
+  private def schema(spark: SparkSession, dir: String, name: String): StructType = {
     // TIMESTAMP(NANOS) events.ts is refused by Spark's µs TimestampType
     // unless read as raw int64 (see [[normalized]])
     if (name == "events")
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.read.parquet(s"$dir/$name.parquet")
+    val path = new Path(s"$dir/$name.parquet")
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val qualified = fs.makeQualified(path)
+    val top = fs.getFileStatus(qualified)
+    val files: Seq[FileStatus] =
+      if (!top.isDirectory) Seq(top)
+      else fs.listStatus(qualified).toSeq.filterNot { f =>
+        val n = f.getPath.getName
+        n.startsWith("_") || n.startsWith(".")
+      }
+    val stamp = Stamp(
+      files.map(f => (f.getPath.getName, f.getLen, f.getModificationTime)).sorted,
+      inferenceConfs.map(spark.conf.getOption))
+    val key = qualified.toString
+    Option(schemas.get(key)).collect { case (`stamp`, s) => s }.getOrElse {
+      val s = spark.read.parquet(key).schema
+      schemas.put(key, (stamp, s))
+      s
+    }
   }
 
   /** The sf testdata's events.parquet has shipped ts three ways across

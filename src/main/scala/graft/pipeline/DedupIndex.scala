@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Persisted standing-index facade for incremental dedup — the
   * production surface q166's scaladoc promised: a daily-ingest
@@ -145,6 +146,30 @@ object DedupIndex {
           "written by a pre-metadata version); rebuild with DedupIndex.save")
     }
 
+  /** The three tables' schemas, partition column last, as Spark infers
+    * them from a saved index ([[save]] and [[update]] write exactly
+    * these; [[open]] reads with them, so opening an index runs no
+    * footer-reading job). */
+  private[pipeline] val bandsSchema = StructType(Seq(
+    StructField("doc_id", LongType), StructField("band", IntegerType),
+    StructField("bval", LongType), StructField("pb", IntegerType)))
+  private[pipeline] val bucketStatsSchema = StructType(Seq(
+    StructField("band", IntegerType), StructField("bval", LongType),
+    StructField("n", LongType)))
+  /** `shingleLayout` names the partition column: "pd" or "pb". */
+  private[pipeline] def shinglesSchema(shingleLayout: String): StructType = {
+    if (shingleLayout != "pd" && shingleLayout != "pb")
+      throw new IllegalStateException(
+        s"unknown shingleLayout '$shingleLayout' in index metadata")
+    StructType(Seq(StructField("doc_id", LongType),
+      StructField("shingles", ArrayType(StringType)),
+      StructField(shingleLayout, IntegerType)))
+  }
+
+  /** `df`'s columns in `schema`'s order, cast to its types. */
+  private def conform(df: DataFrame, schema: StructType): DataFrame =
+    df.select(schema.fields.toSeq.map(f => col(f.name).cast(f.dataType)): _*)
+
   /** (doc_id, band, bval) — one row per LSH band of each document. */
   private[pipeline] def bandRows(docs: DataFrame): DataFrame =
     Dedup.minhashSignatures(docs)
@@ -167,19 +192,19 @@ object DedupIndex {
     * colocates the row with the band index — one copy under every
     * DISTINCT band bucket of the doc's bands (≤ 4). */
   private def shingleTable(delta: DataFrame, bands: DataFrame,
-      m: Meta): (DataFrame, String) = m.shingleLayout match {
+      m: Meta): DataFrame = m.shingleLayout match {
     case "pd" =>
-      (shingleRows(delta)
-        .withColumn("pd", pmod(col("doc_id"), lit(m.docBuckets))), "pd")
+      shingleRows(delta)
+        .withColumn("pd", pmod(col("doc_id"), lit(m.docBuckets)))
     case "pb" =>
       // the stored pb is the GROUPED bucket (pb % shingleGroups) —
       // distinct AFTER grouping, so two band buckets of one doc that
       // fall in the same group store one copy, not two
-      (shingleRows(delta).join(
+      shingleRows(delta).join(
         bands.select(col("doc_id"),
           pmod(pmod(col("bval"), lit(m.bandBuckets)),
             lit(m.effShingleGroups)).as("pb")).distinct(),
-        "doc_id"), "pb")
+        "doc_id")
     case other => throw new IllegalStateException(
       s"unknown shingleLayout '$other' in index metadata")
   }
@@ -223,29 +248,7 @@ object DedupIndex {
     require(shingleGroups <= bb,
       "shingleGroups coarsens band buckets — more groups than buckets is a typo")
     val m = Meta(bb, db, shingleLayout, shingleGroups)
-    // repartition ON the partition column before partitionBy: without
-    // it every write task emits one file per bucket value it holds
-    // (tasks × buckets small files — at a raised fan-out that is a
-    // file-count explosion); with it each bucket's rows land in one
-    // task, so the index is ~one file per bucket.
-    //
-    // r17 OPT (guide §1.2/§2.4 — don't compute things twice): the band
-    // table feeds THREE consumers below (bands write, bucket_stats,
-    // and the pb shingle layout); each previously replayed the full
-    // shingle + md5 + min-signature pass over the corpus. One
-    // localCheckpoint materializes it once — the checkpointed table is
-    // 4 small rows per doc, orders of magnitude lighter than the
-    // corpus scan it replaces.
-    val bands = bandRows(corpus).localCheckpoint()
-    bands
-      .withColumn("pb", pmod(col("bval"), lit(bb)))
-      .repartition(col("pb"))
-      .write.mode("overwrite").partitionBy("pb").parquet(s"$path/bands")
-    bands.groupBy(col("band"), col("bval")).agg(count(lit(1)).as("n"))
-      .write.mode("overwrite").parquet(s"$path/bucket_stats")
-    val (sh, pcol) = shingleTable(corpus, bands, m)
-    sh.repartition(col(pcol))
-      .write.mode("overwrite").partitionBy(pcol).parquet(s"$path/shingles")
+    write(corpus, m, path, "overwrite")
     writeMeta(path, m)
   }
 
@@ -253,20 +256,38 @@ object DedupIndex {
     * admitted it): new files in existing partitions, nothing about
     * the standing corpus is read or rewritten — including the bucket
     * stats, whose per-append partial counts are additive. */
-  def update(delta: DataFrame, path: String): Unit = {
-    val m = meta(path)
-    // r17 OPT: same one-materialization argument as [[save]] (two to
-    // three consumers of the delta's band table)
-    val bands = bandRows(delta).localCheckpoint()
-    bands
-      .withColumn("pb", pmod(col("bval"), lit(m.bandBuckets)))
+  def update(delta: DataFrame, path: String): Unit =
+    write(delta, meta(path), path, "append")
+
+  /** The three writes of [[save]] ("overwrite") and [[update]]
+    * ("append"), each in its declared schema.
+    *
+    * Repartition ON the partition column before partitionBy: without
+    * it every write task emits one file per bucket value it holds
+    * (tasks × buckets small files — at a raised fan-out that is a
+    * file-count explosion); with it each bucket's rows land in one
+    * task, so the index is ~one file per bucket.
+    *
+    * r17 OPT (guide §1.2/§2.4 — don't compute things twice): the band
+    * table feeds THREE consumers below (bands write, bucket_stats,
+    * and the pb shingle layout); each previously replayed the full
+    * shingle + md5 + min-signature pass over the docs. One
+    * localCheckpoint materializes it once — the checkpointed table is
+    * 4 small rows per doc, orders of magnitude lighter than the
+    * scan it replaces. */
+  private def write(docs: DataFrame, m: Meta, path: String,
+      mode: String): Unit = {
+    val bands = bandRows(docs).localCheckpoint()
+    conform(bands.withColumn("pb", pmod(col("bval"), lit(m.bandBuckets))),
+      bandsSchema)
       .repartition(col("pb"))
-      .write.mode("append").partitionBy("pb").parquet(s"$path/bands")
-    bands.groupBy(col("band"), col("bval")).agg(count(lit(1)).as("n"))
-      .write.mode("append").parquet(s"$path/bucket_stats")
-    val (sh, pcol) = shingleTable(delta, bands, m)
-    sh.repartition(col(pcol))
-      .write.mode("append").partitionBy(pcol).parquet(s"$path/shingles")
+      .write.mode(mode).partitionBy("pb").parquet(s"$path/bands")
+    conform(bands.groupBy(col("band"), col("bval")).agg(count(lit(1)).as("n")),
+      bucketStatsSchema)
+      .write.mode(mode).parquet(s"$path/bucket_stats")
+    val sh = conform(shingleTable(docs, bands, m), shinglesSchema(m.shingleLayout))
+    sh.repartition(col(m.shingleLayout))
+      .write.mode(mode).partitionBy(m.shingleLayout).parquet(s"$path/shingles")
   }
 
   /** Score a delta against the stored index: same (doc_id, n_dups,
@@ -304,11 +325,13 @@ object DedupIndex {
       private[pipeline] val shingles: DataFrame,
       private[pipeline] val bucketStats: DataFrame)
 
-  def open(s: SparkSession, path: String): Opened =
-    new Opened(meta(path),
-      s.read.parquet(s"$path/bands"),
-      s.read.parquet(s"$path/shingles"),
-      s.read.parquet(s"$path/bucket_stats"))
+  def open(s: SparkSession, path: String): Opened = {
+    val m = meta(path)
+    new Opened(m,
+      s.read.schema(bandsSchema).parquet(s"$path/bands"),
+      s.read.schema(shinglesSchema(m.shingleLayout)).parquet(s"$path/shingles"),
+      s.read.schema(bucketStatsSchema).parquet(s"$path/bucket_stats"))
+  }
 
   def dedupDelta(idx: Opened, delta: DataFrame,
       maxBucketWidth: Int): DataFrame = {

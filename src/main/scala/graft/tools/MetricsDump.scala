@@ -1,13 +1,23 @@
 package graft.tools
 
+import java.util.concurrent.atomic.AtomicInteger
+
 import graft.{Registry, Session}
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Dev tool (r18): run ONE registry query through the noop sink and
   * print the final adaptive plan with PER-NODE RUNTIME METRICS
   * (output rows, codegen/agg/join times, shuffle bytes) — the SQL-tab
-  * view for a UI-less sandbox (guide §7.1/§7.2).
+  * view for a UI-less sandbox (guide §7.1/§7.2). For the cold and the
+  * warm run it also prints one `[run]` line: the Spark jobs started
+  * inside `QueryDef.fn` versus in the final action, and the Janino
+  * compiles of the run with their time (CodegenMetrics), so a
+  * schema-inference job or a codegen-cache miss shows without a UI.
   *
   * Usage: MetricsDump <sfDir> <queryName>
   */
@@ -21,12 +31,15 @@ object MetricsDump {
     // #tasks) — serial gaps between jobs are driver-side work
     val t0 = System.nanoTime()
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (Long, Int)]()
+    val started = new AtomicInteger()
     spark.sparkContext.addSparkListener(
       new org.apache.spark.scheduler.SparkListener {
         override def onJobStart(
-            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+          started.incrementAndGet()
           jobs.put(e.jobId, (System.nanoTime(),
             e.stageInfos.map(_.numTasks).sum))
+        }
         override def onJobEnd(
             e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
           val (s, nt) = jobs.getOrDefault(e.jobId, (System.nanoTime(), -1))
@@ -52,14 +65,28 @@ object MetricsDump {
             f"taskSum=${ts.sum}%7d")
         }
       })
-    // warm-up run (JIT, codegen cache, listing) — the bench discards
-    // run 1 too; metrics below come from the WARM run
-    d.fn(spark, dir).collect()
-    println(s"[job] ===== warm run starts =====")
-    val df = d.fn(spark, dir)
+    def jobsSoFar: Int = { Bridge.drainListenerBus(spark); started.get }
+    def compiles: (Long, Double) =
+      (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime / 1e6)
     // collect() (not a write) so THIS queryExecution is the executed
     // one and its metric accumulators fill; output sizes here are tiny
-    df.collect()
+    def run(label: String): DataFrame = {
+      val (c0, ms0) = compiles
+      val j0 = jobsSoFar
+      val df = d.fn(spark, dir)
+      val j1 = jobsSoFar
+      df.collect()
+      val j2 = jobsSoFar
+      val (c1, ms1) = compiles
+      println(f"[run] $label fn_jobs=${j1 - j0} action_jobs=${j2 - j1} " +
+        f"compiles=${c1 - c0} compile_ms=${ms1 - ms0}%.1f")
+      df
+    }
+    // warm-up run (JIT, codegen cache, listing) — the bench discards
+    // run 1 too; metrics below come from the WARM run
+    run("cold")
+    println(s"[job] ===== warm run starts =====")
+    val df = run("warm")
     println(f"[job] TOTAL ${(System.nanoTime() - t0) / 1e9}%6.2f s")
     def walk(p: SparkPlan, depth: Int): Unit = {
       val ms = p.metrics.map { case (k, m) =>

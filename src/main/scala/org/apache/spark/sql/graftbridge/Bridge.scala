@@ -8,7 +8,8 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * the supported pattern for third-party Catalyst expressions (the
   * same access path SparkSessionExtensions-registered functions use
   * internally). Lives under org.apache.spark.sql so private[sql]
-  * members resolve; nothing else from the internals is touched.
+  * members resolve; the only other internals touched are the state
+  * store's unload and the driver's listener bus.
   */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -28,6 +29,11 @@ object Bridge {
     * in the same JVM. Providers re-load lazily on the next streaming
     * query, so this is safe mid-session.
     */
+  /** Block until every event posted so far has reached every
+    * SparkListener, so a listener's job count is exact when read. */
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+
   def resetStreamingState(spark: SparkSession): Unit = {
     spark.streams.active.foreach(_.stop())
     org.apache.spark.sql.execution.streaming.state.StateStore.stop()

@@ -88,6 +88,28 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("LeftSemi"))
   }
 
+  test("q120 sketches per flag: the HLL aggregate groups by l_returnflag alone") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.HyperLogLogPlusPlus
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    val df = Registry.all.find(_.name == "q120_hll_distinct").get.fn(spark, sf)
+    df.queryExecution.toRdd.foreach(_ => ())
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case _ => p.children
+    }).flatMap(nodes)
+    val sketching = nodes(df.queryExecution.executedPlan).collect {
+      case a: BaseAggregateExec
+          if a.aggregateExpressions.exists(_.aggregateFunction.isInstanceOf[HyperLogLogPlusPlus]) =>
+        a.groupingExpressions.map(_.name)
+    }
+    // the one-distinct plan also sketches in its per-(flag, part) aggregates
+    assert(sketching.nonEmpty && sketching.forall(_ == Seq("l_returnflag")),
+      s"HLL aggregates group by: $sketching")
+  }
+
   test("q117 reads lineitem once and shuffles it once on its natural key") {
     val p = plan("q117_waiting_orders")
     // The single-pass aggregation form: no anti join, one fact-table

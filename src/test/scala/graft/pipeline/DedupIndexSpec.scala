@@ -210,4 +210,19 @@ class DedupIndexSpec extends SparkSpec {
     assert(a.nonEmpty && a.sameElements(b),
       "dedup verdict depends on the index fan-out")
   }
+
+  test("open reads the declared schemas: no Spark job, and each equals Spark's inference") {
+    val corpus = docs.filter(col("doc_id") % 10 =!= 9)
+    for (layout <- Seq("pd", "pb")) {
+      val path = tmp()
+      DedupIndex.save(corpus, path, shingleLayout = layout)
+      val (idx, jobs) = jobsDuring(DedupIndex.open(spark, path))
+      assert(jobs == 0, s"$layout: open started $jobs jobs")
+      val declared = Seq("bands" -> idx.bands, "shingles" -> idx.shingles,
+        "bucket_stats" -> idx.bucketStats)
+      for ((table, df) <- declared)
+        assert(df.schema == spark.read.parquet(s"$path/$table").schema,
+          s"$layout $table: declared ${df.schema} is not what Spark infers")
+    }
+  }
 }

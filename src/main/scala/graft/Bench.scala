@@ -203,11 +203,7 @@ object Bench {
     // optional args restrict the run (isolation probes: one query,
     // first-in-JVM, no cross-query state-store pollution); a name the
     // registry lacks fails the run instead of shrinking the total
-    val names = if (args.nonEmpty) args.toSeq else headline
-    val unknown = names.filterNot(Registry.all.map(_.name).toSet)
-    require(unknown.isEmpty,
-      s"unknown query name(s), not in Registry.all: ${unknown.mkString(", ")}")
-    val defs = Registry.all.filter(d => names.contains(d.name))
+    val defs = Registry.named(if (args.nonEmpty) args.toSeq else headline)
     val (load0, njava0) = runContext
     val spark = Session.local()
 

@@ -63,4 +63,15 @@ object Registry {
     require(dup.isEmpty, s"duplicate query names: ${dup.mkString(",")}")
     qs
   }
+
+  /** The registered queries `names` names, in that order. A name the
+    * registry lacks throws, listing every such name, so a typo fails
+    * the run instead of silently thinning it. */
+  def named(names: Seq[String]): Seq[QueryDef] = {
+    val byName = all.map(d => d.name -> d).toMap
+    val unknown = names.filterNot(byName.contains)
+    require(unknown.isEmpty,
+      s"unknown query name(s), not in Registry.all: ${unknown.mkString(", ")}")
+    names.map(byName)
+  }
 }

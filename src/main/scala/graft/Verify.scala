@@ -9,16 +9,16 @@ import com.fasterxml.jackson.module.scala.DefaultScalaModule
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
-    // dev-only: extra args select a subset of queries to dump
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args.drop(2).toSet) else None
+    // dev-only: extra args select a subset of queries to dump (an
+    // unregistered name fails the run before the session starts)
+    val only: Option[Seq[QueryDef]] =
+      if (args.length > 2) Some(Registry.named(args.drop(2).toSeq)) else None
+    val queries = only.fold(SparkEntry.queries.toSeq)(_.map(d => d.name -> d.fn))
     val spark = Session.local()
     new java.io.File(outDir).mkdirs()
     var dumped = 0
     val failed = scala.collection.mutable.ListBuffer[String]()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    queries.foreach { case (name, fn) =>
       try {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")

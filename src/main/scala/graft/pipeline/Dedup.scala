@@ -214,13 +214,13 @@ object Dedup extends QueryModule {
       // update below, which runs after the stream stops)
       val idx = DedupIndex.open(s, idxPath)
       val emptyDelta = docs.limit(0).select(col("doc_id"), col("text"))
-      DedupIndex.dedupDelta(idx, emptyDelta, Int.MaxValue)
+      DedupIndex.dedupDelta(idx, emptyDelta)
         .write.mode("overwrite").parquet(outPath)
       emptyDelta.write.mode("overwrite").parquet(admittedPath)
       Drain(stream.writeStream
         .option("checkpointLocation", tmp("graft-ingest-ckpt"))
         .foreachBatch { (batch: DataFrame, _: Long) =>
-          val verdict = DedupIndex.dedupDelta(idx, batch, Int.MaxValue)
+          val verdict = DedupIndex.dedupDelta(idx, batch)
             .localCheckpoint()
           verdict.write.mode("append").parquet(outPath)
           // day-close commit source: only docs the verdict admitted
@@ -704,24 +704,11 @@ object Dedup extends QueryModule {
   private def lshVerifiedPairs(s: SparkSession, dir: String): DataFrame =
     lshVerifiedPairs(Tables.t(s, dir, "documents"))
 
-  private[pipeline] def lshVerifiedPairs(docs: DataFrame): DataFrame =
-    lshVerifiedPairs(docs, maxBucketWidth = Int.MaxValue)
-
-  private[pipeline] def lshVerifiedPairs(docs: DataFrame,
-      maxBucketWidth: Int): DataFrame =
-    lshVerifiedPairs(docs, maxBucketWidth, forceStringVerify = false)
-
-  /** @param maxBucketWidth drop band buckets wider than this BEFORE
-    *   the pair join — the 100 TB safety valve against degenerate
-    *   buckets (replicated or boilerplate-heavy corpora make bucket
-    *   sizes, and so candidate pairs, grow quadratically; a bucket
-    *   that wide is boilerplate by definition). An explicit recall
-    *   trade-off: the default keeps exact semantics.
-    * @param forceStringVerify test dial: skip the hashed-shingle
+  /** @param forceStringVerify test dial: skip the hashed-shingle
     *   verify and ship the string arrays (the pre-r17 plan), so
     *   DedupSpec can pin hashed ≡ string. */
-  private[pipeline] def lshVerifiedPairs(docs: DataFrame, maxBucketWidth: Int,
-      forceStringVerify: Boolean): DataFrame = {
+  private[pipeline] def lshVerifiedPairs(docs: DataFrame,
+      forceStringVerify: Boolean = false): DataFrame = {
     // r17 OPT (guide §1.2 — don't compute things twice): ONE shingling
     // pass. The string shingle table checkpoints once and feeds the
     // injectivity certificate, the minhash signatures, the hashed
@@ -757,20 +744,9 @@ object Dedup extends QueryModule {
     // join linear in bucket sizes. An OR-of-bands join condition
     // would compile to a nested-loop O(n²) plan instead.
     val sig = minhashFromShingles(shlStr)
-    val allBands = sig.select(col("doc_id"),
+    val bands = sig.select(col("doc_id"),
       posexplode(array(col("m0"), col("m1"), col("m2"), col("m3")))
         .as(Seq("band", "bval")))
-    val bands =
-      if (maxBucketWidth == Int.MaxValue) allBands
-      else {
-        // one extra partial+final count on the bucket key (same
-        // partitioning as the join) — cheap insurance at scale
-        val widths = allBands.groupBy(col("band"), col("bval"))
-          .agg(count(lit(1)).as("__bw"))
-          .filter(col("__bw") <= maxBucketWidth)
-          .select(col("band"), col("bval"))
-        allBands.join(widths, Seq("band", "bval"))
-      }
     val cand = bucketPairs(bands)
     val jacc = size(array_intersect(col("x_sh"), col("y_sh"))).cast("double") /
       size(array_distinct(concat(col("x_sh"), col("y_sh"))))
@@ -888,81 +864,40 @@ object Dedup extends QueryModule {
     * corpus), verified by exact shingle Jaccard, aggregated into the
     * per-delta-doc (n_dups, keeper, is_new) an ingest pipeline acts
     * on. When the corpus side carries the index's partition columns
-    * (`pb` on bands, `pd` on shingles), they join too and the delta
-    * side is broadcast — that is what lets Spark dynamically prune
-    * index partitions, keeping per-delta I/O proportional to the
-    * delta's bucket footprint rather than the corpus's age. */
+    * (`pb` on bands, `pd` on shingles, bucketed at `fanOuts`), they
+    * join too and the delta side is broadcast — that is what lets
+    * Spark dynamically prune index partitions, keeping per-delta I/O
+    * proportional to the delta's bucket footprint rather than the
+    * corpus's age. */
   private[pipeline] def incrementalDedup(delta: DataFrame,
       corpusBands: DataFrame, corpusShingles: DataFrame,
-      wideBuckets: Option[DataFrame] = None,
-      bandBuckets: Int = DedupIndex.bandBuckets,
-      docBuckets: Int = DedupIndex.docBuckets,
-      shingleGroups: Int = DedupIndex.bandBuckets): DataFrame = {
+      fanOuts: Option[DedupIndex.Meta] = None): DataFrame = {
     val hasPb = corpusBands.columns.contains("pb")
     val hasPd = corpusShingles.columns.contains("pd")
-    // "pb" on the SHINGLE table = the r12 colocated layout: the
-    // verification row is stored under every band bucket of the
-    // doc's bands, so the join below can carry the candidate's
-    // MATCHED band bucket and dynamic partition pruning restricts
-    // the shingle scan to the delta's band footprint (pd pruning
-    // never bites — the r11 honest negative).
-    val hasSpb = corpusShingles.columns.contains("pb")
-    require(!hasSpb || hasPb,
-      "colocated shingle layout requires a pb-partitioned band table")
-    val dBandsAll = DedupIndex.bandRows(delta)
+    require(!(hasPb || hasPd) || fanOuts.isDefined,
+      "partitioned index frames need the index's fan-outs")
+    val dBands0 = DedupIndex.bandRows(delta)
       .select(col("doc_id").as("doc_n"), col("band"), col("bval"))
-    // over-wide (boilerplate) buckets drop from the DELTA side via a
-    // broadcast anti-join — the cheapest point to prune candidates
-    val dBands0 = wideBuckets.fold(dBandsAll)(w =>
-      dBandsAll.join(w, Seq("band", "bval"), "left_anti"))
     val dBands =
       if (!hasPb) dBands0
       else broadcast(dBands0.withColumn("pb",
-        pmod(col("bval"), lit(bandBuckets))))
+        pmod(col("bval"), lit(fanOuts.get.bandBuckets))))
     val bandKeys = if (hasPb) Seq("pb", "band", "bval") else Seq("band", "bval")
-    val candRaw = dBands
+    val cand = dBands
       .join(corpusBands.select(
         (col("doc_id").as("doc_o") +: bandKeys.map(col)): _*), bandKeys)
-    // under the colocated layout each candidate keeps ONE matched
-    // band bucket (min for determinism) — any matched bucket works,
-    // because doc_o's shingle row is stored under every bucket its
-    // bands hash to, and a band match proves this bucket is one
-    val cand =
-      if (hasSpb) candRaw.groupBy(col("doc_n"), col("doc_o"))
-        .agg(min(col("pb")).as("spb"))
-      else candRaw.select(col("doc_n"), col("doc_o")).distinct()
+      .select(col("doc_n"), col("doc_o")).distinct()
     val jacc = size(array_intersect(col("x_sh"), col("y_sh"))).cast("double") /
       size(array_distinct(concat(col("x_sh"), col("y_sh"))))
     val candX = cand
       .join(DedupIndex.shingleRows(delta)
         .select(col("doc_id").as("doc_n"), col("shingles").as("x_sh")), "doc_n")
     val shKeyed =
-      // the stored shingle pb is GROUPED (pb % shingleGroups, the r13
-      // compaction dial) — map the matched band bucket the same way
-      if (hasSpb) candX.withColumn("pb",
-        pmod(col("spb"), lit(shingleGroups))).drop("spb")
-      else if (hasPd) candX.withColumn("pd", pmod(col("doc_o"), lit(docBuckets)))
+      if (hasPd) candX.withColumn("pd", pmod(col("doc_o"), lit(fanOuts.get.docBuckets)))
       else candX
-    val shKeys = if (hasSpb) Seq("doc_o", "pb")
-      else if (hasPd) Seq("doc_o", "pd") else Seq("doc_o")
-    // STATIC partition pruning for the colocated layout: the shingle
-    // probe's pb values are a subset of the DELTA's band buckets, a
-    // ≤ bandBuckets-element set — broadcast-sized control metadata,
-    // collected once (same budget class as a k-means centroid
-    // collect). A literal IN filter prunes the scan deterministically;
-    // dynamic pruning would need the probe side broadcast, which the
-    // candidate×shingle frame is not.
-    val shinglesPruned =
-      if (!hasSpb) corpusShingles
-      else {
-        val pbVals = dBands.select(col("pb").cast("int")).distinct()
-          .collect().map(_.getInt(0))
-        val groups = pbVals.map(v => ((v % shingleGroups)
-          + shingleGroups) % shingleGroups).distinct
-        corpusShingles.filter(col("pb").isin(groups.toIndexedSeq: _*))
-      }
+    val shKeys = if (hasPd) Seq("doc_o", "pd") else Seq("doc_o")
     val agg = shKeyed
-      .join(shinglesPruned.select(
+      .join(corpusShingles.select(
         (col("doc_id").as("doc_o") +: (shKeys.drop(1).map(col) :+
           col("shingles").as("y_sh"))): _*), shKeys)
       .filter(jacc >= 0.1)

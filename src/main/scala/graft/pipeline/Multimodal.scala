@@ -405,8 +405,7 @@ object Multimodal extends QueryModule {
     //      inequality (100·∩ ≥ 50·∪ — no float ratio anywhere).
     // Scale: the pair space is shared-shingle only (never all-pairs);
     // hot boilerplate shingles would widen it the way hot grams widen
-    // q54's — the q177 maxDfFrac dial is the one-liner to add at the
-    // corpus where that bites. Sizes join is doc-count-sized. -----
+    // q54's. Sizes join is doc-count-sized. -----
     q("q231_video_near_dup",
       """WITH bytes AS (
         |  SELECT doc_id, i.i AS i, ascii(substr(text, i.i, 1)) AS b
@@ -1150,22 +1149,15 @@ object Multimodal extends QueryModule {
     * scenes carry no shingles and never pair. Unordered — the query
     * sorts.
     *
-    * `maxDf` is the hot-shingle guard (the q54 maxBucketWidth / q177
-    * maxDfFrac posture): shingles appearing in more than maxDf docs
-    * are dropped from BOTH the pair join and the Jaccard sizes
-    * (rare-shingle Jaccard — consistent, deterministic,
-    * oracle-replayable), bounding the candidate space to N·maxDf
-    * where a corpus with multiplied shingle frequencies would grow
-    * it as Σdf². Default None keeps exact semantics (measured: df
-    * stays single-digit at sf0.1, Σdf² ≈ 1e8 at the 100×/z100 tier —
-    * fine; the 1000×-REPLICA regime's true pair list is Θ(dups²) by
+    * The pair space grows as Σdf² over shingles (measured: df stays
+    * single-digit at sf0.1, Σdf² ≈ 1e8 at the 100×/z100 tier — fine;
+    * the 1000×-REPLICA regime's true pair list is Θ(dups²) by
     * definition and routes to q234's cluster reduction instead —
     * PLANS.md r15). */
-  private[pipeline] def videoNearDup(docs: DataFrame,
-      maxDf: Option[Long] = None): DataFrame = {
+  private[pipeline] def videoNearDup(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val wd = Window.partitionBy(col("doc_id")).orderBy(col("scene_id"))
-    val sh0 = sceneSegments(docs)
+    val sh = sceneSegments(docs)
       .select(col("doc_id"), col("scene_id"), col("rep_sig"))
       .withColumn("s2", lead(col("rep_sig"), 1).over(wd))
       .withColumn("s3", lead(col("rep_sig"), 2).over(wd))
@@ -1173,11 +1165,6 @@ object Multimodal extends QueryModule {
       .select(col("doc_id"),
         (col("rep_sig") * 16384 + col("s2") * 128 + col("s3")).as("sh"))
       .distinct()
-    val sh = maxDf.fold(sh0) { cap =>
-      val rare = sh0.groupBy(col("sh")).agg(count(lit(1)).as("df"))
-        .filter(col("df") <= cap).select(col("sh"))
-      sh0.join(rare, "sh") // equi semi-shape; rare is shingle-count-sized
-    }
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     val inter = sh.as("a")
       .join(sh.as("b"),

@@ -566,24 +566,11 @@ object TextAnalysis extends QueryModule {
     cmsEstimates(w, sink)
   }
 
-  /** BM25 ranked retrieval (q177's operator as a facade). Exact by
-    * default; `maxDfFrac` < 1 is the approximate-pruning dial the
-    * round-10 verdict asked for (the IVF probe-count pattern): terms whose
-    * document frequency exceeds `maxDfFrac · n_docs` — the hot,
-    * near-zero-idf stopword tail whose postings lists are the skew
-    * story of any inverted index — are dropped from the QUERY-TERM
-    * side BEFORE the postings join, so a pruned term's corpus-wide
-    * postings never enter the plan at all. Because a df ≈ N term has
-    * idf ≈ 0, its contribution to every score is uniformly tiny;
-    * pruning trades that epsilon for skipping the widest postings
-    * lists (ranking changes only where scores differed by less than
-    * the dropped epsilon — the explicit recall trade, monotone in
-    * the dial). Bm25Spec pins default-off exactness against the
-    * oracle-checked registry result. */
-  def bm25TopK(s: SparkSession, dir: String, k: Int = 3,
-      maxDfFrac: Double = 1.0): DataFrame = {
+  /** BM25 ranked retrieval (q177's operator as a facade), exact.
+    * Bm25Spec pins it against the oracle-checked registry result. */
+  def bm25TopK(s: SparkSession, dir: String, k: Int = 3): DataFrame = {
     import graft.functions.TopK
-    val contrib = bm25Contrib(s, dir, maxDfFrac)
+    val contrib = bm25Contrib(s, dir)
     // r17 OPT (guide §2.3 — aggregate before you shuffle): the per-
     // (query, doc) score sums the 6-dp contributions EXACTLY, order-
     // free on both engines, instead of the pre-r17 hash-ordered double
@@ -617,10 +604,8 @@ object TextAnalysis extends QueryModule {
 
   /** The per-(query, doc, term) contribution frame bm25TopK
     * aggregates: contribution rows are the postings volume entering
-    * the score join, the deterministic work metric behind the
-    * maxDfFrac dial. */
-  private[graft] def bm25Contrib(s: SparkSession, dir: String,
-      maxDfFrac: Double): DataFrame = {
+    * the score join. */
+  private[graft] def bm25Contrib(s: SparkSession, dir: String): DataFrame = {
     // r18 OPT (guide §2.5): spread the single-split scan before the
     // explode+md5 pass — it ran as ONE task at any core count
     val h = Tables.spread(Tables.t(s, dir, "documents"), "doc_id")
@@ -685,14 +670,11 @@ object TextAnalysis extends QueryModule {
     // contribution expression below then runs one multiply + one
     // divide per row instead of a ln() per row. Same operation
     // tree per value, so results are bit-identical to the inline
-    // form the oracle uses.
-    val dfAll = corp.groupBy(col("hw")).agg(count(lit(1)).as("df"))
+    // form the oracle uses. idf_raw rides along (projection-only) so
+    // the quant-guard can measure the pre-round ln boundary on the
+    // exact expression the query rounds — the q210 psiWithP pattern
+    val df = corp.groupBy(col("hw")).agg(count(lit(1)).as("df"))
       .crossJoin(broadcast(stats))
-    // idf_raw rides along (projection-only) so the quant-guard can
-    // measure the pre-round ln boundary on the exact expression the
-    // query rounds — the q210 psiWithP pattern
-    val df = (if (maxDfFrac >= 1.0) dfAll
-      else dfAll.filter(col("df") <= lit(maxDfFrac) * col("n_docs")))
       .select(col("hw"), log((col("n_docs") - col("df") + 0.5)
         / (col("df") + 0.5) + 1).as("idf_raw"))
       .select(col("hw"), col("idf_raw"), round(col("idf_raw"), 6).as("idf"))
@@ -2149,7 +2131,7 @@ object TextAnalysis extends QueryModule {
   private[graft] def quantMargins(
       s: SparkSession, dir: String): Seq[(String, Double)] = {
     val docs = Tables.t(s, dir, "documents")
-    val contrib = bm25Contrib(s, dir, maxDfFrac = 1.0)
+    val contrib = bm25Contrib(s, dir)
     Seq(
       // the teacher sigmoid — every quality() consumer (q58 quality
       // column, q138/q208/q211/q218/q221 scoring, the q212/q213/q219

@@ -24,9 +24,8 @@ import org.apache.spark.sql.graftbridge.Bridge
 object MetricsDump {
   def main(args: Array[String]): Unit = {
     val Array(dir, name) = args.take(2)
+    val d = Registry.named(Seq(name)).head
     val spark = Session.local()
-    val d = Registry.all.find(_.name == name).getOrElse(
-      sys.error(s"unknown query $name"))
     // wall-clock attribution: one line per JOB (start offset, duration,
     // #tasks) — serial gaps between jobs are driver-side work
     val t0 = System.nanoTime()

@@ -22,6 +22,11 @@ object Bridge {
       .sessionState.functionRegistry
       .createOrReplaceTempFunction(name, builder, "scala_udf")
 
+  /** Block until every event posted so far has reached every
+    * SparkListener, so a listener's job count is exact when read. */
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+
   /** Stop every active streaming query, then unload all loaded
     * state-store providers and their maintenance thread. Benchmarks call
     * this between timed runs so one streaming query's retained providers
@@ -29,11 +34,6 @@ object Bridge {
     * in the same JVM. Providers re-load lazily on the next streaming
     * query, so this is safe mid-session.
     */
-  /** Block until every event posted so far has reached every
-    * SparkListener, so a listener's job count is exact when read. */
-  def drainListenerBus(spark: SparkSession): Unit =
-    spark.sparkContext.listenerBus.waitUntilEmpty()
-
   def resetStreamingState(spark: SparkSession): Unit = {
     spark.streams.active.foreach(_.stop())
     org.apache.spark.sql.execution.streaming.state.StateStore.stop()

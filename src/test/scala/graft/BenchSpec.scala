@@ -3,8 +3,10 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The bench list and the registry cannot drift apart silently: every
-  * headline name is registered, and Bench refuses unknown names
-  * instead of dropping them from the run (and the suite total). */
+  * headline name is registered, and every main that takes query names
+  * (Bench, Verify, Explain, MetricsDump) looks them up through
+  * `Registry.named`, which refuses unknown names instead of dropping
+  * them from the run. */
 class BenchSpec extends AnyFunSuite {
 
   test("Bench.headline is 117 distinct registered query names") {
@@ -23,5 +25,27 @@ class BenchSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("q01_pricing_sumary, q999_nope"), e.getMessage)
     assert(!e.getMessage.contains("q01_pricing_summary,"), e.getMessage)
+  }
+
+  test("Registry.named keeps the given order and refuses unknown names, listing them") {
+    val names = Seq("q13_count_distinct", "q01_pricing_summary", "q120_hll_distinct")
+    assert(Registry.named(names).map(_.name) == names)
+    val e = intercept[IllegalArgumentException] {
+      Registry.named(Seq("q01_pricing_summary", "q01_pricing_sumary", "q999_nope"))
+    }
+    assert(e.getMessage.contains("q01_pricing_sumary, q999_nope"), e.getMessage)
+    assert(!e.getMessage.contains("q01_pricing_summary,"), e.getMessage)
+  }
+
+  test("Verify, Explain and MetricsDump refuse an unregistered name before starting") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-benchspec").toString
+    for (run <- Seq[() => Unit](
+        () => Verify.main(Array("unread-sf-dir", dir, "q01_pricing_sumary")),
+        () => tools.Explain.main(Array("q01_pricing_sumary")),
+        () => tools.MetricsDump.main(Array("unread-sf-dir", "q01_pricing_sumary")))) {
+      val e = intercept[IllegalArgumentException](run())
+      assert(e.getMessage.contains("q01_pricing_sumary"), e.getMessage)
+    }
+    assert(new java.io.File(dir).list().isEmpty, "Verify wrote output for no query")
   }
 }

@@ -22,8 +22,7 @@ class ReadSurfaceSpec extends AnyFunSuite {
   /** The DedupIndex tables and the declared schema each is read with. */
   private val indexTables = Map(
     "bands" -> "bandsSchema",
-    "shingles" -> "shinglesSchema(",
-    "bucket_stats" -> "bucketStatsSchema")
+    "shingles" -> "shinglesSchema")
 
   private def sources: List[(String, Seq[(String, Int)])] = {
     val root = Paths.get("src/main/scala")

@@ -46,127 +46,26 @@ class DedupIndexSpec extends SparkSpec {
       "aged index (save + update) diverged from a full rebuild")
   }
 
-  test("colocated shingle layout: verdict identical, aging parity, rows replicated by band bucket") {
-    val delta = docs.filter(col("doc_id") % 10 === 9)
-    val corpus = docs.filter(col("doc_id") % 10 =!= 9)
-    val pd = tmp(); val pb = tmp()
-    DedupIndex.save(corpus, pd)
-    DedupIndex.save(corpus, pb, shingleLayout = "pb")
-    assert(DedupIndex.meta(pb).shingleLayout == "pb")
-    // verdict must be layout-independent: every candidate's matched
-    // band bucket holds exactly one copy of the owner's shingle row
-    val a = verdictStrings(DedupIndex.dedupDelta(spark, delta, pd))
-    val b = verdictStrings(DedupIndex.dedupDelta(spark, delta, pb))
-    assert(a.nonEmpty && a.sameElements(b),
-      "colocated layout changed the dedup verdict")
-    // replication factor = distinct band buckets per doc (≤ 4)
-    val perDoc = spark.read.parquet(s"$pb/shingles")
-      .groupBy("doc_id").count()
-      .agg(max(col("count")), min(col("count"))).head
-    assert(perDoc.getLong(0) <= 4 && perDoc.getLong(1) >= 1,
-      s"unexpected shingle replication: $perDoc")
-    // aging under the colocated layout still equals a rebuild
-    val day0 = docs.filter(col("doc_id") % 10 < 8)
-    val day1 = docs.filter(col("doc_id") % 10 === 8)
-    val aged = tmp()
-    DedupIndex.save(day0, aged, shingleLayout = "pb")
-    DedupIndex.update(day1, aged)
-    val c = verdictStrings(DedupIndex.dedupDelta(spark, delta, aged))
-    val full = tmp()
-    DedupIndex.save(docs.filter(col("doc_id") % 10 =!= 9), full,
-      shingleLayout = "pb")
-    val d = verdictStrings(DedupIndex.dedupDelta(spark, delta, full))
-    assert(c.sameElements(d),
-      "aged colocated index diverged from a colocated rebuild")
-    assert(c.sameElements(a),
-      "colocated aged verdict diverged from the pd-layout verdict")
-  }
-
-  test("shingleGroups compaction dial: verdict identical, dirs capped, meta persisted") {
-    // r12 verdict item 6: pb's pruning win paid a small-file wall
-    // cost at sandbox scale (≤ bandBuckets KB-sized dirs); grouping
-    // the physical partitioning to pb % shingleGroups trades scan
-    // granularity for file size WITHOUT touching the candidate set —
-    // the verdict must be bit-identical to pd and ungrouped pb.
-    val delta = docs.filter(col("doc_id") % 10 === 9)
-    val corpus = docs.filter(col("doc_id") % 10 =!= 9)
-    val pd = tmp(); val pbg = tmp()
-    DedupIndex.save(corpus, pd)
-    DedupIndex.save(corpus, pbg, shingleLayout = "pb", shingleGroups = 8)
-    // r17: default fan-outs auto-derive from the corpus size (the
-    // spec fixture is < 8000 docs, so both clamp to the floor of 8)
-    assert(DedupIndex.meta(pbg) == DedupIndex.Meta(8, 8, "pb", 8))
-    val a = verdictStrings(DedupIndex.dedupDelta(spark, delta, pd))
-    val b = verdictStrings(DedupIndex.dedupDelta(spark, delta, pbg))
-    assert(a.nonEmpty && a.sameElements(b),
-      "grouped colocated layout changed the dedup verdict")
-    // physical layout: at most 8 partition directories
-    val dirs = new java.io.File(s"$pbg/shingles").listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("pb="))
-    assert(dirs.nonEmpty && dirs.length <= 8,
-      s"expected <= 8 grouped shingle dirs, found ${dirs.length}")
-    // aging parity under the grouped layout
-    val day0 = docs.filter(col("doc_id") % 10 < 8)
-    val day1 = docs.filter(col("doc_id") % 10 === 8)
-    val aged = tmp()
-    DedupIndex.save(day0, aged, shingleLayout = "pb", shingleGroups = 8)
-    DedupIndex.update(day1, aged)
-    val c = verdictStrings(DedupIndex.dedupDelta(spark, delta, aged))
-    val full = tmp()
-    DedupIndex.save(docs.filter(col("doc_id") % 10 =!= 9), full,
-      shingleLayout = "pb", shingleGroups = 8)
-    val d = verdictStrings(DedupIndex.dedupDelta(spark, delta, full))
-    assert(c.sameElements(d) && c.sameElements(a),
-      "aged grouped index diverged from rebuild or from pd verdict")
-  }
-
-  test("bucket-width safety valve: stats persist additively, capping only drops wide buckets") {
-    val day0 = docs.filter(col("doc_id") % 10 < 8)
-    val day1 = docs.filter(col("doc_id") % 10 === 8)
-    val delta = docs.filter(col("doc_id") % 10 === 9)
-    val path = tmp()
-    DedupIndex.save(day0, path)
-    DedupIndex.update(day1, path)
-    // the summed bucket stats must equal a direct recount of the
-    // aged index (appends are additive partial counts)
-    val statSum = spark.read.parquet(s"$path/bucket_stats")
-      .groupBy(col("band"), col("bval")).agg(sum(col("n")).as("w"))
-    val direct = spark.read.parquet(s"$path/bands")
-      .groupBy(col("band"), col("bval")).agg(count(lit(1)).as("w"))
-    assert(statSum.join(direct, Seq("band", "bval"))
-      .filter(statSum("w") =!= direct("w")).isEmpty,
-      "persisted bucket stats diverge from the index contents")
-    assert(statSum.count() == direct.count())
-    // an effectively-infinite cap is exact (hash-equal to uncapped)
-    val uncapped = verdictStrings(DedupIndex.dedupDelta(spark, delta, path))
-    val bigCap = verdictStrings(
-      DedupIndex.dedupDelta(spark, delta, path, maxBucketWidth = 1000000))
-    assert(uncapped.sameElements(bigCap), "a non-binding cap changed results")
-    // a binding cap only REMOVES matches (recall trade), never adds,
-    // and every delta doc still gets a verdict row
-    val capped = DedupIndex.dedupDelta(spark, delta, path, maxBucketWidth = 1)
-    assert(capped.count() == uncapped.length.toLong)
-    val capDups = capped.agg(sum(col("n_dups"))).head.getLong(0)
-    val unDupsTotal = DedupIndex.dedupDelta(spark, delta, path)
-      .agg(sum(col("n_dups"))).head.getLong(0)
-    assert(capDups <= unDupsTotal, "capping must never create matches")
-  }
-
   test("fan-outs are a property of the index: persisted, read back, loud when absent") {
     val delta = docs.filter(col("doc_id") % 10 === 9)
     val corpus = docs.filter(col("doc_id") % 10 =!= 9)
     val reference = verdictStrings(Dedup.incrementalDedup(delta,
       DedupIndex.bandRows(corpus), DedupIndex.shingleRows(corpus)))
-    // custom fan-outs round-trip through the metadata file, and the
-    // verdict is layout-independent (same hash at any fan-out)
+    // the derived fan-outs round-trip through the metadata file, and
+    // the verdict is layout-independent (same hash at any fan-out)
     val path = tmp()
-    DedupIndex.save(corpus, path, bandBuckets = 32, docBuckets = 8)
-    assert(DedupIndex.meta(path) == DedupIndex.Meta(32, 8))
+    DedupIndex.save(corpus, path)
+    val persisted = DedupIndex.loadProps(path, "index_meta.properties").get
+    val m = DedupIndex.meta(path)
+    assert(persisted.getProperty("bandBuckets") == m.bandBuckets.toString &&
+      persisted.getProperty("docBuckets") == m.docBuckets.toString,
+      s"read-back $m differs from the persisted $persisted")
     assert(verdictStrings(DedupIndex.dedupDelta(spark, delta, path))
-      .sameElements(reference), "custom fan-out changed the verdict")
-    // update() must use the PERSISTED layout, not the defaults: after
-    // an append the aged index still answers identically
+      .sameElements(reference), "persisted fan-out changed the verdict")
+    // update() must use the PERSISTED layout: after an append the aged
+    // index keeps its fan-outs and still answers identically
     DedupIndex.update(delta.limit(0), path) // no-op append exercises the path
+    assert(DedupIndex.meta(path) == m)
     assert(verdictStrings(DedupIndex.dedupDelta(spark, delta, path))
       .sameElements(reference))
     // an index without metadata fails loudly instead of guessing
@@ -190,39 +89,72 @@ class DedupIndexSpec extends SparkSpec {
       s"index scan carries no dynamic partition pruning filter:\n$p")
   }
 
-  test("r17 auto fan-out: derived from corpus size, explicit override kept, " +
-      "verdict fan-out-independent") {
+  test("auto fan-out: derived from corpus size, verdict fan-out-independent") {
     val delta = docs.filter(col("doc_id") % 10 === 9)
     val corpus = docs.filter(col("doc_id") % 10 =!= 9)
-    val auto = tmp(); val explicit = tmp()
+    val auto = tmp()
     DedupIndex.save(corpus, auto)
     val n = corpus.count()
     val m = DedupIndex.meta(auto)
     assert(m.bandBuckets == math.min(4096L, math.max(8L, n / 1000)).toInt &&
       m.docBuckets == math.min(1024L, math.max(8L, n / 4000)).toInt,
       s"auto fan-out ${m.bandBuckets}/${m.docBuckets} does not track n=$n")
-    DedupIndex.save(corpus, explicit, bandBuckets = 32, docBuckets = 16)
-    assert(DedupIndex.meta(explicit).bandBuckets == 32 &&
-      DedupIndex.meta(explicit).docBuckets == 16,
-      "explicit fan-out override not persisted")
-    val a = verdictStrings(DedupIndex.dedupDelta(spark, delta, auto))
-    val b = verdictStrings(DedupIndex.dedupDelta(spark, delta, explicit))
+    // index-shaped frames (partition columns bucketed at a fan-out)
+    // give the same verdict at any fan-out, and the same as the saved
+    // index and the unpartitioned recompute
+    def atFanOut(f: DedupIndex.Meta) = verdictStrings(Dedup.incrementalDedup(delta,
+      DedupIndex.bandRows(corpus)
+        .withColumn("pb", pmod(col("bval"), lit(f.bandBuckets))),
+      DedupIndex.shingleRows(corpus)
+        .withColumn("pd", pmod(col("doc_id"), lit(f.docBuckets))),
+      Some(f)))
+    val a = atFanOut(DedupIndex.Meta(32, 16))
+    val b = atFanOut(DedupIndex.Meta(8, 8))
     assert(a.nonEmpty && a.sameElements(b),
       "dedup verdict depends on the index fan-out")
+    assert(a.sameElements(verdictStrings(DedupIndex.dedupDelta(spark, delta, auto))))
+    assert(a.sameElements(verdictStrings(Dedup.incrementalDedup(delta,
+      DedupIndex.bandRows(corpus), DedupIndex.shingleRows(corpus)))))
   }
 
   test("open reads the declared schemas: no Spark job, and each equals Spark's inference") {
-    val corpus = docs.filter(col("doc_id") % 10 =!= 9)
-    for (layout <- Seq("pd", "pb")) {
-      val path = tmp()
-      DedupIndex.save(corpus, path, shingleLayout = layout)
-      val (idx, jobs) = jobsDuring(DedupIndex.open(spark, path))
-      assert(jobs == 0, s"$layout: open started $jobs jobs")
-      val declared = Seq("bands" -> idx.bands, "shingles" -> idx.shingles,
-        "bucket_stats" -> idx.bucketStats)
-      for ((table, df) <- declared)
-        assert(df.schema == spark.read.parquet(s"$path/$table").schema,
-          s"$layout $table: declared ${df.schema} is not what Spark infers")
+    val path = tmp()
+    DedupIndex.save(docs.filter(col("doc_id") % 10 =!= 9), path)
+    val (idx, jobs) = jobsDuring(DedupIndex.open(spark, path))
+    assert(jobs == 0, s"open started $jobs jobs")
+    for ((table, df) <- Seq("bands" -> idx.bands, "shingles" -> idx.shingles))
+      assert(df.schema == spark.read.parquet(s"$path/$table").schema,
+        s"$table: declared ${df.schema} is not what Spark infers")
+  }
+
+  test("one layout: the index holds bands, shingles and two sidecars; meta refuses other layouts") {
+    import spark.implicits._
+    val path = tmp()
+    DedupIndex.save(docs.filter(col("doc_id") % 10 < 8), path)
+    DedupIndex.update(docs.filter(col("doc_id") % 10 === 8), path)
+    val url = "jdbc:derby:memory:graftlayout;create=true"
+    val props = new java.util.Properties
+    props.setProperty("driver", "org.apache.derby.jdbc.EmbeddedDriver")
+    Seq((900001L, "a freshly admitted doc with several words", 0L))
+      .toDF("doc_id", "text", "batch_id")
+      .write.mode("append").jdbc(url, "LAYOUT_ADMITTED", props)
+    DedupIndex.commitAdmitted(spark, path, url, "LAYOUT_ADMITTED", props)
+    // hidden entries are the local file system's checksums
+    val entries = new java.io.File(path).listFiles().map(_.getName)
+      .filterNot(_.startsWith(".")).toSet
+    assert(entries == Set("bands", "shingles", "index_meta.properties",
+      "commit_watermark.properties"), s"index entries: $entries")
+    // metadata is input from disk: a layout key the index does not
+    // write (an index in another layout) is refused, not ignored
+    val fanOuts = Map("bandBuckets" -> "8", "docBuckets" -> "8")
+    for (extra <- Seq("shingleLayout" -> "pd", "shingleLayout" -> "pb",
+        "shingleGroups" -> "8")) {
+      val other = tmp()
+      DedupIndex.storeProps(other, "index_meta.properties", fanOuts + extra, "spec")
+      intercept[IllegalStateException](DedupIndex.meta(other))
     }
+    val plain = tmp()
+    DedupIndex.storeProps(plain, "index_meta.properties", fanOuts, "spec")
+    assert(DedupIndex.meta(plain) == DedupIndex.Meta(8, 8))
   }
 }

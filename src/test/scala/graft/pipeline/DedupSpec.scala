@@ -3,12 +3,12 @@ package graft.pipeline
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** LSH bucket-width cap: degenerate (boilerplate) buckets drop out of
-  * the candidate join; the default keeps exact semantics. */
+/** The LSH pair pipeline, the streaming dedup horizons and the
+  * cluster-representative choices. */
 class DedupSpec extends SparkSpec {
   import spark.implicits._
 
-  test("maxBucketWidth drops degenerate buckets, default keeps them") {
+  test("LSH pairs keep degenerate buckets: boilerplate docs all pair") {
     // 6 identical boilerplate docs (one giant bucket per band) plus a
     // genuine near-dup pair
     val boiler = (0 until 6).map(i => (100L + i, "alpha beta gamma delta epsilon"))
@@ -20,11 +20,6 @@ class DedupSpec extends SparkSpec {
       .select(col("doc_a"), col("doc_b")).as[(Long, Long)].collect().toSet
     // all boilerplate pairs (15) + the genuine pair
     assert(exact((1L, 2L)) && exact.count(p => p._1 >= 100) == 15)
-
-    val capped = Dedup.lshVerifiedPairs(docs, maxBucketWidth = 4)
-      .select(col("doc_a"), col("doc_b")).as[(Long, Long)].collect().toSet
-    // the 6-wide boilerplate buckets are dropped; the real pair stays
-    assert(capped == Set((1L, 2L)))
   }
 
   test("hashed-shingle verify (r17) is certificate-exact vs the string plan on the real corpus") {
@@ -33,8 +28,7 @@ class DedupSpec extends SparkSpec {
       .select(col("doc_a"), col("doc_b"), round(col("jacc"), 9).as("j"))
       .as[(Long, Long, Double)].collect().toSet
     val hashed = norm(Dedup.lshVerifiedPairs(docs))
-    val strings = norm(Dedup.lshVerifiedPairs(docs,
-      maxBucketWidth = Int.MaxValue, forceStringVerify = true))
+    val strings = norm(Dedup.lshVerifiedPairs(docs, forceStringVerify = true))
     assert(hashed.nonEmpty, "no pairs at this sf — spec lost its teeth")
     assert(hashed == strings,
       s"hashed verify diverged: missing=${(strings -- hashed).take(5)}, " +

@@ -92,7 +92,7 @@ class ExactSumSpec extends SparkSpec {
 
   test("q177 registry output is identical under fold, decimal and micros sums") {
     import graft.functions.TopK
-    val contrib = TextAnalysis.bm25Contrib(spark, sf, 1.0).localCheckpoint()
+    val contrib = TextAnalysis.bm25Contrib(spark, sf).localCheckpoint()
     def finish(scored: org.apache.spark.sql.DataFrame) = scored
       .groupBy(col("query_id"))
       .agg(TopK.topK(3)(round(col("score"), 4), col("doc_id")).as("top"))

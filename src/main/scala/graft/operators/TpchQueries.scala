@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, QueryModule, Tables}
+import graft.functions.Hll
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -32,22 +33,41 @@ object TpchQueries extends QueryModule {
   private def vol: Column = dec(col("l_extendedprice")) * dec(lit(1) - col("l_discount"))
 
   /** q120's per-flag (exact_parts, approx_parts): count(DISTINCT
-    * l_partkey) and its HLL++ sketch at rsd 0.02.
+    * l_partkey) and its HLL++ estimate at rsd 0.02.
     *
     * De-duplicates (l_returnflag, l_partkey) first, then counts and
-    * sketches per flag. Mixing countDistinct with the sketch in one
-    * aggregate makes Spark's one-distinct plan carry an HLL++ buffer
-    * (4096 registers) through the per-(flag, part) aggregation: one
-    * buffer per distinct pair instead of one per flag. The registers
-    * are the per-bucket maximum over the inserted values, a function
-    * of the set of values (Heule et al., EDBT'13), so inserting each
-    * value once gives the same sketch. NULL keys drop out of both
-    * counts either way. */
+    * sketches per flag, so the sketch sees one row per distinct pair
+    * and keeps one buffer per flag. The registers are the per-bucket
+    * maximum over the inserted values, a function of the set of values
+    * (Heule et al., EDBT'13), so inserting each value once gives the
+    * same sketch. `Hll.approxCountDistinct` keeps those registers in
+    * one object buffer and gives Spark's HLL++ estimate exactly. NULL
+    * keys drop out of both counts. */
   private[graft] def partCounts(lineitem: DataFrame): DataFrame =
     lineitem.select(col("l_returnflag"), col("l_partkey")).distinct()
       .groupBy(col("l_returnflag"))
       .agg(count(col("l_partkey")).as("exact_parts"),
-        approx_count_distinct(col("l_partkey"), 0.02).as("approx_parts"))
+        Hll.approxCountDistinct(col("l_partkey"), 0.02).as("approx_parts"))
+
+  /** q117's orders with more than one distinct supplier and exactly one
+    * distinct supplier among their R-flagged rows: (l_orderkey,
+    * r_suppkey, nr_rows). NULL suppliers count in neither set, as
+    * `collect_set` skips them; nr_rows counts every R row. min ≠ max
+    * holds exactly when a set has two or more members and min = max
+    * exactly when it has one, so plain min/max aggregates stand in for
+    * the sets. */
+  private[graft] def waitingOrders(lineitem: DataFrame): DataFrame = {
+    val rSupp = when(col("is_r"), col("l_suppkey"))
+    lineitem
+      .select(col("l_orderkey"), col("l_suppkey"), (col("l_returnflag") === "R").as("is_r"))
+      .groupBy(col("l_orderkey"))
+      .agg(
+        min(col("l_suppkey")).as("min_supp"), max(col("l_suppkey")).as("max_supp"),
+        min(rSupp).as("r_suppkey"), max(rSupp).as("max_r_supp"),
+        count(when(col("is_r"), 1)).as("nr_rows"))
+      .filter(col("min_supp") =!= col("max_supp") && col("r_suppkey") === col("max_r_supp"))
+      .select(col("l_orderkey"), col("r_suppkey"), col("nr_rows"))
+  }
 
   override def queries: Seq[QueryDef] = Seq(
 
@@ -417,21 +437,11 @@ object TpchQueries extends QueryModule {
         |                    AND l3.l_suppkey <> l1.l_suppkey
         |                    AND l3.l_returnflag = 'R')
         |GROUP BY s_name ORDER BY numwait DESC, s_name""") { (s, dir) =>
-      // Single shuffle on l_orderkey: distinct-supplier sets ride as
-      // collect_set partial-agg state (orders have ≤7 lineitems, so the
-      // sets are tiny) — no Expand, no second aggregate exchange.
-      val isR = col("l_returnflag") === "R"
-      val perOrder = Tables.t(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_suppkey"), isR.as("is_r"))
-        .groupBy(col("l_orderkey"))
-        .agg(
-          collect_set(col("l_suppkey")).as("supps"),
-          collect_set(when(col("is_r"), col("l_suppkey"))).as("rsupps"),
-          count(when(col("is_r"), 1)).as("nr_rows"))
-        .filter(size(col("supps")) > 1 && size(col("rsupps")) === 1)
-        .select(col("l_orderkey"), element_at(col("rsupps"), 1).as("r_suppkey"),
-          col("nr_rows"))
-      perOrder
+      // Single shuffle on l_orderkey: the supplier tests are min/max
+      // aggregates, so the partial aggregate is a codegen'd hash
+      // aggregate of five fixed-width columns — no Expand, no second
+      // aggregate exchange.
+      waitingOrders(Tables.t(s, dir, "lineitem"))
         .join(Tables.t(s, dir, "orders").filter(col("o_orderstatus") === "F")
             .select(col("o_orderkey")),
           col("o_orderkey") === col("l_orderkey"), "left_semi")

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.{QueryDef, QueryModule, Tables}
+import graft.functions.Hll
 import graft.pipeline.Dedup
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
@@ -27,6 +28,14 @@ object StreamQueries extends QueryModule {
 
   private val H6 = 6 * 3600 * 1000L  // 6h in ms
   private val H2 = 2 * 3600 * 1000L
+
+  /** q45's continuous aggregate per event_type: row count, exact
+    * decimal value sum and the HLL++ user estimate at rsd 0.05. */
+  private[graft] def eventTypeAgg(events: DataFrame): DataFrame =
+    events.groupBy(col("event_type"))
+      .agg(count(lit(1)).as("n"),
+        moneyOut(sum(col("value").cast(DecimalType(18, 4)))).as("sum_value"),
+        Hll.approxCountDistinct(col("user_id"), 0.05).as("n_users_approx"))
 
   override def queries: Seq[QueryDef] = Seq(
 
@@ -202,11 +211,7 @@ object StreamQueries extends QueryModule {
         |  count(DISTINCT user_id) AS n_users
         |FROM events GROUP BY event_type
         |ORDER BY event_type""") { (s, dir) =>
-      val agg = Tables.stream(s, dir, "events")
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          moneyOut(sum(col("value").cast(DecimalType(18, 4)))).as("sum_value"),
-          approx_count_distinct(col("user_id")).as("n_users_approx"))
+      val agg = eventTypeAgg(Tables.stream(s, dir, "events"))
       // exact count(distinct) is unsupported on streams; run approx in
       // the stream (scale path) and recompute exact on the final state
       // micro-table for oracle parity

@@ -65,6 +65,20 @@ class ConfigSurfaceSpec extends AnyFunSuite {
       s"absolute paths in src/main: ${unexpected.mkString(", ")}")
   }
 
+  test("src/main sketches distinct counts only through the Hll kernel") {
+    // Spark's HLL++ aggregate runs outside whole-stage codegen on a
+    // ~410-column buffer; Hll.approxCountDistinct gives its estimate
+    val root = Paths.get("src/main/scala")
+    val sources = Using.resource(Files.walk(root))(
+      _.iterator().asScala.filter(_.toString.endsWith(".scala")).toList)
+    val hits = for {
+      f <- sources
+      (line, n) <- Files.readAllLines(f).asScala.zipWithIndex
+      if line.contains("approx_count_distinct(")
+    } yield s"${root.relativize(f)}:${n + 1}"
+    assert(hits.isEmpty, s"approx_count_distinct( in src/main: ${hits.mkString(", ")}")
+  }
+
   test("no registered oracle is a deliberate SELECT error(...)") {
     val failing = Registry.all.collect {
       case QueryDef(n, Some(sql), _) if sql.trim.toUpperCase.startsWith("SELECT ERROR(") => n
